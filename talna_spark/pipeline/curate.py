@@ -10,20 +10,31 @@ Verdict precedence (first failure wins, cheapest signals first):
 with the kept docs carrying their train/val/test split.
 
 Every stage reuses the verified operators' own expressions/SQL
-(pipeline.text.quality_parts, pipeline.decontam.contaminated_against,
+(pipeline.text.quality_parts, pipeline.decontam's shingle hashes,
 pipeline.sampling's bucket), and the DuckDB twin composes the SAME
 generated SQL pieces, so the composition cannot drift from its parts.
 
-Plan shape — ONE parquet read of the corpus: the (doc_id, text)
-projection is materialized behind a lazy localCheckpoint and every
-stage branches off it (quality + split are computed inline map-side;
-dedup is one hash aggregate over md5(text) built map-side; the eval
-slice and the contamination semi-join read the same checkpoint).
-Catalyst does not merge separate scans, so the naive composition read
-the 100 TB corpus ~4x — the checkpoint trades one materialized id+text
-projection (executor-local storage, same lineage-truncation pattern as
-LSH/connected-components) for 3 repeat scans. Nothing shuffles document
-text: every join and aggregate carries ids/hashes only.
+Plan shape — ONE parquet read and ONE tokenization of the corpus: the
+(doc_id, text, _w) projection, ``_w`` being ``tokens(text)``, is
+materialized behind a single lazy localCheckpoint and every stage
+branches off it. Quality and split are computed inline map-side, the
+quality score reading ``_w`` (quality_parts(words=...), bit-identical
+to re-splitting text); dedup is one window over the map-side
+md5(text) — min(doc_id) per text marks the canonical row, so the
+scored rows themselves carry the flag through the one shuffle and no
+survivor set is joined back; both gram sides of the contamination
+check (corpus and eval slice) read ``_w`` from the same checkpoint, so
+no stage re-reads the parquet or re-splits the text. Contamination is
+needed here only as existence: the corpus gram hashes left-semi-join
+the broadcast eval hashes (duplicates on the build side are harmless,
+so the eval side is not de-duplicated first) and ``doc_id IN`` the
+surviving ids plans as an ExistenceJoin, which needs no distinct over
+them. Catalyst does not merge separate scans, so the naive composition
+read the 100 TB corpus ~4x — the checkpoint trades one materialized
+id+text+tokens projection (executor-local storage, same
+lineage-truncation pattern as LSH/connected-components) for the repeat
+scans and splits. Nothing shuffles document text: every join and
+aggregate carries ids/hashes only.
 
 Dedup canonicalization runs over the EVAL-FILTERED corpus: the
 canonical survivor of a text is its lowest non-eval doc_id, so a text
@@ -36,13 +47,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from talna_spark.pipeline.decontam import (
     EVAL_MOD,
     SHINGLE_K,
-    contaminated_against,
+    _shingle_hashes,
     contamination_scan_sql,
 )
+from talna_spark.pipeline.portable import tokens
 from talna_spark.pipeline.sampling import TRAIN_PCT, VAL_PCT, _bucket
 from talna_spark.pipeline.text import quality_parts, quality_sql
 
@@ -108,12 +121,14 @@ def curate(
         spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", "text"
         )
+    ).select(
+        "doc_id", "text", tokens(F.col("text")).alias("_w")
     ).localCheckpoint(eager=False)
     # eval-slice docs are the benchmark itself — excluded from curation
     corpus = base.filter(F.col("doc_id") % EVAL_MOD != 0)
     ev = base.filter(F.col("doc_id") % EVAL_MOD == 0)
 
-    *_rest, score = quality_parts()
+    *_rest, score = quality_parts(words=F.col("_w"))
     b = _bucket(F.col("doc_id"))
     split = (
         F.when(b < TRAIN_PCT, F.lit("train"))
@@ -122,11 +137,18 @@ def curate(
     )
     # quality + split (+ the optional script verdict) inline on the
     # scan: text is consumed map-side and pruned before any shuffle —
-    # scored rows are id-sized
+    # scored rows are id-sized. Exact-dedup survivors over the
+    # eval-filtered corpus: a row is canonical when its doc_id is the
+    # least of its md5(text) partition — one shuffle of those id-sized
+    # rows, keyed by the map-side md5 (doc_id is the documents' key)
     inline = [
         F.col("doc_id"),
         F.round(score, 6).alias("quality"),
         split.alias("_split"),
+        (
+            F.min("doc_id").over(Window.partitionBy(F.md5("text")))
+            == F.col("doc_id")
+        ).alias("_canon"),
     ]
     if keep_scripts is not None:
         from talna_spark.pipeline.text import script_parts
@@ -134,21 +156,19 @@ def curate(
         script, _best, _total = script_parts()
         inline.append(script.alias("_script"))
     scored = corpus.select(*inline)
-    # exact-dedup survivors over the eval-filtered corpus: md5 computed
-    # map-side, the aggregate shuffles (hash, id) partials only
-    keep = (
-        corpus.groupBy(F.md5("text").alias("_h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", F.lit(True).alias("_canon"))
+    # existence only (n_hits is never read): the doc_ids whose hashes
+    # semi-join the broadcast eval hashes; the build side tolerates
+    # duplicate hashes and the IN test below tolerates duplicate ids
+    contam_ids = (
+        _shingle_hashes(corpus, SHINGLE_K)
+        .join(F.broadcast(_shingle_hashes(ev, SHINGLE_K)), "h", "left_semi")
+        .select("doc_id")
     )
-    contam = contaminated_against(corpus, ev, SHINGLE_K).select(
-        "doc_id", F.lit(True).alias("_hit")
-    )
-    # no broadcast hints: the survivor set is corpus-sized (one row per
-    # distinct text) and must shuffle-join on doc_id at scale; the
-    # contamination set is usually tiny and AQE will broadcast it on its
-    # own when it is
-    out = scored.join(keep, "doc_id", "left").join(contam, "doc_id", "left")
+    # the IN subquery plans as an ExistenceJoin: a boolean per scored
+    # row, so the ids need no distinct. No broadcast hint: the
+    # contamination set is usually tiny and AQE broadcasts it on its own
+    # when it is
+    out = scored.withColumn("_hit", F.col("doc_id").isin(contam_ids))
     clf_fail = F.lit(False)
     if clf_weights is not None:
         from talna_spark.pipeline.classifier import score_documents
@@ -185,8 +205,8 @@ def curate(
         .when(clf_fail, F.lit("classifier_reject"))
         .when(script_fail, F.lit("script_filtered"))
         .when(lang_fail, F.lit("language_filtered"))
-        .when(F.col("_canon").isNull(), F.lit("duplicate"))
-        .when(F.col("_hit").isNotNull(), F.lit("contaminated"))
+        .when(~F.col("_canon"), F.lit("duplicate"))
+        .when(F.col("_hit"), F.lit("contaminated"))
         .otherwise(F.lit("kept"))
     )
     return out.select(

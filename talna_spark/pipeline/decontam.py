@@ -5,9 +5,9 @@ training pipeline runs so test sets don't leak into training data
 5 here to fit the synthetic corpus's ~60-token documents).
 
 Scale shape:
-1. the eval set is tiny by definition — its distinct shingle hashes
-   broadcast to every executor;
-2. the corpus side explodes each document's distinct shingles to 60-bit
+1. the eval set is tiny by definition — its shingle hashes broadcast
+   to every executor;
+2. the corpus side explodes each document's word k-grams to 60-bit
    hashes (pipeline.portable.hash64 — cross-engine portable) and
    broadcast-joins them against the eval hashes: map-side semi-join,
    the only shuffle is the per-document hit-count aggregation over the
@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from talna_spark.pipeline.portable import (
+    grams,
     hash64,
     hash64_sql,
-    shingles,
     shingles_sql,
     tokens,
     tokens_sql,
@@ -38,15 +38,23 @@ SHINGLE_K = 5
 
 
 def _shingle_hashes(docs: DataFrame, k: int) -> DataFrame:
-    # tokens materialized first: shingles' slice lambda captures the
-    # words expression, so the inline form re-ran the split per shingle
-    # (r12, the dedup._tokenized rule)
-    from talna_spark.pipeline.dedup import _tokenized
+    """(doc_id, h) per word k-gram occurrence. ``docs``: (doc_id, text),
+    or a frame that already carries the token array ``_w`` (read as is —
+    the caller's checkpoint holds it). Every consumer asks only whether
+    a hash matches, or counts DISTINCT matching hashes, so the grams are
+    not de-duplicated and sorted per document the way
+    pipeline.portable.shingles does: same answers, no per-document
+    array_sort with its interpreted comparator."""
+    if "_w" not in docs.columns:
+        # tokens materialized first: the grams' slice lambda captures
+        # the words expression, so the inline form re-ran the split per
+        # gram (r12, the dedup._tokenized rule)
+        from talna_spark.pipeline.dedup import _tokenized
 
-    dw = _tokenized(docs, tokens(F.col("text")))
-    return dw.select(
+        docs = _tokenized(docs, tokens(F.col("text")))
+    return docs.select(
         "doc_id",
-        F.explode(shingles(F.col("_w"), k)).alias("_s"),
+        F.explode(grams(F.col("_w"), k)).alias("_s"),
     ).select("doc_id", hash64(F.col("_s")).alias("h"))
 
 

@@ -1305,10 +1305,19 @@ def bloom_merge(*bitmaps: DataFrame) -> DataFrame:
 def bloom_to_words(bm: DataFrame, m: int = BLOOM_BITS) -> list[int]:
     """Collect a bitmap to the dense m/64-long word list (the broadcast
     form for the literal membership path). Model-sized by contract —
-    callers above BLOOM_LITERAL_WORDS use the join path instead."""
+    callers above BLOOM_LITERAL_WORDS use the join path instead. A
+    bitmap built with a larger m than ``m`` has words past the end of
+    the list and fails with a ValueError naming both sizes."""
     words = [0] * (int(m) // 64)
     for r in bm.collect():
-        words[int(r["word_idx"])] = int(r["bits"])
+        i = int(r["word_idx"])
+        if not 0 <= i < len(words):
+            raise ValueError(
+                f"bitmap word {i} needs m >= {(i + 1) * 64} bits, but m = "
+                f"{int(m)} ({len(words)} words) was passed — build and "
+                "probe the bitmap with the same m"
+            )
+        words[i] = int(r["bits"])
     return words
 
 
@@ -1437,34 +1446,42 @@ def bloom_prefilter(
     return d.join(hits, [id_col, col])
 
 
-def _exact_flags_bloom(
+def _bloom_dup_hashes(
     new_hashes: DataFrame,
     ref_hashes_raw: DataFrame,
     bm: DataFrame,
     m: int,
     k: int = BLOOM_K,
+    words: "list[int] | None" = None,
 ) -> DataFrame:
-    """(doc_id, _exact=True) for new docs whose hash is in the
-    reference set, verified through a Bloom bitmap with ZERO ref-side
-    shuffle (r13): the gate runs map-side over new; the candidate hash
-    set (true dups + fp — small by the bitmap's sizing contract)
-    BROADCASTS into a semi-join that streams the RAW ref hashes
-    map-side (no distinct — the matching-occurrence dedup happens in
-    the candidate-keyed aggregation, whose exchange is bounded by
-    tasks x |candidates|, not by ref multiplicity); the surviving dup
-    hashes broadcast back over new. Identical verdicts to the plain
-    join (the equality tests pin it)."""
-    cand = bloom_prefilter(new_hashes, "_h", bm, m=int(m), k=int(k))
-    cand_hashes = cand.select("_h").distinct()
-    dup_hashes = (
-        ref_hashes_raw.join(F.broadcast(cand_hashes), "_h", "left_semi")
-        .distinct()
-    )
-    return (
-        new_hashes.join(F.broadcast(dup_hashes), "_h", "left_semi")
-        .select("doc_id", F.lit(True).alias("_exact"))
-        .distinct()
-    )
+    """(_h): the distinct new-batch text hashes present in the reference
+    set, verified through a Bloom bitmap with ZERO ref-side shuffle
+    (r13). The gate runs map-side over new — the literal expression
+    over ``words`` when the caller already collected the bitmap, else
+    :func:`bloom_prefilter`. The candidate hashes (true dups + fp, small
+    by the bitmap's sizing contract) BROADCAST as they are, duplicates
+    included (a semi-join build side tolerates them), into a semi-join
+    that streams the RAW ref hashes map-side. The one aggregate is the
+    distinct over the matched ref rows, keyed by candidate hash, so its
+    exchange is bounded by tasks x |candidates|, not by how often a
+    reference text repeats. Callers broadcast the result back over the
+    new hashes.
+
+    Catalyst's InferFiltersFromConstraints copies the gate through the
+    ``_h`` equi-join onto the reference scan (a Filter plus a parquet
+    DataFilter evaluating the k probes per reference row). It rejects
+    nothing — every reference hash is a bitmap member by construction —
+    and is left in place: blocking it would take a barrier such as a
+    checkpoint of the candidates."""
+    if words is None:
+        cand = bloom_prefilter(new_hashes, "_h", bm, m=int(m), k=int(k))
+    else:
+        cand = new_hashes.filter(
+            bloom_might_contain(F.col("_h"), words, int(m), int(k))
+        )
+    return ref_hashes_raw.join(
+        F.broadcast(cand.select("_h")), "_h", "left_semi"
+    ).distinct()
 
 
 BLOOM_MAX_FP = 0.5  # useless-filter guard: fp above this means resize m
@@ -1563,6 +1580,14 @@ def bloom_fp_estimate(bm: DataFrame, m: int, k: int = BLOOM_K) -> float:
     return (int(row["s"]) / int(m)) ** int(k)
 
 
+def _words_fp(words: list[int], m: int, k: int) -> float:
+    """:func:`bloom_fp_estimate` over an already-collected word list —
+    the same popcount (two's-complement words, so bit 63 counts) and
+    the same float expression."""
+    s = sum((w & 0xFFFFFFFFFFFFFFFF).bit_count() for w in words)
+    return (s / int(m)) ** int(k)
+
+
 def exact_dedup_against_bloom(
     new_d: DataFrame,
     ref_d: DataFrame,
@@ -1577,20 +1602,33 @@ def exact_dedup_against_bloom(
     every incoming batch pays only its own map-side gate plus
     candidate-sized broadcasts; the reference is re-SCANNED (map-side,
     no shuffle) only to verify candidates. Returns (doc_id, exact_dup
-    boolean) for every new doc. One-shot callers should NOT take this
-    path — see the crossover note on :func:`dedup_against_frames`.
+    boolean), one row per distinct new doc_id (a doc_id carrying several
+    texts is a dup if any of them is). One-shot callers should NOT take
+    this path — see the crossover note on :func:`dedup_against_frames`.
 
     A SATURATED bitmap fails loudly (r13, the lc-saturation
     discipline): above ``max_fp`` expected false positives the gate
     passes ~everything and the 'candidates are small' contract behind
-    the broadcasts is gone — the check is one sketch-sized popcount,
-    and ``max_fp=1.0`` opts out for deliberately degraded use.
-    ``max_fp`` is a useless-filter backstop, NOT the sizing rule: the
-    candidate broadcast is ~(true dups + fp x batch rows), so size m
-    for fp x batch << the executor broadcast budget — at a 1B-doc
-    batch even fp = 0.1 broadcasts 100M rows; ~10 bits/ref value gives
-    ~1% fp at k=4 and is the production default."""
-    fp = bloom_fp_estimate(bm, m, k)
+    the broadcasts is gone — ``max_fp=1.0`` opts out for deliberately
+    degraded use. ``max_fp`` is a useless-filter backstop, NOT the
+    sizing rule: the candidate broadcast is ~(true dups + fp x batch
+    rows), so size m for fp x batch << the executor broadcast budget —
+    at a 1B-doc batch even fp = 0.1 broadcasts 100M rows; ~10 bits/ref
+    value gives ~1% fp at k=4 and is the production default.
+
+    Plan shape, per call: in the literal regime (m/64 <=
+    BLOOM_LITERAL_WORDS) the bitmap is collected ONCE and those words
+    feed both the saturation check and the gate; larger bitmaps keep
+    the popcount aggregate and the join-path gate. The batch hash frame
+    (doc_id, md5) sits behind one lazy localCheckpoint — proxy rows,
+    never text — because the gate and the final join both read it.
+    :func:`_bloom_dup_hashes` yields the verified dup hashes; the flags
+    are then one step: the new hashes left-join that broadcast set and
+    one hash aggregate takes max(hit) per doc_id. No ref-side shuffle
+    anywhere."""
+    literal = int(m) // 64 <= BLOOM_LITERAL_WORDS
+    words = bloom_to_words(bm, m) if literal else None
+    fp = _words_fp(words, m, k) if literal else bloom_fp_estimate(bm, m, k)
     if fp > float(max_fp):
         raise ValueError(
             f"reference bitmap is saturated: expected fp rate {fp:.3f} > "
@@ -1599,25 +1637,17 @@ def exact_dedup_against_bloom(
             "(~10 bits/ref value for ~1% fp at k=4) or pass max_fp=1.0 "
             "to run degraded deliberately"
         )
-    # r18 (guide §2.3/§5, the semdedup multi-consumer rule): the batch
-    # hash frame feeds the prefilter gate, the flags semi-join AND the
-    # doc_id spine below — up to 4 consumers, each re-scanning the
-    # batch text and re-computing md5. One lazy localCheckpoint holds
-    # (doc_id, 32-char hash) proxy rows — never text — and cuts that
-    # to one scan per batch (§8: decide with small rows).
     new_hashes = new_d.select(
         "doc_id", F.md5("text").alias("_h")
     ).localCheckpoint(eager=False)
     ref_hashes_raw = ref_d.select(F.md5("text").alias("_h"))
-    flags = _exact_flags_bloom(new_hashes, ref_hashes_raw, bm, m, k)
+    dup = _bloom_dup_hashes(new_hashes, ref_hashes_raw, bm, m, k, words)
     return (
-        new_hashes.select("doc_id")
-        .distinct()
-        .join(flags, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("_exact"), F.lit(False)).alias("exact_dup"),
+        new_hashes.join(
+            F.broadcast(dup.withColumn("_hit", F.lit(True))), "_h", "left"
         )
+        .groupBy("doc_id")
+        .agg(F.max(F.coalesce(F.col("_hit"), F.lit(False))).alias("exact_dup"))
     )
 
 
@@ -1638,7 +1668,7 @@ def dedup_against_frames(
     supplies a PREBUILT bitmap (from :func:`bloom_build` over the ref
     text hashes, with m = ``bloom_bits`` or BLOOM_BITS) so the build
     amortizes across batches. Either way the exact stage becomes the
-    zero-ref-shuffle shape (:func:`_exact_flags_bloom`) and the RESULT
+    zero-ref-shuffle shape (:func:`_bloom_dup_hashes`) and the RESULT
     stays bit-identical (no false negatives by construction — tested).
     Size m for the target fp rate: ~1.2 bytes/ref-doc at k=4 gives
     ~2% fp.
@@ -1672,8 +1702,7 @@ def dedup_against_frames(
             # With a PREBUILT bitmap the verify is the only consumer —
             # no checkpoint (don't materialize for a single pass).
             ref_hashes_raw = ref_hashes_raw.localCheckpoint(eager=False)
-        # same rule for the new side: gate + flags semi-join (2-3
-        # consumers inside _exact_flags_bloom)
+        # same rule for the new side: gate + flags semi-join
         new_hashes = new_hashes.localCheckpoint(eager=False)
         bm = (
             bloom_bm
@@ -1682,7 +1711,12 @@ def dedup_against_frames(
             # distinct's corpus-wide shuffle is pure waste here
             else bloom_build(ref_hashes_raw, "_h", m=m)
         )
-        exact = _exact_flags_bloom(new_hashes, ref_hashes_raw, bm, m)
+        dup = _bloom_dup_hashes(new_hashes, ref_hashes_raw, bm, m)
+        exact = (
+            new_hashes.join(F.broadcast(dup), "_h", "left_semi")
+            .select("doc_id", F.lit(True).alias("_exact"))
+            .distinct()
+        )
     else:
         exact = (
             new_hashes.join(ref_hashes_raw.distinct(), "_h")

@@ -794,3 +794,150 @@ def test_lsh_params_for_reproduces_shipped_constants_and_steers(spark):
         lsh_params_for(0.5, 0)
     with pytest.raises(ValueError):
         lsh_collision_probability(1.5, 4, 2)
+
+
+def test_bloom_to_words_rejects_bitmap_built_with_larger_m(spark):
+    """A bitmap built with a larger m than the caller passes has words
+    past the end of the m/64 list: a typed ValueError naming both sizes,
+    never a raw IndexError — on the collect helper and on the per-batch
+    path's single collect of the literal bitmap."""
+    from pyspark.sql import functions as F
+
+    from talna_spark.pipeline.dedup import (
+        bloom_build,
+        bloom_to_words,
+        exact_dedup_against_bloom,
+    )
+
+    ref = spark.range(500).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("ref "), F.col("id")).alias("text"),
+    )
+    big = bloom_build(ref.select(F.md5("text").alias("_h")), "_h", m=1 << 17)
+    with pytest.raises(ValueError, match=r"needs m >= \d+ bits, but m = 65536"):
+        bloom_to_words(big, 1 << 16)
+    assert len(bloom_to_words(big, 1 << 17)) == (1 << 17) // 64
+    new = spark.createDataFrame([(1, "ref 7")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=r"but m = 65536 \(1024 words\)"):
+        exact_dedup_against_bloom(new, ref, big, m=1 << 16)
+
+
+def _bloom_edge_frames(spark):
+    """(new, ref): a reference text repeated 300 times, new doc_ids
+    carrying several texts (a dup beside a fresh text; two fresh texts;
+    the same dup row twice), a NULL-text new doc and plain fresh docs."""
+    rep = "boilerplate footer text that the crawler keeps finding again"
+
+    def t(tag, i):
+        return f"{tag} document number {i} with enough words to shingle"
+
+    ref_rows = [(1000 + i, t("reference", i)) for i in range(40)]
+    ref_rows += [(2000 + i, rep) for i in range(300)]
+    new_rows = [
+        (1, rep),
+        (2, t("reference", 3)),
+        (3, t("fresh", 1)),
+        (4, t("fresh", 2)),
+        (4, t("reference", 5)),
+        (5, t("fresh", 3)),
+        (5, t("fresh", 4)),
+        (6, None),
+        (7, t("reference", 3)),
+        (8, rep),
+        (8, rep),
+        (9, t("fresh", 5)),
+    ]
+    schema = "doc_id long, text string"
+    return (
+        spark.createDataFrame(new_rows, schema),
+        spark.createDataFrame(ref_rows, schema),
+    )
+
+
+def test_exact_dedup_against_bloom_edge_cases_match_plain(spark):
+    """The per-batch assembly (left join on the broadcast dup-hash set,
+    then max per doc_id) equals the exact slice of the plain
+    dedup_against_frames join on the edge cases — in both membership
+    regimes: m=2^16 (literal bitmap) and m=2^17 (bitmap join)."""
+    from pyspark.sql import functions as F
+
+    from talna_spark.pipeline.dedup import (
+        bloom_build,
+        dedup_against_frames,
+        exact_dedup_against_bloom,
+    )
+
+    new, ref = _bloom_edge_frames(spark)
+    plain = {
+        (r["doc_id"], r["verdict"] == "exact_dup")
+        for r in dedup_against_frames(new, ref).collect()
+    }
+    want = dict(plain)
+    assert len(want) == len(plain)  # one exact verdict per doc_id
+    assert want == {
+        1: True, 2: True, 3: False, 4: True, 5: False,
+        6: False, 7: True, 8: True, 9: False,
+    }
+    ref_h = ref.select(F.md5("text").alias("_h"))
+    for m in (1 << 16, 1 << 17):
+        bm = bloom_build(ref_h, "_h", m=m).localCheckpoint()
+        rows = exact_dedup_against_bloom(new, ref, bm, m=m).collect()
+        got = {r["doc_id"]: r["exact_dup"] for r in rows}
+        assert len(rows) == len(got), m  # one row per distinct doc_id
+        assert got == want, m
+
+
+def _conf_run(spark, monkeypatch, partitions, aqe, scan_tasks, fn):
+    """``fn()``'s sorted rows under the given shuffle width, AQE switch,
+    Arrow batch size 7 and source fan-out; the session conf is restored."""
+    conf = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.adaptive.enabled": str(aqe).lower(),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+    }
+    old = {k: spark.conf.get(k) for k in conf}
+    monkeypatch.setenv("TALNA_MIN_SCAN_TASKS", str(scan_tasks))
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        return sorted(map(tuple, fn().collect()), key=repr)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_curate_and_bloom_dedup_partition_invariant(spark, monkeypatch):
+    """curate() and exact_dedup_against_bloom (both regimes) return the
+    same rows whatever the partitioning: shuffle.partitions 1 vs 37, AQE
+    off vs on, TALNA_MIN_SCAN_TASKS 1 vs 8, Arrow batches of 7."""
+    from pyspark.sql import functions as F
+
+    from talna_spark.pipeline.curate import curate
+    from talna_spark.pipeline.dedup import bloom_build, exact_dedup_against_bloom
+
+    sf = "/root/testdata/sf0.001"
+    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    ref = d.filter(F.col("doc_id") % 3 == 0)
+    # planted exact dups: every 5th reference text again under a new id
+    new = d.filter(F.col("doc_id") % 3 != 0).unionByName(
+        ref.filter(F.col("doc_id") % 5 == 0).select(
+            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
+        )
+    )
+    new_e, ref_e = _bloom_edge_frames(spark)
+
+    def dedup(n, r, m):
+        bm = bloom_build(r.select(F.md5("text").alias("_h")), "_h", m=m)
+        return exact_dedup_against_bloom(n, r, bm, m=m)
+
+    ops = {"curate": lambda: curate(spark, sf)}
+    for m in (1 << 16, 1 << 17):
+        ops[f"dedup-docs-{m}"] = lambda m=m: dedup(new, ref, m)
+        ops[f"dedup-edge-{m}"] = lambda m=m: dedup(new_e, ref_e, m)
+
+    narrow = {k: _conf_run(spark, monkeypatch, 1, False, 1, fn) for k, fn in ops.items()}
+    wide = {k: _conf_run(spark, monkeypatch, 37, True, 8, fn) for k, fn in ops.items()}
+    for k in narrow:
+        assert narrow[k] == wide[k], k
+        assert narrow[k], k
+    assert any(flag for _d, flag in narrow[f"dedup-docs-{1 << 16}"])

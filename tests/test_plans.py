@@ -796,3 +796,54 @@ def test_nfc_normalize_map_only(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert out.columns == ["doc_id", "text", "extra", "text_nfc"]
+
+
+def _jobs_in_call(spark, fn) -> int:
+    """Spark jobs started by ``fn().collect()``: the call runs under its
+    own job group and the status tracker counts the group's jobs once
+    the listener bus has delivered every job event (a throttle-proof
+    counter — independent of host speed)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_curate_step_job_counts(spark, monkeypatch):
+    """The curate_corpus step's per-call job budget at sf0.001, with the
+    source scan fanned out as the benchmark does: curate() plans at most
+    6 jobs (one tokenization checkpoint feeds quality and both gram
+    sides, one window marks canonical rows, contamination is an
+    ExistenceJoin) and the per-batch Bloom exact dedup at most 6 (one
+    collect of the literal bitmap, no distinct spine) on a batch with
+    exact dups."""
+    from pyspark.sql import functions as F
+
+    from talna_spark.pipeline.curate import curate
+    from talna_spark.pipeline.dedup import bloom_build, exact_dedup_against_bloom
+
+    monkeypatch.setenv("TALNA_MIN_SCAN_TASKS", "4")
+    sf = "/root/testdata/sf0.001"
+    n = _jobs_in_call(spark, lambda: curate(spark, sf))
+    assert n <= 6, n
+
+    d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
+    ref = d.filter(F.col("doc_id") % 3 == 0)
+    new = d.filter(F.col("doc_id") % 3 != 0).unionByName(
+        ref.filter(F.col("doc_id") < 60).select(
+            (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
+        )
+    )
+    bm = bloom_build(
+        ref.select(F.md5("text").alias("_h")), "_h", m=1 << 16
+    ).localCheckpoint()
+    n = _jobs_in_call(spark, lambda: exact_dedup_against_bloom(new, ref, bm, m=1 << 16))
+    assert n <= 6, n
