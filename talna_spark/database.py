@@ -10,8 +10,9 @@ Two backends behind one API:
   table ``points(series_id, ts, value)`` partitioned by ``metric, ts_day``
   and a small ``series`` dimension. The filter DSL evaluates on the
   dimension only (the reference's inverted-index role, src/tag_index.rs),
-  and matching series reach the fact scan via an explicit broadcast join —
-  postings-list intersection re-expressed as Catalyst set algebra.
+  and matching series reach the fact scan via one explicit broadcast
+  join — postings-list intersection re-expressed as Catalyst set algebra.
+  Raw and rollup scans select series the same way.
 
 Query lifecycle mirrors the reference's (SURVEY.md §3.1): builder ->
 parse DSL -> compile predicate -> scan+join -> group -> bucket-aggregate;
@@ -129,20 +130,16 @@ class ViewBackend:
 class WarehouseBackend:
     """Backend over the partitioned warehouse written by ingest.write_batch.
 
-    Series selection has two strategies:
-    - dim-predicate (default): compile the AST onto the series dim's tag
-      map — optimal while the dim is broadcast-sized;
-    - inverted tag index (auto when ``series_tag`` exists, see
-      talna_spark.tag_index): the reference's postings algebra as id-only
-      set operations — the path for billions of series, where per-row
-      map_extract over the whole dim loses to indexed (key, value) scans.
+    Series selection is one dim predicate: the filter AST compiled onto
+    the series dim's tag map (one row per series), the matched
+    (series_id, tags) rows broadcast into the fact or rollup scan. It
+    reads the dim the queries need for ``tags`` anyway, so a fresh query
+    plans one scan of it and one broadcast; appended series are visible
+    to the next query with no index to refresh.
     """
 
-    def __init__(self, spark: SparkSession, path: str, use_tag_index: Optional[bool] = None):
-        from talna_spark.ingest import read_series_dim
-        from talna_spark.tag_index import has_tag_index
-
-        from talna_spark.ingest import read_facts
+    def __init__(self, spark: SparkSession, path: str):
+        from talna_spark.ingest import read_facts, read_series_dim
 
         self.spark = spark
         self.path = path
@@ -153,13 +150,6 @@ class WarehouseBackend:
         # catalog round-trip at cluster scale). write_batch/compact/expire
         # re-run __init__, so freshness tracks the data like self.series.
         self.facts = read_facts(spark, path)
-        # the user's stated preference survives backend reinit (write_batch
-        # / compact); the EFFECTIVE flag additionally requires a FRESH index
-        # — a stale one (appends since the last build) would silently drop
-        # new series, so even use_tag_index=True falls back to the dim path
-        self._tag_index_pref = use_tag_index
-        fresh = has_tag_index(path)
-        self.use_tag_index = fresh if use_tag_index is None else bool(use_tag_index) and fresh
         # write_batch/compact/expire re-run __init__ on this same instance:
         # resetting here makes sql() re-register views against the new data
         # generation (a stale view would read deleted/outdated file lists)
@@ -167,21 +157,14 @@ class WarehouseBackend:
 
     def _matched_series(self, metric: str, node) -> DataFrame:
         """(series_id, tags) for every series matching the filter — the
-        reference's inverted-index evaluation (src/query/filter.rs:92-139)."""
-        dim = self.series.filter(F.col("metric") == metric)
-        if self.use_tag_index:
-            from talna_spark.tag_index import evaluate_postings
-
-            ids = evaluate_postings(self.spark, self.path, metric, node)
-            # tags re-attached from the dim for GROUP BY (the reference's
-            # per-id tagset lookup, src/db.rs:122)
-            return dim.join(ids, "series_id", "inner").select("series_id", "tags")
-        return dim.filter(compile_to_column(node, F.col("tags"))).select(
-            "series_id", "tags"
-        )
+        reference's inverted-index evaluation (src/query/filter.rs:92-139)
+        as one predicate over the dim."""
+        return self.series.filter(
+            (F.col("metric") == metric) & compile_to_column(node, F.col("tags"))
+        ).select("series_id", "tags")
 
     def scan(self, metric: str, node, start: Optional[int], end: Optional[int]) -> DataFrame:
-        # 1) Series selection (dim predicate or inverted tag index).
+        # 1) Series selection: the filter as a predicate on the dim.
         dim = self._matched_series(metric, node)
         facts = self.facts
         # 2) Partition pruning: metric is a physical partition column; ts_day
@@ -1182,30 +1165,19 @@ class Database:
         return cls(spark, ViewBackend(points_from_events(spark, sf_dir)))
 
     @classmethod
-    def open(
-        cls,
-        spark: SparkSession,
-        warehouse_path: str,
-        use_tag_index: Optional[bool] = None,
-    ) -> "Database":
-        """Open a partitioned warehouse written by :meth:`write_batch`.
-
-        ``use_tag_index``: force the inverted-index series-selection path
-        on/off; default auto-detects a materialized ``series_tag`` table.
-        """
-        return cls(spark, WarehouseBackend(spark, warehouse_path, use_tag_index))
+    def open(cls, spark: SparkSession, warehouse_path: str) -> "Database":
+        """Open a partitioned warehouse written by :meth:`write_batch`."""
+        return cls(spark, WarehouseBackend(spark, warehouse_path))
 
     def compact(self) -> None:
-        """Run warehouse maintenance: series-dim compaction + tag-index
-        refresh (talna_spark.maintenance)."""
+        """Run warehouse maintenance: series-dim compaction + fact
+        clustering (talna_spark.maintenance)."""
         if not isinstance(self._backend, WarehouseBackend):
             raise InvalidQueryError("compact requires a warehouse-backed Database")
         from talna_spark.maintenance import compact
 
         compact(self.spark, self._backend.path)
-        self._backend.__init__(
-            self.spark, self._backend.path, self._backend._tag_index_pref
-        )
+        self._backend.__init__(self.spark, self._backend.path)
         self._invalidate_plans()
 
     def stats(self) -> DataFrame:
@@ -1241,9 +1213,7 @@ class Database:
         # backend re-init is enough: every query builds a fresh reader (and
         # with it a fresh file listing), same invalidation as compact() —
         # a session-wide clearCache would evict unrelated cached DataFrames
-        self._backend.__init__(
-            self.spark, self._backend.path, self._backend._tag_index_pref
-        )
+        self._backend.__init__(self.spark, self._backend.path)
         self._invalidate_plans()
         return n
 
@@ -1315,9 +1285,7 @@ class Database:
 
         write_batch(points, self._backend.path, persist=persist)
         # refresh the dimension view
-        self._backend.__init__(
-            self.spark, self._backend.path, self._backend._tag_index_pref
-        )
+        self._backend.__init__(self.spark, self._backend.path)
         self._invalidate_plans()
 
     def write(self, metric: str, value: float, tags: dict) -> None:

@@ -13,9 +13,10 @@ Layout:
 - ``{path}/points`` parquet partitioned by (metric, ts_day): metric pruning
   ≙ the reference's per-metric postings scoping; ts_day pruning ≙ its
   time-range key bounds (src/db.rs:129-146). zstd + 128 MB row groups.
-- ``{path}/series`` parquet append-only; deduplicated on read (a periodic
-  compaction job would do this at scale). One row per distinct series —
-  small by construction.
+- ``{path}/series`` parquet append-only; deduplicated on read until
+  ``maintenance.compact_series`` rewrites it. One row per distinct
+  series — small by construction — and the only table queries select
+  series from.
 
 Out-of-order / late points need no special handling: append lands them in
 their (metric, ts_day) partition and queries see them immediately — the
@@ -260,20 +261,16 @@ def write_batch(points: DataFrame, path: str, persist: bool = True) -> None:
         enriched.unpersist()
     # appends may reintroduce duplicate series rows across batches — drop
     # the compaction-time uniqueness marker (see maintenance.compact_series)
+    # so read_series_dim dedups again. New series need nothing more:
+    # queries select series from this dim, so the next query sees them.
     import glob
     import os
 
     marker = os.path.join(path, "series", "_UNIQUE")
     if os.path.exists(marker):
         os.remove(marker)
-    # a new batch can create new series the materialized inverted index
-    # doesn't know — mark it stale so queries fall back to the dim path
-    # until the next compact() rebuilds it
-    tidx_marker = os.path.join(path, "series_tag", "_FRESH")
-    if os.path.exists(tidx_marker):
-        os.remove(tidx_marker)
-    # ... and invalidate every materialized rollup: new raw points make
-    # them stale, and a stale rollup must never answer a query
+    # invalidate every materialized rollup: new raw points make them
+    # stale, and a stale rollup must never answer a query
     # (talna_spark.rollup.available_rollups checks this marker)
     for fresh in glob.glob(os.path.join(path, "rollup_*", "_FRESH")):
         os.remove(fresh)

@@ -1,5 +1,5 @@
-"""Warehouse maintenance jobs: series-dimension compaction + tag-index
-refresh.
+"""Warehouse maintenance jobs: series-dimension compaction, fact-table
+clustering and retention.
 
 The reference maintains its smap/tidx/tags partitions transactionally per
 write (src/db.rs:352-400) because it is an embedded single-writer store.
@@ -18,8 +18,6 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from talna_spark.tag_index import build_tag_index
-
 
 def compact_series(spark: SparkSession, warehouse_path: str) -> None:
     """Rewrite the append-only series dimension as a single deduplicated
@@ -33,8 +31,8 @@ def compact_series(spark: SparkSession, warehouse_path: str) -> None:
     (
         read_series_dim(spark, warehouse_path)
         # repartition by metric, not coalesce(1): a single-task single-file
-        # rewrite caps out exactly at the billions-of-series scale the tag
-        # index targets; per-metric files keep the job parallel and bounded
+        # rewrite caps out at billions of series; per-metric files keep the
+        # job parallel and bounded
         .repartition("metric")
         .write.mode("overwrite")
         .option("compression", "zstd")
@@ -114,9 +112,9 @@ def expire(spark: SparkSession, warehouse_path: str, cutoff_ns: int) -> int:
     Day-granular by design: the cutoff's own day is always retained, so no
     partial-day rewrite ever happens. The same days are dropped from every
     materialized rollup (same (metric, ts_day) layout) so rollup-path
-    queries cannot resurrect expired data. The series dim and tag index
-    are left as supersets (harmless: queries join facts); the next
-    ``compact()`` shrinks them. Returns the number of partition
+    queries cannot resurrect expired data. The series dim is left a
+    superset (harmless: queries join it to facts); the next
+    ``compact()`` shrinks it. Returns the number of partition
     directories removed.
 
     At scale this is a pure metadata operation per partition directory —
@@ -152,8 +150,7 @@ def expire(spark: SparkSession, warehouse_path: str, cutoff_ns: int) -> int:
 
 
 def compact(spark: SparkSession, warehouse_path: str) -> None:
-    """Full maintenance pass: dedupe the series dim, cluster the fact
-    table, refresh the inverted tag index (talna_spark.tag_index)."""
+    """Full maintenance pass: dedupe the series dim (queries then select
+    series from it with no dedup shuffle) and cluster the fact table."""
     compact_series(spark, warehouse_path)
     compact_facts(spark, warehouse_path)
-    build_tag_index(spark, warehouse_path)

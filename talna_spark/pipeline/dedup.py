@@ -184,8 +184,12 @@ LSH_BBIT_DEFAULT = 8
 
 
 def _jaccard(a, b):
+    """|a & b| / |a | b|; NULL when both sets are empty (NULL text, or
+    fewer than SHINGLE_K tokens), as DuckDB's ``0::DOUBLE / 0`` in the
+    SQL twins, so such a pair fails ``>= JACCARD_THRESHOLD`` in both
+    engines (a bare 0 / 0 raises DIVIDE_BY_ZERO under ANSI mode)."""
     inter = F.size(F.array_intersect(a, b))
-    return inter / (F.size(a) + F.size(b) - inter)
+    return inter / F.nullif(F.size(a) + F.size(b) - inter, F.lit(0))
 
 
 def _band_rows(sig: DataFrame, band_bits: "int | None" = None) -> DataFrame:

@@ -1,121 +1,21 @@
-"""Exploded inverted tag index — the 100 TB-scale series-selection path
-(SURVEY.md §1.4: "optionally an exploded series_tag(metric, key, value,
-series_id) table for 100 TB scale").
+"""Tag-index probe.
 
-The reference materializes postings lists per ``metric#key:value`` term
-(src/tag_index.rs:5, 30-61) and evaluates the filter AST with
-intersection/union/complement over them (src/query/filter.rs:92-139,
-operators O14-O19). The default Spark path skips the index — a predicate
-over the series dim's tag map is fine while the dim fits a broadcast. At
-billions of series, map_extract per row over the whole dim loses to an
-index scan, so this module provides the literal postings equivalent:
-
-- ``series_tag`` table: one row per (metric, key, value, series_id),
-  written sorted by (metric, key, value) so equality/prefix terms reduce
-  to contiguous, min-max-skippable parquet ranges.
-- AST evaluation as DataFrame set algebra: Eq/Wildcard -> indexed scans;
-  And -> inner join (postings intersection, O17); Or -> union+distinct
-  (O18); Not -> metric-universe anti-join (O19, metric-scoped per our
-  documented deviation); AllStar -> the metric's id universe (O16).
-
-Every leaf scan pushes (metric, key, value) filters into parquet; the
-set ops shuffle only 8-byte series ids.
+Series selection has one path: the filter AST compiled onto the series
+dim's tag map (``talna_spark.dsl.compiler.compile_to_column``), the
+matched rows broadcast-joined into the fact or rollup scan
+(``talna_spark.database.WarehouseBackend``) — the reference's
+inverted-index role (src/tag_index.rs:103-146) as one predicate over a
+table with one row per series. No postings table is built; a
+``series_tag/`` directory left in an older warehouse is never read.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from talna_spark.dsl.ast import AllStar, And, Eq, Node, Not, Or, Wildcard
-from talna_spark.errors import InvalidQueryError
-
-
-def build_tag_index(spark: SparkSession, warehouse_path: str) -> None:
-    """Materialize/refresh the inverted index from the series dimension.
-
-    Mirrors ``TagIndex::index`` (reference src/tag_index.rs:46-61), done
-    once per maintenance cycle instead of per-write: explode tags, add the
-    bare-metric universe rows (the reference's ``metric`` term postings),
-    sort by the lookup key for min-max pruning.
-    """
-    from talna_spark.ingest import read_series_dim
-
-    series = read_series_dim(spark, warehouse_path)
-    exploded = series.select(
-        "metric", F.explode("tags").alias("key", "value"), "series_id"
-    )
-    universe = series.select(
-        "metric", F.lit("").alias("key"), F.lit("").alias("value"), "series_id"
-    )
-    (
-        exploded.unionByName(universe)
-        .repartition("metric")
-        .sortWithinPartitions("metric", "key", "value")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .parquet(f"{warehouse_path}/series_tag")
-    )
-    # freshness marker: ingest removes it on append (a stale index would
-    # silently drop newly-created series from every query — same protocol
-    # as rollup _FRESH / series _UNIQUE)
-    with open(os.path.join(warehouse_path, "series_tag", "_FRESH"), "w"):
-        pass
-
 
 def has_tag_index(warehouse_path: str) -> bool:
-    """True only for a FRESH index (built since the last append)."""
+    """True when a ``series_tag/_FRESH`` marker exists, i.e. an older
+    writer's compaction left a postings table. Nothing in this package
+    writes or reads that table; queries never depend on it."""
     return os.path.exists(os.path.join(warehouse_path, "series_tag", "_FRESH"))
-
-
-def _read(spark: SparkSession, warehouse_path: str) -> DataFrame:
-    return spark.read.parquet(f"{warehouse_path}/series_tag")
-
-
-def evaluate_postings(
-    spark: SparkSession, warehouse_path: str, metric: str, node: Node
-) -> DataFrame:
-    """Evaluate a filter AST to a DataFrame of matching ``series_id``
-    (reference ``Node::evaluate``, src/query/filter.rs:92-139)."""
-    idx = _read(spark, warehouse_path).filter(F.col("metric") == metric)
-
-    def universe() -> DataFrame:
-        return idx.filter((F.col("key") == "") & (F.col("value") == "")).select(
-            "series_id"
-        )
-
-    def go(n: Node) -> DataFrame:
-        if isinstance(n, AllStar):
-            return universe()
-        if isinstance(n, Eq):
-            # postings lookup for metric#key:value (O14, tag_index.rs:103-120)
-            return idx.filter(
-                (F.col("key") == n.key) & (F.col("value") == n.value)
-            ).select("series_id")
-        if isinstance(n, Wildcard):
-            # prefix postings union (O15, tag_index.rs:122-146); empty
-            # prefix = key-exists
-            cond = F.col("key") == n.key
-            if n.prefix:
-                cond = cond & F.col("value").startswith(n.prefix)
-            return idx.filter(cond).select("series_id").distinct()
-        if isinstance(n, And):
-            # postings intersection (O17) as an id-only inner join
-            return (
-                go(n.left)
-                .join(go(n.right), "series_id", "inner")
-                .select("series_id")
-                .distinct()
-            )
-        if isinstance(n, Or):
-            # postings union (O18): concat + dedup
-            return go(n.left).unionByName(go(n.right)).distinct()
-        if isinstance(n, Not):
-            # complement within the metric (O19, documented deviation from
-            # the reference's cross-metric complement, src/smap.rs:39-52)
-            return universe().join(go(n.child), "series_id", "left_anti")
-        raise InvalidQueryError(f"unknown AST node: {n!r}")
-
-    return go(node)

@@ -941,3 +941,55 @@ def test_curate_and_bloom_dedup_partition_invariant(spark, monkeypatch):
         assert narrow[k] == wide[k], k
         assert narrow[k], k
     assert any(flag for _d, flag in narrow[f"dedup-docs-{1 << 16}"])
+
+
+def test_empty_shingle_pairs_never_verify(spark, tmp_path):
+    """Two NULL-text docs and two docs shorter than SHINGLE_K tokens have
+    empty shingle sets: their NULL signatures collide in every band, and
+    the verify must read their Jaccard as NULL (DuckDB's 0::DOUBLE / 0),
+    not divide 0 by 0. Both callers of the verify, lsh_near_dup_pairs
+    and dedup_against_frames (through dedup_against_docs' doc_id % 3
+    split), match their DuckDB twins and never pair those docs."""
+    import duckdb
+
+    from talna_spark.pipeline.dedup import (
+        SHINGLE_K,
+        dedup_against_docs,
+        dedup_against_docs_sql,
+        lsh_near_dup_pairs,
+        lsh_near_dup_pairs_sql,
+    )
+
+    d = str(tmp_path / "empty_sh")
+    os.makedirs(d)
+    texts = {
+        0: None,                                      # ref
+        1: None,                                      # new
+        2: "tiny",                                    # new, < K tokens
+        3: "too short",                               # ref, < K tokens
+        4: "the quick brown fox jumps over the lazy dog every night",
+        5: "fresh crawl content that matches nothing in the archive",
+        6: "the quick brown fox jumps over the lazy dog every day",
+    }
+    assert SHINGLE_K > 2  # fixture assumption
+    pd.DataFrame(
+        {"doc_id": list(texts), "text": list(texts.values())}
+    ).to_parquet(f"{d}/documents.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
+
+    pairs = sorted(map(tuple, lsh_near_dup_pairs(spark, d).collect()))
+    assert pairs == sorted(con.execute(lsh_near_dup_pairs_sql()).fetchall())
+    assert pairs == [(4, 6, 0.8)]
+
+    want = sorted(con.execute(dedup_against_docs_sql()).fetchall())
+    assert [r[:2] for r in want] == [
+        (1, "new"), (2, "new"), (4, "near_dup"), (5, "new"),
+    ]
+    out = dedup_against_docs(spark, d).collect()
+    for kind in ("direct", "bloom"):
+        got = sorted(
+            (r["doc_id"], r["verdict"], r["ref_doc_id"], r["jaccard"])
+            for r in out if r["kind"] == kind
+        )
+        assert got == want, kind

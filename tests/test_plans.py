@@ -102,19 +102,23 @@ def test_greedy_drop_plan_matches_reanchor_shape(spark):
     assert re_anchor.count("Exchange") == drop.count("Exchange")
 
 
-def test_tag_index_path_stays_id_only(spark, wh_db):
-    # with the inverted index, the postings evaluation plan joins only
-    # series_id columns (8-byte rows) — never tags/values
-    from talna_spark.maintenance import compact
-
-    compact(spark, wh_db._backend.path)
-    db = Database.open(spark, wh_db._backend.path, use_tag_index=True)
-    df = db.avg("app.purchase", "user").filter("user:3 AND k:1*").to_df()
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan
-    # the series_tag scans must push (key, value) equality into parquet
-    j = plan.find("series_tag")
-    assert j >= 0
+def test_warehouse_query_job_count(spark, wh_db):
+    """A fresh query on a compacted warehouse selects its series with
+    one predicate over the series dim and one broadcast join into the
+    fact scan: at most 3 jobs from to_df() through collect, no
+    series_tag scan, exactly one BroadcastHashJoin. The earlier
+    series_tag postings plan ran 8 jobs for this query: to_df() inferred
+    the index's parquet schema, and the plan added index scans, distinct
+    shuffles and a second broadcast."""
+    wh_db.compact()
+    q = lambda db: db.avg("app.purchase", "user").filter("user:3 AND k:1*")
+    n = _jobs_in_call(spark, lambda: q(wh_db).to_df())
+    assert n <= 3, n
+    # a new facade: its plan cache is empty, so this plan is unexecuted
+    # and prints the one (initial) physical plan
+    plan = plan_of(q(Database.open(spark, wh_db._backend.path)).to_df())
+    assert "series_tag" not in plan
+    assert plan.count("BroadcastHashJoin") == 1, plan
 
 
 def test_multigroup_single_hash_agg(spark):

@@ -1,16 +1,22 @@
-"""Inverted tag-index path: postings algebra must agree exactly with the
-dim-predicate path for every DSL shape (the two strategies implement the
-same reference semantics, src/query/filter.rs:92-139)."""
+"""Warehouse series selection and compaction. Series are selected by
+one predicate over the series dim (the reference's inverted-index role,
+src/query/filter.rs:92-139); on a compacted warehouse it must match the
+DuckDB oracle over the raw events for every DSL shape, and appends after
+compaction must be visible without another compaction."""
 
 from __future__ import annotations
 
 import shutil
 import tempfile
 
+import duckdb
 import pytest
 
 from talna_spark.database import Database
+from talna_spark.oracle import events_query_sql
 from talna_spark.sources.events import points_from_events
+
+SF = "/root/testdata/sf0.001"
 
 FILTERS = [
     "*",
@@ -25,18 +31,32 @@ FILTERS = [
     "user:[1, 2, 3]",
     "!(user:3 OR user:4)",
     "user:3 AND nosuch:tag",        # empty
+    "!hi:no",                       # NOT of a value no series has
+    "hi:y*",                        # prefix on a sometimes-missing tag
+    "hi:*",                         # key exists on a sometimes-missing tag
+    "!(user:3 AND k:1*) AND (k:1* OR hi:yes)",
+    "user:3 AND !(k:1* OR !hi:*)",
+    "(user:3 OR user:4) AND !(k:12 OR k:13)",
 ]
 
 
 @pytest.fixture(scope="module")
 def warehouse(spark):
     wh = tempfile.mkdtemp(prefix="talna_tidx_wh_")
-    pts = points_from_events(spark, "/root/testdata/sf0.001")
+    pts = points_from_events(spark, SF)
     db = Database.open(spark, wh)
     db.write_batch(pts)
-    db.compact()  # builds the tag index
+    db.compact()
     yield wh
     shutil.rmtree(wh, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def duck():
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF}/events.parquet')")
+    yield con
+    con.close()
 
 
 def _result_key(df):
@@ -47,18 +67,18 @@ def _result_key(df):
 
 
 @pytest.mark.parametrize("flt", FILTERS)
-def test_index_path_equals_dim_path(spark, warehouse, flt):
-    with_idx = Database.open(spark, warehouse, use_tag_index=True)
-    without = Database.open(spark, warehouse, use_tag_index=False)
-    assert with_idx._backend.use_tag_index is True
-    a = _result_key(with_idx.avg("app.purchase", "user").filter(flt).to_df())
-    b = _result_key(without.avg("app.purchase", "user").filter(flt).to_df())
-    assert a == b, f"filter {flt!r}: index path diverges from dim path"
-
-
-def test_auto_detection(spark, warehouse):
+def test_index_path_equals_dim_path(spark, warehouse, duck, flt):
+    """The compacted warehouse's series selection (the index's role,
+    played by the dim predicate) equals the DuckDB oracle."""
     db = Database.open(spark, warehouse)
-    assert db._backend.use_tag_index is True
+    got = _result_key(db.avg("app.purchase", "user").filter(flt).to_df())
+    want = sorted(
+        duck.sql(
+            events_query_sql("avg", "app.purchase", "user", flt, round_value=False)
+        ).fetchall()
+    )
+    assert [g[:3] + g[4:] for g in got] == [w[:3] + w[4:] for w in want]
+    assert [g[3] for g in got] == pytest.approx([w[3] for w in want], rel=1e-9)
 
 
 def test_compact_bounds_series_dim(spark, warehouse):
@@ -103,30 +123,31 @@ def test_ts_day_is_session_timezone_proof(spark):
         shutil.rmtree(wh, ignore_errors=True)
 
 
-def test_append_stales_tag_index_and_preserves_pref(spark):
-    """An append invalidates the inverted index (new series would be
-    silently dropped by a stale postings table) and write_batch keeps the
-    user's explicit use_tag_index preference across backend reinit."""
-    wh = tempfile.mkdtemp(prefix="talna_tidx_stale_")
-    try:
-        pts = points_from_events(spark, "/root/testdata/sf0.001")
-        db = Database.open(spark, wh)
-        db.write_batch(pts)
-        db.compact()
-        assert Database.open(spark, wh)._backend.use_tag_index is True
+def test_append_after_compact_is_visible(spark):
+    """Points appended after compact() (on a new series and on an
+    existing one) are visible to the next query, from the same facade
+    and from a reopened one, with no new compaction."""
+    from talna_spark.schema import POINTS_SCHEMA
 
-        forced_off = Database.open(spark, wh, use_tag_index=False)
-        forced_off.write_batch(pts.limit(5))
-        # preference survives the reinit...
-        assert forced_off._backend._tag_index_pref is False
-        assert forced_off._backend.use_tag_index is False
-        # ...and even a True preference yields the dim path while stale
-        assert Database.open(spark, wh, use_tag_index=True)._backend.use_tag_index is False
-        assert Database.open(spark, wh)._backend.use_tag_index is False
-        # rebuild restores the index path
-        db2 = Database.open(spark, wh)
-        db2.compact()
-        assert Database.open(spark, wh, use_tag_index=True)._backend.use_tag_index is True
+    wh = tempfile.mkdtemp(prefix="talna_append_wh_")
+    try:
+        db = Database.open(spark, wh)
+        db.write_batch(points_from_events(spark, SF))
+        db.compact()
+        q = lambda d: d.count("app.purchase", "user").filter("k:1*").granularity(None)
+        before = {g: b[0].len for g, b in q(db).collect().items()}
+        db.write_batch(
+            spark.createDataFrame(
+                [
+                    ("app.purchase", 1_000, 5.0, {"user": "999999", "k": "10"}),
+                    ("app.purchase", 2_000, 5.0, {"user": "999999", "k": "10"}),
+                ],
+                POINTS_SCHEMA,
+            )
+        )
+        for d in (db, Database.open(spark, wh)):
+            after = {g: b[0].len for g, b in q(d).collect().items()}
+            assert after == {**before, "999999": 2}
     finally:
         shutil.rmtree(wh, ignore_errors=True)
 
@@ -169,7 +190,7 @@ def test_compact_facts_preserves_data_and_results(spark):
         from talna_spark.maintenance import compact_facts
 
         compact_facts(spark, wh)
-        db2 = Database.open(spark, wh, use_tag_index=False)
+        db2 = Database.open(spark, wh)
         assert spark.read.parquet(f"{wh}/points").count() == n_before
         after = _result_key(db2.avg("app.purchase", "user").filter("k:1*").to_df())
         assert before == after
@@ -190,18 +211,16 @@ def test_reference_term_prefix_false_positive_adjudication(spark):
     'm#env:p', both of which that term starts with. The reference
     returns the series for a filter on a tag key it does not have
     (upstream tests use clean keys only — zero coverage). This engine
-    is immune by construction on BOTH selection backends: the postings
-    table keeps (metric, key, value) as separate columns
-    (tag_index.py:47-57, key equality is exact) and the predicate path
-    reads the tags MAP. A literal port of the reference's term
+    is immune by construction: series selection reads the tags MAP, so
+    key equality is exact. A literal port of the reference's term
     format + prefix scan demonstrates the false positive; the engine
-    paths return only the true match."""
+    returns only the true match."""
     wh = tempfile.mkdtemp(prefix="talna_tidx_fp_wh_")
     try:
         db = Database.open(spark, wh)
         db.write_at("m", 1_000, 1.0, {"env": "prod"})          # true match
         db.write_at("m", 2_000, 2.0, {"env:prod": "x"})        # collider
-        db.compact()  # build the postings index
+        db.compact()
 
         # literal port of TagIndex::index term formatting (format_key,
         # tag_index.rs:93-101) + query_prefix's raw string prefix scan
@@ -215,12 +234,11 @@ def test_reference_term_prefix_false_positive_adjudication(spark):
             hits = sorted(sid for t, sid in terms if t.startswith(prefix))
             assert hits == [0, 1]  # the reference matches BOTH series
 
-        # engine: both backends return only the series that HAS key 'env'
-        for use_idx in (True, False):
-            dbq = Database.open(spark, wh, use_tag_index=use_idx)
-            for flt in ("env:*", "env:p*"):
-                res = dbq.sum("m", "env").filter(flt).granularity(None).collect()
-                assert list(res) == ["prod"], (use_idx, flt)
-                assert res["prod"][0].value == 1.0
+        # engine: only the series that HAS key 'env'
+        dbq = Database.open(spark, wh)
+        for flt in ("env:*", "env:p*"):
+            res = dbq.sum("m", "env").filter(flt).granularity(None).collect()
+            assert list(res) == ["prod"], flt
+            assert res["prod"][0].value == 1.0
     finally:
         shutil.rmtree(wh, ignore_errors=True)
