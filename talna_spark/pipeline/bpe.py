@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from talna_spark.pipeline.portable import tokens
+from talna_spark.pipeline.scan import read_documents
 
 EOW = "</w>"  # end-of-word marker, per the original BPE formulation
 
@@ -164,7 +165,7 @@ def _word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, n, syms): corpus word frequencies with each word split into
     its initial symbol array (characters + EOW). One corpus scan; the
     result is vocab-sized."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_documents(spark, sf_dir, "text")
     words = d.select(F.explode(tokens(F.col("text"))).alias("word")).filter(
         F.length("word") > 0
     )
@@ -183,7 +184,7 @@ def _byte_word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned once through an Arrow-batched pretokenizer; the byte split
     runs on the vocab-sized distinct table AFTER the groupBy, so the
     Python cost is per distinct pretoken, not per occurrence."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("text")
+    d = read_documents(spark, sf_dir, "text")
 
     def _pre(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import re
@@ -598,10 +599,8 @@ def bpe_encode(
     ranks = {tuple(m): i for i, m in enumerate(merges)}
     init_syms = _init_syms_fn(mode)
     pre_re = GPT2_PRETOKEN_RE if mode == "byte" else None
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if mode == "byte":
-        d = d.select("doc_id", F.col("text"))
-    else:
+    d = read_documents(spark, sf_dir, "doc_id", "text")
+    if mode != "byte":
         d = d.select("doc_id", tokens(F.col("text")).alias("words"))
 
     def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -707,10 +706,8 @@ def bpe_encode_ids(
         if mode == "byte"
         else None
     )
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if mode == "byte":
-        d = d.select("doc_id", F.col("text"))
-    else:
+    d = read_documents(spark, sf_dir, "doc_id", "text")
+    if mode != "byte":
         d = d.select("doc_id", tokens(F.col("text")).alias("words"))
 
     def _enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

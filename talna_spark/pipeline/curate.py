@@ -14,9 +14,11 @@ Every stage reuses the verified operators' own expressions/SQL
 pipeline.sampling's bucket), and the DuckDB twin composes the SAME
 generated SQL pieces, so the composition cannot drift from its parts.
 
-Plan shape — ONE parquet read and ONE tokenization of the corpus: the
-(doc_id, text, _w) projection, ``_w`` being ``tokens(text)``, is
-materialized behind a single lazy localCheckpoint and every stage
+Plan shape — ONE parquet read and ONE tokenization of the corpus. The
+read declares its (doc_id BIGINT, text STRING) schema
+(pipeline.scan.read_documents), so no call runs a parquet
+schema-inference job. The (doc_id, text, _w) projection, ``_w`` being
+``tokens(text)``, is materialized behind a single lazy localCheckpoint and every stage
 branches off it. Quality and split are computed inline map-side, the
 quality score reading ``_w`` (quality_parts(words=...), bit-identical
 to re-splitting text); dedup is one window over the map-side
@@ -57,6 +59,7 @@ from talna_spark.pipeline.decontam import (
 )
 from talna_spark.pipeline.portable import tokens
 from talna_spark.pipeline.sampling import TRAIN_PCT, VAL_PCT, _bucket
+from talna_spark.pipeline.scan import fan_out, read_documents
 from talna_spark.pipeline.text import quality_parts, quality_sql
 
 QUALITY_MIN = 0.5
@@ -115,13 +118,7 @@ def curate(
     oracle) byte-identical to the rule-only composition; the classifier
     stage branches off the SAME checkpoint, adding one id-only
     (doc_id, f) aggregate + broadcast-weights join, no extra scan."""
-    from talna_spark.pipeline.scan import fan_out
-
-    base = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "text"
-        )
-    ).select(
+    base = fan_out(read_documents(spark, sf_dir, "doc_id", "text")).select(
         "doc_id", "text", tokens(F.col("text")).alias("_w")
     ).localCheckpoint(eager=False)
     # eval-slice docs are the benchmark itself — excluded from curation

@@ -32,6 +32,7 @@ from talna_spark.pipeline.portable import (
     tokens,
     tokens_sql,
 )
+from talna_spark.pipeline.scan import read_documents
 
 EVAL_MOD = 97   # doc_id % 97 == 0 -> the benchmark stand-in
 SHINGLE_K = 5
@@ -44,7 +45,12 @@ def _shingle_hashes(docs: DataFrame, k: int) -> DataFrame:
     a hash matches, or counts DISTINCT matching hashes, so the grams are
     not de-duplicated and sorted per document the way
     pipeline.portable.shingles does: same answers, no per-document
-    array_sort with its interpreted comparator."""
+    array_sort with its interpreted comparator.
+
+    Each gram is hashed inside the array and the hashes are exploded, so
+    md5 runs once per gram: a hash64 projected after the explode is an
+    expression, and the joins' inferred ``IsNotNull(h)`` filter pushed
+    below that projection would evaluate it a second time."""
     if "_w" not in docs.columns:
         # tokens materialized first: the grams' slice lambda captures
         # the words expression, so the inline form re-ran the split per
@@ -54,8 +60,8 @@ def _shingle_hashes(docs: DataFrame, k: int) -> DataFrame:
         docs = _tokenized(docs, tokens(F.col("text")))
     return docs.select(
         "doc_id",
-        F.explode(grams(F.col("_w"), k)).alias("_s"),
-    ).select("doc_id", hash64(F.col("_s")).alias("h"))
+        F.explode(F.transform(grams(F.col("_w"), k), hash64)).alias("h"),
+    )
 
 
 def contaminated_against(
@@ -72,9 +78,7 @@ def contamination_scan(
     spark: SparkSession, sf_dir: str, k: int = SHINGLE_K
 ) -> DataFrame:
     """Scan the documents corpus against its deterministic eval slice."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     ev = d.filter(F.col("doc_id") % EVAL_MOD == 0)
     corpus = d.filter(F.col("doc_id") % EVAL_MOD != 0)
     return contaminated_against(corpus, ev, k)

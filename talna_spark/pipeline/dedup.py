@@ -1450,39 +1450,53 @@ def bloom_prefilter(
     return d.join(hits, [id_col, col])
 
 
-def _bloom_dup_hashes(
+def _bloom_gate(
     new_hashes: DataFrame,
-    ref_hashes_raw: DataFrame,
     bm: DataFrame,
     m: int,
     k: int = BLOOM_K,
     words: "list[int] | None" = None,
-) -> DataFrame:
-    """(_h): the distinct new-batch text hashes present in the reference
-    set, verified through a Bloom bitmap with ZERO ref-side shuffle
-    (r13). The gate runs map-side over new — the literal expression
-    over ``words`` when the caller already collected the bitmap, else
-    :func:`bloom_prefilter`. The candidate hashes (true dups + fp, small
-    by the bitmap's sizing contract) BROADCAST as they are, duplicates
-    included (a semi-join build side tolerates them), into a semi-join
-    that streams the RAW ref hashes map-side. The one aggregate is the
-    distinct over the matched ref rows, keyed by candidate hash, so its
-    exchange is bounded by tasks x |candidates|, not by how often a
-    reference text repeats. Callers broadcast the result back over the
-    new hashes.
+) -> "tuple[DataFrame, DataFrame]":
+    """(hashes, candidates) for a new-batch (doc_id, _h) frame: the
+    frame behind one lazy localCheckpoint — proxy rows, never text,
+    because the gate and the caller's flag join both read it — and its
+    rows whose ``_h`` MIGHT be in the bitmap (never drops a true
+    member).
 
-    Catalyst's InferFiltersFromConstraints copies the gate through the
-    ``_h`` equi-join onto the reference scan (a Filter plus a parquet
-    DataFilter evaluating the k probes per reference row). It rejects
-    nothing — every reference hash is a bitmap member by construction —
-    and is left in place: blocking it would take a barrier such as a
-    checkpoint of the candidates."""
-    if words is None:
-        cand = bloom_prefilter(new_hashes, "_h", bm, m=int(m), k=int(k))
-    else:
-        cand = new_hashes.filter(
-            bloom_might_contain(F.col("_h"), words, int(m), int(k))
-        )
+    In the literal regime (m/64 <= BLOOM_LITERAL_WORDS) the gate is the
+    literal expression over ``words`` (collected here when the caller
+    has not), computed once per new row as the boolean column ``_g``
+    inside the checkpoint; the candidates are ``filter("_g")``. Larger
+    bitmaps gate through :func:`bloom_prefilter`'s join path over the
+    checkpoint."""
+    if int(m) // 64 <= BLOOM_LITERAL_WORDS:
+        if words is None:
+            words = bloom_to_words(bm, m)
+        hashes = new_hashes.withColumn(
+            "_g", bloom_might_contain(F.col("_h"), words, int(m), int(k))
+        ).localCheckpoint(eager=False)
+        return hashes, hashes.filter("_g")
+    hashes = new_hashes.localCheckpoint(eager=False)
+    return hashes, bloom_prefilter(hashes, "_h", bm, m=int(m), k=int(k))
+
+
+def _bloom_dup_hashes(cand: DataFrame, ref_hashes_raw: DataFrame) -> DataFrame:
+    """(_h): the distinct candidate hashes (from :func:`_bloom_gate`)
+    present in the reference set, verified with ZERO ref-side shuffle
+    (r13). The candidates (true dups + fp, small by the bitmap's sizing
+    contract) BROADCAST as they are, duplicates included (a semi-join
+    build side tolerates them), into a semi-join that streams the RAW
+    ref hashes map-side. The one aggregate is the distinct over the
+    matched ref rows, keyed by candidate hash, so its exchange is
+    bounded by tasks x |candidates|, not by how often a reference text
+    repeats. Callers broadcast the result back over the new hashes.
+
+    In the literal regime the candidates are a filter on the
+    checkpointed gate column ``_g``, not the gate expression itself: a
+    checkpoint scan carries no predicate over ``_h`` that Catalyst's
+    InferFiltersFromConstraints could copy through the ``_h`` equi-join,
+    so the reference scan runs md5(text) only — no k-probe gate per
+    reference row, where it would reject nothing."""
     return ref_hashes_raw.join(
         F.broadcast(cand.select("_h")), "_h", "left_semi"
     ).distinct()
@@ -1624,8 +1638,9 @@ def exact_dedup_against_bloom(
     BLOOM_LITERAL_WORDS) the bitmap is collected ONCE and those words
     feed both the saturation check and the gate; larger bitmaps keep
     the popcount aggregate and the join-path gate. The batch hash frame
-    (doc_id, md5) sits behind one lazy localCheckpoint — proxy rows,
-    never text — because the gate and the final join both read it.
+    (doc_id, md5) sits behind one lazy localCheckpoint with the literal
+    gate evaluated inside it, once per new row (:func:`_bloom_gate`);
+    the reference scan computes md5(text) and nothing else.
     :func:`_bloom_dup_hashes` yields the verified dup hashes; the flags
     are then one step: the new hashes left-join that broadcast set and
     one hash aggregate takes max(hit) per doc_id. No ref-side shuffle
@@ -1641,11 +1656,10 @@ def exact_dedup_against_bloom(
             "(~10 bits/ref value for ~1% fp at k=4) or pass max_fp=1.0 "
             "to run degraded deliberately"
         )
-    new_hashes = new_d.select(
-        "doc_id", F.md5("text").alias("_h")
-    ).localCheckpoint(eager=False)
-    ref_hashes_raw = ref_d.select(F.md5("text").alias("_h"))
-    dup = _bloom_dup_hashes(new_hashes, ref_hashes_raw, bm, m, k, words)
+    new_hashes, cand = _bloom_gate(
+        new_d.select("doc_id", F.md5("text").alias("_h")), bm, m, k, words
+    )
+    dup = _bloom_dup_hashes(cand, ref_d.select(F.md5("text").alias("_h")))
     return (
         new_hashes.join(
             F.broadcast(dup.withColumn("_hit", F.lit(True))), "_h", "left"
@@ -1706,8 +1720,6 @@ def dedup_against_frames(
             # With a PREBUILT bitmap the verify is the only consumer —
             # no checkpoint (don't materialize for a single pass).
             ref_hashes_raw = ref_hashes_raw.localCheckpoint(eager=False)
-        # same rule for the new side: gate + flags semi-join
-        new_hashes = new_hashes.localCheckpoint(eager=False)
         bm = (
             bloom_bm
             if bloom_bm is not None
@@ -1715,7 +1727,10 @@ def dedup_against_frames(
             # distinct's corpus-wide shuffle is pure waste here
             else bloom_build(ref_hashes_raw, "_h", m=m)
         )
-        dup = _bloom_dup_hashes(new_hashes, ref_hashes_raw, bm, m)
+        # same rule for the new side, checkpointed with its gate: gate +
+        # flags semi-join
+        new_hashes, cand = _bloom_gate(new_hashes, bm, m)
+        dup = _bloom_dup_hashes(cand, ref_hashes_raw)
         exact = (
             new_hashes.join(F.broadcast(dup), "_h", "left_semi")
             .select("doc_id", F.lit(True).alias("_exact"))

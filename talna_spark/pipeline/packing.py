@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from talna_spark.pipeline.portable import tokens
+from talna_spark.pipeline.scan import read_documents
 
 PACK_BUDGET = 2048
 N_SHARDS = 64
@@ -142,9 +143,7 @@ def pack_texts(
     shuffle on pack_id; the concat is a JVM array_join over collected
     member structs, no Python."""
     assign = pack_assign(spark, sf_dir, budget=budget, n_shards=n_shards)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     return (
         assign.join(d, "doc_id")
         .groupBy("pack_id")

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from talna_spark.pipeline.scan import read_documents
+
 TRAIN_PCT = 80
 VAL_PCT = 10  # test = remainder
 
@@ -34,7 +36,7 @@ def _bucket(col: F.Column) -> F.Column:
 def split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, bucket, split) for every document — the reproducible
     train/val/test partition of the corpus."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    d = read_documents(spark, sf_dir, "doc_id")
     b = _bucket(F.col("doc_id"))
     split = (
         F.when(b < TRAIN_PCT, F.lit("train"))
@@ -406,9 +408,7 @@ def doremi_weights(
 
 
 def _docs_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
+    return read_documents(spark, sf_dir, "doc_id", "source")
 
 
 def doremi_mixture_sample(
@@ -833,9 +833,7 @@ def token_budget_sample_sql(
 def reservoir_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver registration: RESERVOIR_K docs per source with their
     within-group rank."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "source"
-    )
+    d = read_documents(spark, sf_dir, "doc_id", "source")
     return reservoir_sample(d, "doc_id", "source", RESERVOIR_K).select(
         "doc_id", "source", F.col("sample_rank").cast("long").alias("sample_rank")
     )
@@ -935,7 +933,7 @@ def weighted_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     to character length (the simplest cross-engine weight; real
     pipelines pass a quality/classifier score) — long docs are
     proportionally likelier, short ones still reachable."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_documents(spark, sf_dir, "doc_id", "source", "text").select(
         "doc_id", "source", F.length("text").cast("double").alias("w")
     )
     return weighted_sample(d, "doc_id", "w", WS_K, group_col="source").select(
@@ -1044,11 +1042,7 @@ def doremi_weights_iterated(
     e = float(eta)
     if not e > 0:
         raise ValueError("eta must be positive")
-    d = fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "source", "text"
-        )
-    )
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "source", "text"))
     src = d.select("doc_id", "source").localCheckpoint(eager=False)
     # NO empty-token filter: round-1 parity with the one-shot table
     # requires the uniformly-weighted proxy to be bit-identical to

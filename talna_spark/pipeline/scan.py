@@ -14,13 +14,17 @@ IS an Exchange that moves document text.
 
 Benchmarks set the env var once instead of threading a knob through
 every call site; production jobs on many-file sources never need it.
+
+The module also declares the documents table's column types
+(:func:`read_documents`), so the readers that name their columns skip
+the parquet schema-inference job.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 ENV_VAR = "TALNA_MIN_SCAN_TASKS"
 
@@ -39,3 +43,19 @@ def fan_out(d: DataFrame, key: str = "doc_id") -> DataFrame:
     if m > 0 and d.rdd.getNumPartitions() < m:
         return d.repartition(m, key)
     return d
+
+
+# The documents table's column types. Readers name the columns they use
+# and read them under this declared schema: an undeclared parquet read
+# runs a schema-inference job on every call, one Spark job per reader.
+DOCUMENTS_COLUMNS = {"doc_id": "BIGINT", "text": "STRING", "source": "STRING"}
+
+
+def read_documents(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The named columns of ``{sf_dir}/documents.parquet``, in that
+    order, read under their declared :data:`DOCUMENTS_COLUMNS` types: no
+    schema-inference job, other file columns never read. A narrower
+    integer doc_id in the file widens to BIGINT; a file type that cannot
+    be read as the declared one fails the scan with Spark's typed error."""
+    schema = ", ".join(f"{c} {DOCUMENTS_COLUMNS[c]}" for c in cols)
+    return spark.read.schema(schema).parquet(f"{sf_dir}/documents.parquet")

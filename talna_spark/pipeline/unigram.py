@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from talna_spark.pipeline.portable import tokens
+from talna_spark.pipeline.scan import read_documents
 
 VOCAB_SIZE = 200     # target vocabulary (production: 32k-256k)
 SEED_SIZE = 1000     # candidate pool before pruning
@@ -97,7 +98,7 @@ def _viterbi(w: str, logp: dict, max_len: int, unk: float) -> list[str]:
 def _word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, n): corpus word frequencies — one corpus scan, vocab-sized
     result (the bpe.py word table without the symbol split)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_documents(spark, sf_dir, "text")
     return (
         d.select(F.explode(tokens(F.col("text"))).alias("word"))
         .filter(F.length("word") > 0)
@@ -474,7 +475,7 @@ def unigram_encode(
     pieces = {p: float(lp) for p, lp in model}
     ml = max((len(p) for p in pieces), default=1)
     unk = UNK_LOGP
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_documents(spark, sf_dir, "doc_id", "text").select(
         "doc_id", tokens(F.col("text")).alias("words")
     )
 
@@ -559,7 +560,7 @@ def unigram_encode_ids(
     unk_base = UNK_ID_BASE
     if len(pid) >= unk_base:
         raise ValueError("vocabulary too large for the UNK id range")
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_documents(spark, sf_dir, "doc_id", "text").select(
         "doc_id", tokens(F.col("text")).alias("words")
     )
 

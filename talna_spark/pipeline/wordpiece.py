@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from talna_spark.pipeline.bpe import _apply_merge, _pair_counts
 from talna_spark.pipeline.portable import tokens
+from talna_spark.pipeline.scan import read_documents
 
 WP_CONT = "##"     # continuation prefix (BERT convention)
 WP_UNK = "[UNK]"   # whole-word fallback when no piece matches
@@ -52,7 +53,7 @@ def _wp_word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, n, syms): corpus word frequencies with each word split
     into its initial WordPiece symbols — first character bare, every
     later character '##'-prefixed. One corpus scan; vocab-sized."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_documents(spark, sf_dir, "text")
     words = d.select(F.explode(tokens(F.col("text"))).alias("word")).filter(
         F.length("word") > 0
     )
@@ -225,7 +226,7 @@ def wordpiece_encode(
     Returns (doc_id, n_words, n_wp_tokens, n_unk_words)."""
     vs = frozenset(vocab)
     maxlen = max((len(p) for p in vs), default=1)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_documents(spark, sf_dir, "doc_id", "text").select(
         "doc_id", tokens(F.col("text")).alias("words")
     )
 
@@ -303,7 +304,7 @@ def wordpiece_encode_ids(
     pid = {p: i for i, p in enumerate(vocab)}
     unk_id = len(vocab)
     maxlen = max((len(p) for p in pid), default=1)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = read_documents(spark, sf_dir, "doc_id", "text").select(
         "doc_id", tokens(F.col("text")).alias("words")
     )
 

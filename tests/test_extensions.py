@@ -655,6 +655,45 @@ def test_curate_single_scan_and_eval_canonical(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_curate_declared_schema_widens_and_projects(spark, tmp_path):
+    """curate() reads documents under the declared (doc_id BIGINT, text
+    STRING) schema: a file whose doc_id is INT32 and that carries an
+    extra leading column gives the same rows as the DuckDB twin over
+    that file (the INT32 ids widen, the extra column is never read). A
+    doc_id that cannot be read as BIGINT fails the read with Spark's
+    FAILED_READ_FILE error instead of returning rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from talna_spark.pipeline.curate import curate, curate_sql
+
+    src = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+    n = src.num_rows
+    d = tmp_path / "i32"
+    d.mkdir()
+    pq.write_table(
+        pa.table({
+            "extra": pa.array(range(n), pa.int64()),
+            "doc_id": src["doc_id"].cast(pa.int32()),
+            "text": src["text"],
+        }),
+        d / "documents.parquet",
+    )
+    got = sorted(map(tuple, curate(spark, str(d)).collect()))
+    want = sorted(map(tuple, _duck(str(d), curate_sql())))
+    assert got == want
+    assert len(got) == sum(1 for i in src["doc_id"].to_pylist() if i % 97)
+
+    bad = tmp_path / "str"
+    bad.mkdir()
+    pq.write_table(
+        pa.table({"doc_id": src["doc_id"].cast(pa.string()), "text": src["text"]}),
+        bad / "documents.parquet",
+    )
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        curate(spark, str(bad)).collect()
+
+
 # ------------------------------------------------------------- histogram
 def test_histogram_matches_duckdb_and_counts_everything(spark):
     """Per-bucket value histogram: Spark and the DuckDB twin agree

@@ -807,28 +807,43 @@ def _jobs_in_call(spark, fn) -> int:
     own job group and the status tracker counts the group's jobs once
     the listener bus has delivered every job event (a throttle-proof
     counter — independent of host speed)."""
+    return _collect_in_group(spark, fn)[0]
+
+
+def _collect_in_group(spark, fn):
+    """(jobs, df): :func:`_jobs_in_call`'s count plus the collected
+    frame ``fn()`` returned, whose executed plan is then AQE-final."""
     import uuid
 
     sc = spark.sparkContext
     group = f"jobcount-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "job count")
     try:
-        fn().collect()
+        df = fn()
+        df.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+
+def _plan_lines_with(plan: str, node: str, needle: str) -> list:
+    """Lines of a rendered plan that hold ``node`` and ``needle``."""
+    return [ln for ln in plan.splitlines() if node in ln and needle in ln]
 
 
 def test_curate_step_job_counts(spark, monkeypatch):
     """The curate_corpus step's per-call job budget at sf0.001, with the
     source scan fanned out as the benchmark does: curate() plans at most
-    6 jobs (one tokenization checkpoint feeds quality and both gram
-    sides, one window marks canonical rows, contamination is an
-    ExistenceJoin) and the per-batch Bloom exact dedup at most 6 (one
-    collect of the literal bitmap, no distinct spine) on a batch with
-    exact dups."""
+    5 jobs (the documents schema is declared, so no schema-inference
+    job; one tokenization checkpoint feeds quality and both gram sides,
+    one window marks canonical rows, contamination is an ExistenceJoin;
+    the undeclared read ran 6) and the per-batch Bloom exact dedup at
+    most 6 (one collect of the literal bitmap, no distinct spine) on a
+    batch with exact dups. Each gram is hashed once: the hashes are
+    exploded out of the gram array, so no Filter above the Generate
+    recomputes md5 for the inferred IsNotNull(h)."""
     from pyspark.sql import functions as F
 
     from talna_spark.pipeline.curate import curate
@@ -836,8 +851,12 @@ def test_curate_step_job_counts(spark, monkeypatch):
 
     monkeypatch.setenv("TALNA_MIN_SCAN_TASKS", "4")
     sf = "/root/testdata/sf0.001"
-    n = _jobs_in_call(spark, lambda: curate(spark, sf))
-    assert n <= 6, n
+    n, out = _collect_in_group(spark, lambda: curate(spark, sf))
+    assert n <= 5, n
+    plan = plan_of(out)
+    gens = [ln for ln in plan.splitlines() if "Generate explode(" in ln]
+    assert gens and all("md5(" in g for g in gens), gens
+    assert not _plan_lines_with(plan, "Filter ", "md5("), plan
 
     d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
     ref = d.filter(F.col("doc_id") % 3 == 0)
@@ -851,3 +870,37 @@ def test_curate_step_job_counts(spark, monkeypatch):
     ).localCheckpoint()
     n = _jobs_in_call(spark, lambda: exact_dedup_against_bloom(new, ref, bm, m=1 << 16))
     assert n <= 6, n
+
+
+def test_bloom_gate_not_copied_to_reference_scan(spark):
+    """In the literal regime both Bloom exact-dedup callers evaluate the
+    gate once per new row inside the new-side checkpoint and hand on
+    its candidates as a filter on the gate column. No Filter and no
+    parquet scan in the executed plan (AQE final) probes the bitmap
+    (``bl1|`` is the first probe's hash salt): with the gate expression
+    on the candidates, InferFiltersFromConstraints copied it through
+    the ``_h`` join onto every reference row, as a Filter and as a
+    parquet DataFilter, where it rejects nothing."""
+    from pyspark.sql import functions as F
+
+    from talna_spark.pipeline.dedup import (
+        bloom_build,
+        dedup_against_frames,
+        exact_dedup_against_bloom,
+    )
+
+    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    new_d = d.filter(F.col("doc_id") % 3 != 0).select("doc_id", "text")
+    ref_d = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
+    bm = bloom_build(
+        ref_d.select(F.md5("text").alias("_h")), "_h", m=1 << 16
+    ).localCheckpoint()
+    for build in (
+        lambda: exact_dedup_against_bloom(new_d, ref_d, bm, m=1 << 16),
+        lambda: dedup_against_frames(new_d, ref_d, bloom_bm=bm),
+    ):
+        _n, out = _collect_in_group(spark, build)
+        plan = plan_of(out)
+        assert "AdaptiveSparkPlan isFinalPlan=true" in plan, plan
+        for node in ("Filter ", "FileScan parquet"):
+            assert not _plan_lines_with(plan, node, "bl1|"), plan
