@@ -12,6 +12,7 @@ Usage: python scripts/driver_check.py [query ...]   (default: all)
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import struct
@@ -62,6 +63,15 @@ def _values_equal(a: pd.DataFrame, b: pd.DataFrame) -> tuple[bool, str]:
                     f"oracle={b[c].iloc[i]!r} ({kb})"
                 )
     return True, ""
+
+
+def _frame_hash(df: pd.DataFrame) -> str:
+    """md5 over the normalized frame's bit-exact cell keys, so two runs
+    can be compared value for value."""
+    h = hashlib.md5(",".join(df.columns).encode())
+    for row in df.itertuples(index=False):
+        h.update("|".join(_cell_key(v) for v in row).encode())
+    return h.hexdigest()[:12]
 
 
 def main() -> int:
@@ -115,7 +125,7 @@ def main() -> int:
             continue
         ok, why = _values_equal(a, b)
         if ok:
-            print(f"{name}: OK rows={len(a)}")
+            print(f"{name}: OK rows={len(a)} hash={_frame_hash(a)}")
         else:
             failures.append(name)
             print(f"{name}: VALUE MISMATCH {why}")

@@ -310,6 +310,82 @@ def _greedy_segment_ids_drop_boundary(ts_desc: np.ndarray, width: int) -> np.nda
     return ids
 
 
+def _greedy_starts(pdf: pd.DataFrame, w: int, forced=None) -> np.ndarray:
+    """Greedy anchor scan (reference loop src/agg/stream.rs:60-97) over
+    rows sorted (grp ASC, ts DESC): a segment starts at every group
+    change, at every row flagged in ``forced``, and wherever the open
+    bucket's anchor (its newest point) is more than ``w`` newer than the
+    row. Plain python lists in the loop (numpy scalar indexing is ~20x
+    slower). Returns segment start indices."""
+    ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
+    grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
+    forced_list = forced.tolist() if forced is not None else None
+    starts_list = [0]
+    anchor = ts_list[0]
+    g = grp_list[0]
+    for i in range(1, len(ts_list)):
+        t = ts_list[i]
+        gi = grp_list[i]
+        if gi != g or anchor - t > w or (forced_list and forced_list[i]):
+            starts_list.append(i)
+            anchor = t
+            g = gi
+    return np.asarray(starts_list, dtype=np.int64)
+
+
+def _greedy_agg(
+    pdf: pd.DataFrame, starts: np.ndarray, kind: str, pq: "float | None"
+) -> pd.DataFrame:
+    """Aggregate the contiguous segments of ``pdf`` (sorted ts DESC
+    within each) that begin at ``starts`` into RESULT_SCHEMA rows. Both
+    greedy paths fold through here, so their float order is the same."""
+    ts = pdf["ts"].to_numpy(dtype=np.int64)
+    val = pdf["value"].to_numpy(dtype=np.float64)
+    n = len(ts)
+    lens = np.diff(np.append(starts, n))
+    # DESC order: segment max ts = first element, min ts = last element.
+    out = pd.DataFrame(
+        {
+            "grp": pdf["grp"].to_numpy()[starts],
+            "start_ts": ts[np.append(starts[1:], n) - 1],
+            "end_ts": ts[starts],
+            "len": lens,
+        }
+    )
+    if kind == "avg":
+        out["value"] = np.add.reduceat(val, starts) / lens
+    elif kind == "sum":
+        out["value"] = np.add.reduceat(val, starts)
+    elif kind == "min":
+        out["value"] = np.minimum.reduceat(val, starts)
+    elif kind == "max":
+        out["value"] = np.maximum.reduceat(val, starts)
+    elif kind == "count":
+        out["value"] = lens.astype("float64")
+    elif kind == "stddev":
+        # sample stddev per segment; single-point segments -> NaN
+        # (emitted as NULL), matching SQL STDDEV_SAMP
+        bounds = np.append(starts, n)
+        out["value"] = [
+            float(np.std(val[bounds[i]: bounds[i + 1]], ddof=1))
+            if lens[i] > 1
+            else None
+            for i in range(len(starts))
+        ]
+    elif pq is not None:
+        # percentile: no reduceat analog — slice per segment.
+        # np.percentile's linear interpolation matches Spark
+        # `percentile` and DuckDB `quantile_cont` exactly.
+        bounds = np.append(starts, n)
+        out["value"] = [
+            float(np.percentile(val[bounds[i]: bounds[i + 1]], pq * 100.0))
+            for i in range(len(starts))
+        ]
+    else:
+        raise ValueError(f"unknown aggregation: {kind}")
+    return out[["grp", "start_ts", "end_ts", "value", "len"]]
+
+
 def greedy_buckets(
     scan: DataFrame,
     group_col: Column,
@@ -383,82 +459,10 @@ def greedy_buckets(
     """
     if boundary not in ("reanchor", "drop"):
         raise ValueError(f"unknown greedy boundary semantics: {boundary!r}")
-    kind_b = kind  # capture for the closure
-    pq = percentile_q(kind)  # float (not a module ref) — safe to capture
+    pq = percentile_q(kind)
     w = int(width)
     guard = int(max_open_bucket_rows)
     drop_b = boundary == "drop"
-
-    # NOTE: the closure must be self-contained (no talna_spark module
-    # references) — executors' Python workers may not have this repo on
-    # their import path, and cloudpickle serializes module-level functions
-    # by reference. Locals + numpy/pandas only.
-    def _boundaries(pdf: pd.DataFrame) -> np.ndarray:
-        # Greedy anchor scan (reference loop src/agg/stream.rs:60-97)
-        # restarted at every group change, over plain python lists (numpy
-        # scalar indexing in a loop is ~20x slower). pdf is sorted by
-        # (grp ASC, ts DESC). Returns segment start indices.
-        ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
-        grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
-        n = len(ts_list)
-        starts_list = [0]
-        anchor = ts_list[0]
-        g = grp_list[0]
-        for i in range(1, n):
-            t = ts_list[i]
-            gi = grp_list[i]
-            if gi != g or anchor - t > w:
-                starts_list.append(i)
-                anchor = t
-                g = gi
-        return np.asarray(starts_list, dtype=np.int64)
-
-    def _aggregate(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
-        ts = pdf["ts"].to_numpy(dtype=np.int64)
-        val = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(ts)
-        lens = np.diff(np.append(starts, n))
-        # DESC order: segment max ts = first element, min ts = last element.
-        out = pd.DataFrame(
-            {
-                "grp": pdf["grp"].to_numpy()[starts],
-                "start_ts": ts[np.append(starts[1:], n) - 1],
-                "end_ts": ts[starts],
-                "len": lens,
-            }
-        )
-        if kind_b == "avg":
-            out["value"] = np.add.reduceat(val, starts) / lens
-        elif kind_b == "sum":
-            out["value"] = np.add.reduceat(val, starts)
-        elif kind_b == "min":
-            out["value"] = np.minimum.reduceat(val, starts)
-        elif kind_b == "max":
-            out["value"] = np.maximum.reduceat(val, starts)
-        elif kind_b == "count":
-            out["value"] = lens.astype("float64")
-        elif kind_b == "stddev":
-            # sample stddev per segment; single-point segments -> NaN
-            # (emitted as NULL), matching SQL STDDEV_SAMP
-            bounds = np.append(starts, n)
-            out["value"] = [
-                float(np.std(val[bounds[i]: bounds[i + 1]], ddof=1))
-                if lens[i] > 1
-                else None
-                for i in range(len(starts))
-            ]
-        elif pq is not None:
-            # percentile: no reduceat analog — slice per segment.
-            # np.percentile's linear interpolation matches Spark
-            # `percentile` and DuckDB `quantile_cont` exactly.
-            bounds = np.append(starts, n)
-            out["value"] = [
-                float(np.percentile(val[bounds[i]: bounds[i + 1]], pq * 100.0))
-                for i in range(len(starts))
-            ]
-        else:
-            raise ValueError(f"unknown aggregation: {kind_b}")
-        return out[["grp", "start_ts", "end_ts", "value", "len"]]
 
     def _boundaries_drop(pdf: pd.DataFrame):
         # Reference drop semantics (src/agg/stream.rs:81-86) restarted
@@ -504,10 +508,10 @@ def greedy_buckets(
         keep_arr = np.asarray(keep, dtype=bool)
         starts_arr = np.asarray(starts, dtype=np.int64)
         if keep_arr.all():
-            return _aggregate(pdf, starts_arr)
+            return _greedy_agg(pdf, starts_arr, kind, pq)
         rank = np.cumsum(keep_arr) - 1
-        return _aggregate(
-            pdf.iloc[np.flatnonzero(keep_arr)], rank[starts_arr]
+        return _greedy_agg(
+            pdf.iloc[np.flatnonzero(keep_arr)], rank[starts_arr], kind, pq
         )
 
     def _guard_fail(carry: pd.DataFrame):
@@ -544,7 +548,7 @@ def greedy_buckets(
             if cut:
                 yield _aggregate_drop(pdf.iloc[:cut], starts[:-1], keep[:cut])
         if carry is not None and not carry.empty:
-            yield _aggregate(carry, np.asarray([0], dtype=np.int64))
+            yield _greedy_agg(carry, np.asarray([0], dtype=np.int64), kind, pq)
 
     def _bucketize(batches):
         carry = None
@@ -554,7 +558,7 @@ def greedy_buckets(
                 carry = None
             if pdf.empty:
                 continue
-            starts = _boundaries(pdf)
+            starts = _greedy_starts(pdf, w)
             # The trailing segment is the open bucket of the trailing
             # group — its membership can still change with the next Arrow
             # batch (a not-much-older point may join, or close it); every
@@ -566,9 +570,9 @@ def greedy_buckets(
             if len(carry) > guard:
                 _guard_fail(carry)
             if cut:
-                yield _aggregate(pdf.iloc[:cut], starts[:-1])
+                yield _greedy_agg(pdf.iloc[:cut], starts[:-1], kind, pq)
         if carry is not None and not carry.empty:
-            yield _aggregate(carry, np.asarray([0], dtype=np.int64))
+            yield _greedy_agg(carry, np.asarray([0], dtype=np.int64), kind, pq)
 
     prepared = (
         scan.select(group_col.alias("grp"), "ts", "value")
@@ -759,55 +763,9 @@ def greedy_buckets_sliced(
             "slice_width must exceed the bucket width (a slice shorter "
             "than one bucket can never contain a forced reset)"
         )
-    kind_b = kind
     pq = percentile_q(kind)
     w = int(width)
     guard = int(max_open_bucket_rows)
-
-    # NOTE: closures must be self-contained (numpy/pandas + captured
-    # locals only) — executors' Python workers don't import talna_spark.
-    # _agg_frame is a LOCAL captured by value in both pass closures.
-    def _agg_frame(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
-        # identical aggregation (and float order) to greedy_buckets
-        ts = pdf["ts"].to_numpy(dtype=np.int64)
-        val = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(ts)
-        lens = np.diff(np.append(starts, n))
-        out = pd.DataFrame(
-            {
-                "grp": pdf["grp"].to_numpy()[starts],
-                "start_ts": ts[np.append(starts[1:], n) - 1],
-                "end_ts": ts[starts],
-                "len": lens,
-            }
-        )
-        if kind_b == "avg":
-            out["value"] = np.add.reduceat(val, starts) / lens
-        elif kind_b == "sum":
-            out["value"] = np.add.reduceat(val, starts)
-        elif kind_b == "min":
-            out["value"] = np.minimum.reduceat(val, starts)
-        elif kind_b == "max":
-            out["value"] = np.maximum.reduceat(val, starts)
-        elif kind_b == "count":
-            out["value"] = lens.astype("float64")
-        elif kind_b == "stddev":
-            bounds = np.append(starts, n)
-            out["value"] = [
-                float(np.std(val[bounds[i]: bounds[i + 1]], ddof=1))
-                if lens[i] > 1
-                else None
-                for i in range(len(starts))
-            ]
-        elif pq is not None:
-            bounds = np.append(starts, n)
-            out["value"] = [
-                float(np.percentile(val[bounds[i]: bounds[i + 1]], pq * 100.0))
-                for i in range(len(starts))
-            ]
-        else:
-            raise ValueError(f"unknown aggregation: {kind_b}")
-        return out[["grp", "start_ts", "end_ts", "value", "len"]]
 
     _P1_SCHEMA = (
         "grp string, slice long, final boolean, tail boolean, ts long, "
@@ -895,7 +853,7 @@ def greedy_buckets_sliced(
                 ms = np.asarray(mid_starts, dtype=np.int64)
                 mid = pdf[~pend].reset_index(drop=True)
                 midpos = np.cumsum(~pend) - 1
-                agg = _agg_frame(mid, midpos[ms])
+                agg = _greedy_agg(mid, midpos[ms], kind, pq)
                 agg.insert(1, "slice", sl_a[ms])
                 agg.insert(2, "final", True)
                 agg.insert(3, "tail", False)
@@ -963,23 +921,13 @@ def greedy_buckets_sliced(
                 carry = None
             if pdf.empty:
                 continue
-            ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
-            grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
-            sl_list = pdf["slice"].to_numpy(dtype=np.int64).tolist()
-            tl_list = pdf["tail"].to_numpy(dtype=bool).tolist()
-            n = len(ts_list)
-            starts_list = [0]
-            anchor = ts_list[0]
-            g = grp_list[0]
-            for i in range(1, n):
-                forced = tl_list[i] and (
-                    not tl_list[i - 1] or sl_list[i - 1] != sl_list[i]
-                )
-                if grp_list[i] != g or forced or anchor - ts_list[i] > w:
-                    starts_list.append(i)
-                    anchor = ts_list[i]
-                    g = grp_list[i]
-            starts = np.asarray(starts_list, dtype=np.int64)
+            # a tail block's first row re-anchors: it was computed after
+            # a forced reset in pass 1
+            sl = pdf["slice"].to_numpy(dtype=np.int64)
+            tl = pdf["tail"].to_numpy(dtype=bool)
+            forced = np.zeros(len(tl), dtype=bool)
+            forced[1:] = tl[1:] & (~tl[:-1] | (sl[:-1] != sl[1:]))
+            starts = _greedy_starts(pdf, w, forced)
             cut = int(starts[-1])
             carry = pdf.iloc[cut:]
             if len(carry) > guard:
@@ -992,10 +940,10 @@ def greedy_buckets_sliced(
                 body = pdf.iloc[:cut].rename(columns={"raw": "value"})[
                     ["grp", "ts", "value"]
                 ]
-                yield _agg_frame(body, starts[:-1])
+                yield _greedy_agg(body, starts[:-1], kind, pq)
         if carry is not None and not carry.empty:
             body = carry.rename(columns={"raw": "value"})[["grp", "ts", "value"]]
-            yield _agg_frame(body, np.asarray([0], dtype=np.int64))
+            yield _greedy_agg(body, np.asarray([0], dtype=np.int64), kind, pq)
 
     prepared = _sliced_prepared(scan, group_col, slice_width)
     # r16: ONE shuffle keyed on (grp, slice) — hash repartition spreads

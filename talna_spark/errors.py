@@ -34,5 +34,10 @@ class InvalidValueError(InvalidQueryError, ValueError):
     Pythonic type for a bad value)."""
 
 
+class MissingColumnError(TalnaError, ValueError):
+    """An input table lacks a column the operator reads; the message
+    names the column and the file."""
+
+
 class InvalidMetricNameError(TalnaError):
     """Metric name fails charset validation (reference src/metric_name.rs:15-25)."""

@@ -404,7 +404,7 @@ def _local_bpe_merges(words: list, n_merges: int) -> list[tuple[str, str]]:
 # text the top pairs usually share symbols, so most rounds stay
 # single-merge; the lever pays on the skewed/gappy count tables of
 # late training and synthetic corpora). Combined measurement in
-# scripts/probe_bpe_jobs.py: 63 -> 32 jobs for 30 byte merges at
+# OPTIMIZATION_r18.md: 63 -> 32 jobs for 30 byte merges at
 # sf0.01 (2.1 -> 1.07 jobs/merge), identical merge list.
 @contextmanager
 def _no_aqe(spark):
@@ -543,7 +543,7 @@ def bpe_train(
     # join-free agg+TakeOrdered shape where AQE's only effect is one
     # extra scheduled job per round materializing the exchange as a
     # query stage — 61 -> 32 jobs for 30 byte merges, identical list
-    # (scripts/probe_bpe_jobs.py)
+    # (OPTIMIZATION_r18.md)
     with _no_aqe(spark):
         while len(merges) < int(n_merges):
             # one TakeOrdered action per ROUND (K rows instead of 1 —
@@ -579,6 +579,22 @@ def bpe_train(
     return merges
 
 
+def _greedy_merge(syms: list, ranks: dict) -> list:
+    """The classic greedy BPE encode of one word, in place: repeatedly
+    merge the adjacent pair with the LOWEST merge rank until none
+    applies (ties go to the leftmost occurrence)."""
+    while len(syms) > 1:
+        best_rank, best_i = None, -1
+        for i in range(len(syms) - 1):
+            r = ranks.get((syms[i], syms[i + 1]))
+            if r is not None and (best_rank is None or r < best_rank):
+                best_rank, best_i = r, i
+        if best_rank is None:
+            break
+        syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
+    return syms
+
+
 def bpe_encode(
     spark: SparkSession,
     sf_dir: str,
@@ -611,20 +627,9 @@ def bpe_encode(
 
         def word_tokens(w: str) -> int:
             got = cache.get(w)
-            if got is not None:
-                return got
-            syms = init_syms(w)
-            while len(syms) > 1:
-                best_rank, best_i = None, -1
-                for i in range(len(syms) - 1):
-                    r = ranks.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank, best_i = r, i
-                if best_rank is None:
-                    break
-                syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-            cache[w] = len(syms)
-            return len(syms)
+            if got is None:
+                got = cache[w] = len(_greedy_merge(init_syms(w), ranks))
+            return got
 
         for pdf in batches:
             n_words, n_tok, n_chars = [], [], []
@@ -738,26 +743,13 @@ def bpe_encode_ids(
 
         def word_ids(w: str) -> list[int]:
             got = cache.get(w)
-            if got is not None:
-                return got
-            syms = init_syms(w)
-            # merge the trailing char with EOW representation: the train
-            # table stores words as char sequence + EOW symbol, and
-            # merges may produce 'char</w>' symbols — keep syms as the
-            # same alphabet: last char and EOW stay separate symbols
-            # until a merge joins them (exactly bpe_encode's loop)
-            while len(syms) > 1:
-                best_rank, best_i = None, -1
-                for i in range(len(syms) - 1):
-                    r = ranks.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank, best_i = r, i
-                if best_rank is None:
-                    break
-                syms[best_i : best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-            out = [sym_id(s) for s in syms]
-            cache[w] = out
-            return out
+            if got is None:
+                # the last char and EOW stay separate symbols until a
+                # merge joins them, as in training
+                got = cache[w] = [
+                    sym_id(s) for s in _greedy_merge(init_syms(w), ranks)
+                ]
+            return got
 
         for pdf in batches:
             rows = []

@@ -82,9 +82,7 @@ def pack_assign_lengths(
     b = int(budget)
     stride = _SHARD_STRIDE
 
-    # NOTE: the closure must be self-contained (no talna_spark references)
-    # — executors' Python workers don't have this repo on their import
-    # path. Plain lists: FFD is pointer-chasing, numpy buys nothing.
+    # Plain lists: FFD is pointer-chasing, numpy buys nothing.
     def _ffd(pdf):
         import pandas as pd
 
@@ -384,52 +382,27 @@ def tokenize_pack(
             if merges is not None
             else wordpiece_train(spark, sf_dir, n_merges=n_merges)
         )
-        enc = (
-            wordpiece_encode(spark, sf_dir, vocab)
-            .select(
-                "doc_id",
-                "n_words",
-                F.col("n_wp_tokens").alias("n_bpe_tokens"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        assign = pack_assign_lengths(
-            enc.select("doc_id", F.col("n_bpe_tokens").alias("n_tokens")),
-            budget=budget,
-            n_shards=n_shards,
-        ).select("doc_id", "pack_id", "oversize")
-        return enc.join(assign, "doc_id")
-    if mode == "unigram":
+        enc = wordpiece_encode(spark, sf_dir, vocab)
+        n_tok = "n_wp_tokens"
+    elif mode == "unigram":
         from talna_spark.pipeline.unigram import unigram_encode, unigram_train
 
         model = merges if merges is not None else unigram_train(spark, sf_dir)
-        enc = (
-            unigram_encode(spark, sf_dir, model)
-            .select(
-                "doc_id",
-                "n_words",
-                F.col("n_unigram_tokens").alias("n_bpe_tokens"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        assign = pack_assign_lengths(
-            enc.select("doc_id", F.col("n_bpe_tokens").alias("n_tokens")),
-            budget=budget,
-            n_shards=n_shards,
-        ).select("doc_id", "pack_id", "oversize")
-        return enc.join(assign, "doc_id")
-    from talna_spark.pipeline.bpe import bpe_encode, bpe_train
+        enc = unigram_encode(spark, sf_dir, model)
+        n_tok = "n_unigram_tokens"
+    else:
+        from talna_spark.pipeline.bpe import bpe_encode, bpe_train
 
-    if merges is None:
-        merges = bpe_train(spark, sf_dir, n_merges=n_merges, mode=mode)
+        if merges is None:
+            merges = bpe_train(spark, sf_dir, n_merges=n_merges, mode=mode)
+        enc = bpe_encode(spark, sf_dir, merges, mode=mode)
+        n_tok = "n_bpe_tokens"
     # the encode frame feeds BOTH the length-based assignment and the
-    # final join: pin it or the Python merge loop — the dominant stage —
+    # final join: pin it or the Python encode loop — the dominant stage —
     # runs over the corpus twice (the pack_token_ids / curate rule)
-    enc = (
-        bpe_encode(spark, sf_dir, merges, mode=mode)
-        .select("doc_id", "n_words", "n_bpe_tokens")
-        .localCheckpoint(eager=False)
-    )
+    enc = enc.select(
+        "doc_id", "n_words", F.col(n_tok).alias("n_bpe_tokens")
+    ).localCheckpoint(eager=False)
     assign = pack_assign_lengths(
         enc.select("doc_id", F.col("n_bpe_tokens").alias("n_tokens")),
         budget=budget,

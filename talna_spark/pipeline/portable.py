@@ -106,18 +106,6 @@ def norm_text_sql(expr: str) -> str:
     return rf"regexp_replace(trim(lower({expr})), '\s+', ' ', 'g')"
 
 
-def char_grams(text: Column, k: int) -> Column:
-    """ALL character k-grams of a (pre-normalized) string in order,
-    multiplicity kept — the fastText-style feature stream for learned
-    language ID. Empty when the string is shorter than k (same
-    sequence-counts-down guard as :func:`shingles`)."""
-    n = F.length(text) - (k - 1)
-    return F.when(
-        n >= 1,
-        F.transform(F.sequence(F.lit(1), n), lambda i: text.substr(i, F.lit(k))),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def char_grams_sql(expr: str, k: int) -> str:
     return (
         f"list_transform("

@@ -24,7 +24,10 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
+
+from talna_spark.errors import MissingColumnError
 
 ENV_VAR = "TALNA_MIN_SCAN_TASKS"
 
@@ -56,6 +59,14 @@ def read_documents(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     order, read under their declared :data:`DOCUMENTS_COLUMNS` types: no
     schema-inference job, other file columns never read. A narrower
     integer doc_id in the file widens to BIGINT; a file type that cannot
-    be read as the declared one fails the scan with Spark's typed error."""
+    be read as the declared one fails the scan with Spark's typed error.
+    A named column the file lacks raises :class:`MissingColumnError`
+    (checked against the parquet footer on the driver, no Spark job):
+    a declared-schema read would return it as NULL on every row."""
+    path = f"{sf_dir}/documents.parquet"
+    present = ds.dataset(path, format="parquet").schema.names
+    missing = [c for c in cols if c not in present]
+    if missing:
+        raise MissingColumnError(f"{path} has no column {', '.join(missing)}")
     schema = ", ".join(f"{c} {DOCUMENTS_COLUMNS[c]}" for c in cols)
-    return spark.read.schema(schema).parquet(f"{sf_dir}/documents.parquet")
+    return spark.read.schema(schema).parquet(path)

@@ -9,6 +9,8 @@ shuffle at all; filters on the outputs push down into the parquet scan.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -692,7 +694,6 @@ def token_heavy_hitters(
     d = _docs(spark, sf_dir)
     toks = d.select(F.explode(tokens(F.col("text"))).alias("token"))
 
-    # closure must be self-contained (workers don't import talna_spark)
     def _misra_gries(batches):
         import numpy as np
         import pandas as pd
@@ -879,6 +880,16 @@ def lm_token_base(spark: SparkSession, sf_dir: str) -> dict:
         .select("doc_id", tokens(F.col("text")).alias("_w"))
         .localCheckpoint(eager=False)
     )
+    tok, pairs = _token_streams(d)
+    return {"d": d, "tok": tok, "pairs": pairs}
+
+
+def _token_streams(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(tok, pairs) of a tokenized (doc_id, _w) frame: the positional
+    unigram stream (doc_id, token) and bigram stream (doc_id, t1, t2),
+    each behind a lazy ``localCheckpoint``. ``d`` must be materialized
+    tokens: the pair-struct lambda captures ``_w``, so an inline split
+    would re-run once per pair position."""
     w = F.col("_w")
     tok = d.select("doc_id", F.explode(w).alias("token")).localCheckpoint(
         eager=False
@@ -898,7 +909,7 @@ def lm_token_base(spark: SparkSession, sf_dir: str) -> dict:
         .select("doc_id", F.col("p.t1").alias("t1"), F.col("p.t2").alias("t2"))
         .localCheckpoint(eager=False)
     )
-    return {"d": d, "tok": tok, "pairs": pairs}
+    return tok, pairs
 
 
 def signal_token_base(spark: SparkSession, sf_dir: str) -> dict:
@@ -949,24 +960,7 @@ def signal_token_base(spark: SparkSession, sf_dir: str) -> dict:
         c_nf.alias("c4_n_failed"),
     ).localCheckpoint(eager=False)
     d = d_full.select("doc_id", "_w")
-    tok = d.select("doc_id", F.explode(w).alias("token")).localCheckpoint(
-        eager=False
-    )
-    pair_structs = F.when(
-        F.size(w) >= 2,
-        F.transform(
-            F.sequence(F.lit(2), F.size(w)),
-            lambda i: F.struct(
-                F.element_at(w, i - 1).alias("t1"),
-                F.element_at(w, i).alias("t2"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<t1:string,t2:string>>"))
-    pairs = (
-        d.select("doc_id", F.explode(pair_structs).alias("p"))
-        .select("doc_id", F.col("p.t1").alias("t1"), F.col("p.t2").alias("t2"))
-        .localCheckpoint(eager=False)
-    )
+    tok, pairs = _token_streams(d)
     return {"d": d, "tok": tok, "pairs": pairs, "signals": d_full}
 
 
@@ -1396,8 +1390,7 @@ def compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: Arrow-batched mapInPandas, bounded memory (one batch of
     texts at a time), no shuffle, embarrassingly parallel; level pinned
-    so ratios are stable across zlib builds' default drift. The closure
-    is self-contained (stdlib only) — executors never import talna_spark.
+    so ratios are stable across zlib builds' default drift.
     """
     from pyspark.sql.types import (
         DoubleType, LongType, StructField, StructType,
@@ -1745,57 +1738,38 @@ MOJIBAKE_MAX_ROUNDS = 3
 _MOJIBAKE_MARKERS = "\u00c2\u00c3\u00c4\u00c5\u0082\u201a\u0192\u201e\u2026\u2020\u2021\u02c6\u2030\u0160\u2039\u0152\u017d\u2018\u2019\u201c\u201d\u2022\u2013\u2014\u02dc\u2122\u0161\u203a\u0153\u017e\u0178\ufffd"
 
 
-def _make_mojibake_fixer(max_rounds: int):
-    """Build the ONE shared repair function ``fix_one(text) ->
-    (fixed_text, rounds_applied)`` — returned as a NESTED function so
-    cloudpickle serializes it BY VALUE into executor closures (a
-    module-level function pickles by reference and fails to import on
-    workers, the pandas-UDF seam rule); the unit oracle
-    ``_mojibake_fix_one`` calls the same factory, so the two paths
-    cannot drift (ADVICE r13). The damage score is one precompiled
-    character-class findall over C1 (U+0080-U+009F) + the marker set —
-    C-speed, replacing the per-character CPython loop (VERDICT r13
-    item 4; ~13x measured on clean 9 KB text — the common case, where
-    the score gates the whole loop; randomized old-vs-new equality held
-    on 3,000 adversarial strings over markers+C1+BMP)."""
-    import re as _re
-
-    mr = int(max_rounds)
-    pat = _re.compile(
-        "[\x80-\x9f" + _re.escape(_MOJIBAKE_MARKERS) + "]"
-    )
-    score = lambda t: len(pat.findall(t))  # noqa: E731
-
-    def fix_one(text):
-        rounds = 0
-        cur = text
-        cur_score = score(cur)
-        while rounds < mr and cur_score > 0:
-            try:
-                raw = cur.encode("cp1252")
-            except UnicodeEncodeError:
-                try:
-                    raw = cur.encode("latin-1")
-                except UnicodeEncodeError:
-                    break
-            try:
-                cand = raw.decode("utf-8")
-            except UnicodeDecodeError:
-                break
-            cand_score = score(cand)
-            if cand_score >= cur_score:
-                break
-            cur, cur_score = cand, cand_score
-            rounds += 1
-        return cur, rounds
-
-    return fix_one
+# the damage score is one precompiled character-class findall over C1
+# (U+0080-U+009F) + the marker set — C-speed (~13x over a per-character
+# loop on clean 9 KB text, the common case, where the score gates the
+# whole repair loop)
+_MOJIBAKE_RE = re.compile("[\x80-\x9f" + re.escape(_MOJIBAKE_MARKERS) + "]")
 
 
 def _mojibake_fix_one(text: str, max_rounds: int) -> tuple[str, int]:
-    """(fixed_text, rounds_applied) — the unit-oracle entry point; same
-    factory-built implementation the executor closure captures."""
-    return _make_mojibake_fixer(max_rounds)(text)
+    """(fixed_text, rounds_applied): undo up to ``max_rounds`` layers of
+    cp1252/latin-1 double decoding, each only if it strictly lowers the
+    damage score."""
+    rounds = 0
+    cur = text
+    cur_score = len(_MOJIBAKE_RE.findall(cur))
+    while rounds < max_rounds and cur_score > 0:
+        try:
+            raw = cur.encode("cp1252")
+        except UnicodeEncodeError:
+            try:
+                raw = cur.encode("latin-1")
+            except UnicodeEncodeError:
+                break
+        try:
+            cand = raw.decode("utf-8")
+        except UnicodeDecodeError:
+            break
+        cand_score = len(_MOJIBAKE_RE.findall(cand))
+        if cand_score >= cur_score:
+            break
+        cur, cur_score = cand, cand_score
+        rounds += 1
+    return cur, rounds
 
 
 def fix_mojibake(
@@ -1832,11 +1806,7 @@ def fix_mojibake(
         list(df.schema.fields)
         + [StructField(out, StringType()), StructField(rounds_col, IntegerType())]
     )
-    # the ONE shared implementation, captured as a factory-built nested
-    # function: cloudpickle ships it by value (closure cells = compiled
-    # regex + int, both picklable), so the executor needs no repo import
-    # and the unit oracle can never drift from this path (ADVICE r13)
-    fix_one = _make_mojibake_fixer(int(max_rounds))
+    mr = int(max_rounds)
 
     def _fix(batches):
         for pdf in batches:
@@ -1846,7 +1816,7 @@ def fix_mojibake(
                     fixed.append(None)
                     nr.append(0)
                 else:
-                    f, r = fix_one(t)
+                    f, r = _mojibake_fix_one(t, mr)
                     fixed.append(f)
                     nr.append(r)
             pdf = pdf.copy()
@@ -2087,54 +2057,13 @@ def lm_score_bigram(
     ``base`` (r17): a :func:`lm_token_base` bundle shares the tokenized
     ``d``/``tok``/``pairs`` frames with the other LM scorers — the
     frames are identical either way, so results are bit-identical
-    (pinned in tests/test_curation_ops.py); ``None`` keeps the self-contained
-    plan.
+    (pinned in tests/test_curation_ops.py); ``None`` builds the bundle
+    for this call alone.
     """
-    from talna_spark.pipeline.scan import fan_out
-
-    if base is not None:
-        d, tok, pairs = base["d"], base["tok"], base["pairs"]
-        w = F.col("_w")
-    else:
-        # with broadcast vocabs the scoring work runs INSIDE the scan
-        # stage, so a single-row-group source file serializes the whole
-        # operator onto one task — the shared TALNA_MIN_SCAN_TASKS
-        # fan-out spreads it (no-op at real scale and in the default
-        # configuration)
-        # tokens materialized once behind a lazy localCheckpoint (r12):
-        # the pair-struct transform's element_at(w, i) lambda CAPTURES
-        # w, so the inline split re-ran once per pair position (the
-        # captured-expression class; see dedup._tokenized)
-        d = fan_out(_docs(spark, sf_dir)).select(
-            "doc_id", tokens(F.col("text")).alias("_w")
-        ).localCheckpoint(eager=False)
-        w = F.col("_w")
-        # tok feeds uni (and through it totals/c1/cu); pairs feeds bi
-        # AND the scoring join — materialize both behind lazy
-        # localCheckpoints or the tokenize/split subtree re-evaluates
-        # once per consumer (the LSH planning-pathology class)
-        tok = d.select("doc_id", F.explode(w).alias("token")).localCheckpoint(
-            eager=False
-        )
-        pair_structs = F.when(
-            F.size(w) >= 2,
-            F.transform(
-                F.sequence(F.lit(2), F.size(w)),
-                lambda i: F.struct(
-                    F.element_at(w, i - 1).alias("t1"),
-                    F.element_at(w, i).alias("t2"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<t1:string,t2:string>>"))
-        pairs = (
-            d.select("doc_id", F.explode(pair_structs).alias("p"))
-            .select(
-                "doc_id",
-                F.col("p.t1").alias("t1"),
-                F.col("p.t2").alias("t2"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    if base is None:
+        base = lm_token_base(spark, sf_dir)
+    d, tok, pairs = base["d"], base["tok"], base["pairs"]
+    w = F.col("_w")
     uni = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     totals = uni.agg(
         F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("v_size")
@@ -2262,48 +2191,15 @@ def lm_score_trigram_kn(
 
     ``base`` (r17): a :func:`lm_token_base` bundle shares the tokenized
     ``d``/``tok``/``pairs`` frames with the other LM scorers — results
-    bit-identical either way (pinned in tests/test_curation_ops.py).
+    bit-identical either way (pinned in tests/test_curation_ops.py);
+    ``None`` builds the bundle for this call alone. Only the tris stream
+    is per-call (no other scorer consumes it).
     """
-    from talna_spark.pipeline.scan import fan_out
-
     D = float(LM3_DISCOUNT)
-    if base is not None:
-        # r17: shared lm_token_base bundle — same frames, same results
-        # (pinned in tests/test_curation_ops.py); only the tris stream stays
-        # per-op (no other scorer consumes it)
-        d, tok, pairs = base["d"], base["tok"], base["pairs"]
-        w = F.col("_w")
-    else:
-        # tokens materialized once (r12) — same captured-expression fix
-        # as lm_score_bigram: element_at(w, i) in the pair/tri struct
-        # lambdas re-ran the inline split per position
-        d = fan_out(_docs(spark, sf_dir)).select(
-            "doc_id", tokens(F.col("text")).alias("_w")
-        ).localCheckpoint(eager=False)
-        w = F.col("_w")
-
-        tok = d.select("doc_id", F.explode(w).alias("token")).localCheckpoint(
-            eager=False
-        )
-        pair_structs = F.when(
-            F.size(w) >= 2,
-            F.transform(
-                F.sequence(F.lit(2), F.size(w)),
-                lambda i: F.struct(
-                    F.element_at(w, i - 1).alias("t1"),
-                    F.element_at(w, i).alias("t2"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<t1:string,t2:string>>"))
-        pairs = (
-            d.select("doc_id", F.explode(pair_structs).alias("p"))
-            .select(
-                "doc_id",
-                F.col("p.t1").alias("t1"),
-                F.col("p.t2").alias("t2"),
-            )
-            .localCheckpoint(eager=False)
-        )
+    if base is None:
+        base = lm_token_base(spark, sf_dir)
+    d, tok, pairs = base["d"], base["tok"], base["pairs"]
+    w = F.col("_w")
     tri_structs = F.when(
         F.size(w) >= 3,
         F.transform(

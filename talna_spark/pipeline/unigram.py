@@ -69,11 +69,7 @@ def _viterbi(w: str, logp: dict, max_len: int, unk: float) -> list[str]:
     """Best segmentation of ``w`` under piece log-probs: DP over end
     positions, strict ``>`` improvement with ascending start index —
     fully deterministic for a fixed piece table. Single chars absent
-    from the table cost ``unk`` so the DP never dead-ends.
-
-    Kept module-level for the driver-side reference path; the Spark
-    closures INLINE a copy (executors' Python workers cannot import
-    talna_spark — see packing.py's self-contained-closure note)."""
+    from the table cost ``unk`` so the DP never dead-ends."""
     n = len(w)
     best = [0.0] + [float("-inf")] * n
     back = [0] * (n + 1)
@@ -188,79 +184,16 @@ def _e_step(
     soft = em == "soft"
 
     def _seg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        # inlined _viterbi (self-contained closure — see module docstring)
-        def viterbi(w):
-            n = len(w)
-            best = [0.0] + [float("-inf")] * n
-            back = [0] * (n + 1)
-            for j in range(1, n + 1):
-                for i in range(max(0, j - ml), j):
-                    p = pieces.get(w[i:j])
-                    if p is None and j - i == 1:
-                        p = unk
-                    if p is not None and best[i] + p > best[j]:
-                        best[j] = best[i] + p
-                        back[j] = i
-            out = []
-            j = n
-            while j > 0:
-                i = back[j]
-                out.append(w[i:j])
-                j = i
-            out.reverse()
-            return out
-
-        def lse(vals):
-            m = max(vals)
-            if m == float("-inf"):
-                return m
-            return m + math.log(sum(math.exp(v - m) for v in vals))
-
-        def posteriors(w):
-            """[(piece, posterior)] over every lattice edge — forward/
-            backward in log space, fixed ascending iteration order so
-            the floats match the pure-python reference bit-for-bit."""
-            n = len(w)
-            arcs = []  # (i, j, lp)
-            for j in range(1, n + 1):
-                for i in range(max(0, j - ml), j):
-                    p = pieces.get(w[i:j])
-                    if p is None and j - i == 1:
-                        p = unk
-                    if p is not None:
-                        arcs.append((i, j, p))
-            alpha = [0.0] + [float("-inf")] * n
-            for j in range(1, n + 1):
-                alpha[j] = lse(
-                    [
-                        alpha[i] + p
-                        for (i, jj, p) in arcs
-                        if jj == j
-                    ]
-                )
-            beta = [float("-inf")] * n + [0.0]
-            for i in range(n - 1, -1, -1):
-                beta[i] = lse(
-                    [p + beta[j] for (ii, j, p) in arcs if ii == i]
-                )
-            z = alpha[n]
-            return [
-                (w[i:j], math.exp(alpha[i] + p + beta[j] - z))
-                for (i, j, p) in arcs
-            ]
-
         for pdf in batches:
             local: dict[str, int] = {}
             for w, n in zip(pdf["word"], pdf["n"]):
                 if soft:
-                    for piece, post in posteriors(w):
+                    for piece, post in _posteriors(w, pieces, ml, unk):
                         m = int(math.floor(post * int(n) * 1e6 + 0.5))
                         if m:
                             local[piece] = local.get(piece, 0) + m
                 else:
-                    for piece in viterbi(w):
+                    for piece in _viterbi(w, pieces, ml, unk):
                         local[piece] = local.get(piece, 0) + int(n)
             yield pd.DataFrame(
                 {"piece": list(local), "c": list(local.values())}
@@ -283,9 +216,8 @@ def _posteriors(
     w: str, logp: dict, max_len: int, unk: float
 ) -> list[tuple[str, float]]:
     """Forward-backward posterior marginals over the segmentation
-    lattice — the module-level twin of the ``_seg`` closure's
-    ``posteriors`` (same fixed ascending iteration order, so the floats
-    match bit-for-bit; the closure inlines its copy for pickling)."""
+    lattice, in a fixed ascending iteration order so the floats are the
+    same in every engine and partitioning."""
     n = len(w)
     arcs = []  # (i, j, lp)
     for j in range(1, n + 1):
@@ -484,26 +416,9 @@ def unigram_encode(
 
         def viterbi_len(w):
             got = cache.get(w)
-            if got is not None:
-                return got
-            n = len(w)
-            best = [0.0] + [float("-inf")] * n
-            back = [0] * (n + 1)
-            for j in range(1, n + 1):
-                for i in range(max(0, j - ml), j):
-                    p = pieces.get(w[i:j])
-                    if p is None and j - i == 1:
-                        p = unk
-                    if p is not None and best[i] + p > best[j]:
-                        best[j] = best[i] + p
-                        back[j] = i
-            k = 0
-            j = n
-            while j > 0:
-                j = back[j]
-                k += 1
-            cache[w] = k
-            return k
+            if got is None:
+                got = cache[w] = len(_viterbi(w, pieces, ml, unk))
+            return got
 
         for pdf in batches:
             n_words, n_tok, n_chars = [], [], []
@@ -569,31 +484,12 @@ def unigram_encode_ids(
 
         def word_ids(w):
             got = cache.get(w)
-            if got is not None:
-                return got
-            n = len(w)
-            best = [0.0] + [float("-inf")] * n
-            back = [0] * (n + 1)
-            for j in range(1, n + 1):
-                for i in range(max(0, j - ml), j):
-                    p = pieces.get(w[i:j])
-                    if p is None and j - i == 1:
-                        p = unk
-                    if p is not None and best[i] + p > best[j]:
-                        best[j] = best[i] + p
-                        back[j] = i
-            segs = []
-            j = n
-            while j > 0:
-                i = back[j]
-                segs.append(w[i:j])
-                j = i
-            segs.reverse()
-            out = [
-                pid[p] if p in pid else unk_base + ord(p) for p in segs
-            ]
-            cache[w] = out
-            return out
+            if got is None:
+                got = cache[w] = [
+                    pid[p] if p in pid else unk_base + ord(p)
+                    for p in _viterbi(w, pieces, ml, unk)
+                ]
+            return got
 
         for pdf in batches:
             rows = []

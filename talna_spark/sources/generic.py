@@ -76,21 +76,6 @@ def points_from_csv(
     return points_from_table(df, metric=metric, ts=ts, value=value, tags=tags)
 
 
-def points_from_json(
-    spark,
-    path: str,
-    *,
-    metric: Column,
-    ts: Column,
-    value: Column,
-    tags: Mapping[str, Column],
-    **reader_options,
-) -> DataFrame:
-    """JSON-lines convenience wrapper."""
-    df = spark.read.options(**reader_options).json(path)
-    return points_from_table(df, metric=metric, ts=ts, value=value, tags=tags)
-
-
 def documents_from_jsonl(
     spark,
     path_glob: str,

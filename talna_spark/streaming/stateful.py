@@ -76,7 +76,6 @@ def greedy_rollup_stream(
     kind_b = kind
     w = int(width_ns)
 
-    # closure must be self-contained (executors lack this repo on sys.path)
     def _roll(key, pdfs, state):
         import pandas as pd  # noqa: F401 (worker-side import)
 

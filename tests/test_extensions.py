@@ -694,6 +694,26 @@ def test_curate_declared_schema_widens_and_projects(spark, tmp_path):
         curate(spark, str(bad)).collect()
 
 
+def test_read_documents_missing_column_raises(spark, tmp_path):
+    """A documents file without a column a reader names fails loudly
+    with a typed error that names the column, instead of reading it as
+    NULL on every row under the declared schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from talna_spark.errors import MissingColumnError
+    from talna_spark.pipeline.scan import read_documents
+
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2], pa.int64()),
+                  "source": pa.array(["a", "b"])}),
+        tmp_path / "documents.parquet",
+    )
+    with pytest.raises(MissingColumnError, match="text"):
+        read_documents(spark, str(tmp_path), "doc_id", "text")
+    assert read_documents(spark, str(tmp_path), "doc_id", "source").count() == 2
+
+
 # ------------------------------------------------------------- histogram
 def test_histogram_matches_duckdb_and_counts_everything(spark):
     """Per-bucket value histogram: Spark and the DuckDB twin agree

@@ -1026,145 +1026,6 @@ def test_layer1_corruption_fails_loudly(spark):
     assert decode(blob)[0]["n_frames"] == 2
 
 
-# ------------------- Layer I synthesis filterbank (r10: code complete,
-# window data vendored separately — see load_dewindow)
-def _l1_granules(did: int):
-    """Independent granule reconstruction from the WRITER's arithmetic
-    (layer1_media_table docstring) — no bit reader involved, so a
-    decoder-side frame-walk bug cannot cancel out."""
-    out = []
-    for f in range(2 + did % 3):
-        for s in range(12):
-            S = [0.0] * 32
-            for sb in range(8):
-                nb = 2 + (did + sb) % 3
-                k = (did + sb) % 21
-                c = (did * 7 + f * 5 + s * 3 + sb) % ((1 << nb) - 1)
-                sf = 2.0 * 2.0 ** (-(3 * k) / 3.0)
-                S[sb] = sf * (
-                    ((1 << nb) / ((1 << nb) - 1.0))
-                    * ((c + 1) * 2.0 ** (1 - nb) - 1.0)
-                )
-            out.append(S)
-    return out
-
-
-def _ref_synth(granules, D):
-    """Independent transcription of ISO 11172-3 §2.4.3.2 (list-rebuild
-    style, vs the implementation's in-place FIFO)."""
-    import math
-
-    def away(v):
-        return int(math.floor(abs(v) + 0.5) * (1 if v >= 0 else -1))
-
-    V = [0.0] * 1024
-    peak, checksum, idx = 0, 0, 0
-    for S in granules:
-        new = []
-        for i in range(64):
-            acc = 0.0
-            for k in range(32):
-                acc += math.cos((16 + i) * (2 * k + 1) * math.pi / 64.0) * S[k]
-            new.append(acc)
-        V = new + V[:960]
-        U = []
-        for seg in range(8):
-            U += V[seg * 128 : seg * 128 + 32]
-            U += V[seg * 128 + 96 : seg * 128 + 128]
-        W = [U[i] * D[i] for i in range(512)]
-        for j in range(32):
-            acc = 0.0
-            for t in range(16):
-                acc += W[j + 32 * t]
-            m = away(acc * 1e6)
-            peak = max(peak, abs(m))
-            checksum += m * (idx + 1)
-            idx += 1
-    return idx, peak, checksum
-
-
-def test_layer1_pcm_requires_vendored_window(spark):
-    import pytest
-
-    from talna_spark.pipeline.multimodal import (
-        layer1_media_table, layer1_pcm_payloads, load_dewindow,
-    )
-
-    with pytest.raises(NotImplementedError, match="B.3"):
-        load_dewindow()
-    media = layer1_media_table(spark, "/root/testdata/sf0.001")
-    with pytest.raises(NotImplementedError, match="mpeg_dewindow"):
-        layer1_pcm_payloads(media)  # window resolution is driver-side
-
-
-def test_load_dewindow_parses_and_validates(tmp_path):
-    import pytest
-
-    from talna_spark.pipeline.multimodal import load_dewindow
-
-    p = tmp_path / "win.dat"
-    p.write_text(
-        "# provenance: test fixture\n"
-        + "\n".join(f"{i / 512.0}  # tap {i}" for i in range(512))
-        + "\n"
-    )
-    w = load_dewindow(str(p))
-    assert len(w) == 512 and w[256] == 0.5
-
-    p2 = tmp_path / "short.dat"
-    p2.write_text("\n".join("0.0" for _ in range(511)))
-    with pytest.raises(ValueError, match="512"):
-        load_dewindow(str(p2))
-
-
-def test_layer1_pcm_delta_window_isolates_matrixing(spark):
-    """D = 1 on taps 0..31, 0 elsewhere -> each granule's PCM equals its
-    OWN freshly-matrixed V[0..32): pins matrixing, the U re-ordering of
-    segment 0, and the per-granule FIFO insert, with no spec data."""
-    from talna_spark.pipeline.multimodal import (
-        layer1_media_table, layer1_pcm_payloads,
-    )
-
-    D = tuple([1.0] * 32 + [0.0] * 480)
-    docs = [3, 7, 11]  # covers all three n_frames variants
-    df = spark.createDataFrame(
-        [(d,) for d in docs], "doc_id long"
-    ).join(
-        layer1_media_table(spark, "/root/testdata/sf0.001"), "doc_id"
-    )
-    got = {r["doc_id"]: r for r in layer1_pcm_payloads(df, window=D).collect()}
-    for did in docs:
-        n_pcm, peak, cks = _ref_synth(_l1_granules(did), list(D))
-        assert got[did]["n_pcm"] == n_pcm
-        assert got[did]["peak_micro"] == peak
-        assert got[did]["pcm_checksum"] == cks, did
-
-
-def test_layer1_pcm_full_parity_synthetic_window(spark):
-    """Full filterbank parity — matrixing, 1024-value FIFO history, all
-    8 U segments, all 16 overlap-add taps — against the independent
-    reference transcription, under a dense synthetic window."""
-    from talna_spark.pipeline.multimodal import (
-        layer1_media_table, layer1_pcm_payloads,
-    )
-
-    D = tuple(((i * 37) % 101 - 50) / 100.0 for i in range(512))
-    docs = [0, 1, 2, 5, 9]
-    df = spark.createDataFrame(
-        [(d,) for d in docs], "doc_id long"
-    ).join(
-        layer1_media_table(spark, "/root/testdata/sf0.001"), "doc_id"
-    )
-    got = {r["doc_id"]: r for r in layer1_pcm_payloads(df, window=D).collect()}
-    assert set(got) == set(docs)
-    for did in docs:
-        n_pcm, peak, cks = _ref_synth(_l1_granules(did), list(D))
-        assert got[did]["n_pcm"] == n_pcm == (2 + did % 3) * 384
-        assert got[did]["peak_micro"] == peak
-        assert got[did]["pcm_checksum"] == cks, did
-        assert peak > 0  # non-trivial audio actually flowed through
-
-
 # ----------------------------- image resize (r10)
 def test_bmp_resize_hand_case(spark):
     """Hand-built 3x2 BMP, factor 2: out dims 2x1; block (0,0) averages
