@@ -941,8 +941,11 @@ def main() -> None:
         # broadcasts, ZERO ref shuffle. OFF: each batch pays md5 +
         # distinct + a 4M-row semi-join. Batches run as SEPARATE
         # actions (like real crawls) so the OFF exchanges cannot be
-        # reused across batches. Measured (interleaved, warm):
-        # ON 6.1 s vs OFF 11.2 s — the sketch wins 1.8x at B=3.
+        # reused across batches. The sketch does NOT win at this shape
+        # today: the r18 bench round read ON 30.99 s vs OFF 14.81 s, and
+        # three interleaved pairs (sf0.1, local[4]) read ON 75.5-78.7 s
+        # vs OFF 66.8-72.2 s, ON winning 0/3. m = 2^24 is the join
+        # regime (m/64 > BLOOM_LITERAL_WORDS); see ROADMAP.md open item 1.
         _BLOOM_AM_M = 1 << 24
         _BLOOM_AM_K = 2
         _BLOOM_AM_MULT = 800

@@ -16,10 +16,13 @@ Prints one line per run (seed, side, timed ops, attempted, failed,
 correct), then for every metric of the runs' result lines that is not
 zero in every run each side's
 median and quartiles, the relative change of the medians, the number
-of pairs B won (the direction comes from BENCHMARK.json) and A's
-interquartile range. ``--seconds`` defaults to BENCHMARK.json's
-``run_seconds``. ``--json``
-saves the runs' result lines and timed-op counts.
+of pairs B won (the direction comes from BENCHMARK.json), A's
+interquartile range and the run-order effect: the median over pairs of
+(first run - second run) / second run, whichever side ran first. A
+change far smaller than the order effect is run order, not the code.
+``--seconds`` defaults to BENCHMARK.json's ``run_seconds``. ``--json``
+saves the runs' result lines, timed-op counts and which side ran
+first.
 """
 
 from __future__ import annotations
@@ -103,17 +106,18 @@ def directions() -> dict:
 
 
 def summarize(pairs: list) -> list:
-    """Report lines for the metrics of (seed, A result, B result) pairs."""
+    """Report lines for the metrics of (seed, A result, B result, side
+    that ran first) pairs."""
     better = directions()
     names = sorted(pairs[0][1]["metrics"])
     out = [
         f"{'metric':34} {'A median [q1, q3]':>28} {'B median [q1, q3]':>28}"
-        f" {'change':>8} {'B wins':>7} {'A IQR':>9}"
+        f" {'change':>8} {'B wins':>7} {'A IQR':>9} {'order':>8}"
     ]
     for name in names:
         got = [
             (a["metrics"][name]["value"], b["metrics"][name]["value"])
-            for _s, a, b in pairs
+            for _s, a, b, _f in pairs
         ]
         if not any(x or y for x, y in got):
             continue  # a metric of another workload
@@ -127,9 +131,17 @@ def summarize(pairs: list) -> list:
             else "-"
         )
         a_q, b_q = (f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]" for q in (qa, qb))
+        first_second = [
+            (x, y) if first == "A" else (y, x)
+            for (x, y), (*_r, first) in zip(got, pairs)
+        ]
+        order = quartiles(
+            [(f - s) / abs(s) * 100 if s else float("nan")
+             for f, s in first_second]
+        )[1]
         out.append(
             f"{name:34} {a_q:>28} {b_q:>28} {change:>+7.1f}% {wins:>7}"
-            f" {qa[2] - qa[0]:>9.4g}"
+            f" {qa[2] - qa[0]:>9.4g} {order:>+7.1f}%"
         )
     return out
 
@@ -153,7 +165,8 @@ def main(argv=None) -> int:
         pairs = []
         for i, seed in enumerate(parse_seeds(args.seeds)):
             res = {}
-            for side in ("AB" if i % 2 == 0 else "BA"):
+            order = "AB" if i % 2 == 0 else "BA"
+            for side in order:
                 r = res[side] = run_bench(trees[side], args, seed)
                 print(
                     f"pair {i} seed {seed} {side}: timed ops {r['timed_ops']}, "
@@ -161,14 +174,15 @@ def main(argv=None) -> int:
                     f"correct {r['correct']}",
                     flush=True,
                 )
-            pairs.append((seed, res["A"], res["B"]))
+            pairs.append((seed, res["A"], res["B"], order[0]))
         print(f"\n{args.workload}, A = {args.ref}, B = {ROOT}, "
               f"{len(pairs)} pairs, --seconds {args.seconds} --trace {args.trace}")
         print("\n".join(summarize(pairs)))
         if args.json:
             with open(args.json, "w") as f:
                 json.dump({"args": vars(args), "pairs": [
-                    {"seed": s, "A": a, "B": b} for s, a, b in pairs
+                    {"seed": s, "A": a, "B": b, "first": f}
+                    for s, a, b, f in pairs
                 ]}, f, indent=1)
     finally:
         shutil.rmtree(work, ignore_errors=True)

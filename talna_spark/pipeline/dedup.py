@@ -34,6 +34,7 @@ from talna_spark.pipeline.portable import (
     tokens_sql,
 )
 from talna_spark.pipeline.scan import fan_out
+from talna_spark.pipeline.sketches import _bitmap_words, lc_merge
 
 SHINGLE_K = 3          # word 3-grams
 MINHASH_H = 8          # hash functions
@@ -817,16 +818,11 @@ SPAN_K = 5  # word 5-grams: the unit of cross-document span duplication
 def _positional_gram_hashes(words, k: int):
     """hash64 of every POSITIONAL word k-gram (overlapping, repeats kept
     — unlike :func:`portable.shingles`, which is the distinct set).
-    Empty when the doc has < k words; Spark's sequence(1, n<=0) counts
-    DOWN, so the guard is explicit."""
-    n = F.size(words) - (k - 1)
-    return F.when(
-        n >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: hash64(F.array_join(F.slice(words, i, k), " ")),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
+    Empty when the doc has < k words (the :func:`portable.grams`
+    guard)."""
+    from talna_spark.pipeline.portable import grams
+
+    return F.transform(grams(words, k), hash64)
 
 
 def _positional_gram_hashes_sql(words_expr: str, k: int) -> str:
@@ -861,27 +857,9 @@ def dup_spans(
     pipeline.text.repetition); >= 2 distinct documents must share the
     gram.
     """
-    dw = _tokenized(fan_out(_docs(spark, sf_dir)), tokens(F.col("text")))
-    # (doc_id, gram_hash) computed ONCE behind a lazy localCheckpoint:
-    # three consumers (dup set, per-doc count, final join) would
-    # otherwise each re-evaluate the md5 transform — the LSH planning
-    # pathology class (measured 27s -> ~4s at sf0.1)
-    pos = dw.select(
-        "doc_id",
-        F.explode(
-            _positional_gram_hashes(F.col("_w"), k)
-        ).alias("h"),
-    ).localCheckpoint(eager=False)
-    dup = (
-        pos.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    dcount = (
-        pos.join(dup, "h")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("dup_positions"))
+    dw, dpos = _dup_positions(spark, sf_dir, k)
+    dcount = dpos.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("dup_positions")
     )
     # n_grams needs no hashing at all — it is a pure token-count formula
     n_grams = F.greatest(F.size("_w") - (k - 1), F.lit(0))
@@ -959,6 +937,48 @@ def _tokenized(d, arr_expr) -> DataFrame:
     )
 
 
+def _dup_positions(spark: SparkSession, sf_dir: str, k: int) -> tuple:
+    """(dw, dpos): the tokenized documents (doc_id, _w) and every
+    DUPLICATED positional k-gram (h, doc_id, p), p = the 0-based gram
+    start — a gram is duplicated when >= 2 distinct documents hold it.
+    The one gram-position scan behind :func:`dup_spans`,
+    :func:`dup_span_clean` and :func:`dup_span_maximal`."""
+    dw = _tokenized(fan_out(_docs(spark, sf_dir)), tokens(F.col("text")))
+    # (doc_id, p, gram_hash) computed ONCE behind a lazy localCheckpoint:
+    # its consumers (dup set, the duplicated-position join) would
+    # otherwise each re-evaluate the md5 transform — the LSH planning
+    # pathology class (measured 27s -> ~4s at sf0.1)
+    pos = dw.select(
+        "doc_id",
+        F.posexplode(_positional_gram_hashes(F.col("_w"), k)).alias("p", "h"),
+    ).localCheckpoint(eager=False)
+    dup = (
+        pos.groupBy("h")
+        .agg(F.countDistinct("doc_id").alias("nd"))
+        .filter(F.col("nd") >= 2)
+        .select("h")
+    )
+    return dw, pos.join(dup, "h")
+
+
+def _covered(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """(doc_id, _w, cov): each document with the SORTED 0-based indices
+    of the tokens its duplicated k-grams cover (empty when none) — one
+    (doc_id)-keyed aggregate over id rows."""
+    dw, dpos = _dup_positions(spark, sf_dir, k)
+    cov = (
+        dpos.select(
+            "doc_id",
+            F.explode(F.sequence(F.col("p"), F.col("p") + (k - 1))).alias("t"),
+        )
+        .groupBy("doc_id")
+        .agg(F.array_sort(F.collect_set("t")).alias("cov"))
+    )
+    return dw.join(cov, "doc_id", "left").withColumn(
+        "cov", F.coalesce("cov", F.array().cast("array<int>"))
+    )
+
+
 def dup_span_clean(
     spark: SparkSession,
     sf_dir: str,
@@ -978,35 +998,9 @@ def dup_span_clean(
     one (doc_id, token_index) coverage aggregate; the rebuild is a
     map-side indexed filter over the token array — text never crosses an
     Exchange."""
-    dw = _tokenized(fan_out(_docs(spark, sf_dir)), tokens(F.col("text")))
-    pos = dw.select(
-        "doc_id",
-        F.posexplode(
-            _positional_gram_hashes(F.col("_w"), k)
-        ).alias("p", "h"),  # p = 0-based gram start = covered-token base
-    ).localCheckpoint(eager=False)
-    dup = (
-        pos.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    covered = (
-        pos.join(dup, "h")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("p"), F.col("p") + (k - 1))
-            ).alias("t"),
-        )
-        .groupBy("doc_id")
-        .agg(F.collect_set("t").alias("cov"))
-    )
     kept = _kept_by_index(F.col("_w"), F.col("cov"))
-    empty = F.array().cast("array<int>")
     return (
-        dw.join(covered, "doc_id", "left")
-        .withColumn("cov", F.coalesce("cov", empty))
+        _covered(spark, sf_dir, k)
         .withColumn("_kept", kept)
         .select(
             "doc_id",
@@ -1019,8 +1013,9 @@ def dup_span_clean(
     )
 
 
-def dup_span_clean_sql(k: int = SPAN_K) -> str:
-    w = tokens_sql("text")
+def _covered_sql(w: str, k: int) -> str:
+    """The CTE prefix of the clean/maximal twins: gram positions, the
+    duplicated set and the covered (doc_id, t) token indices."""
     gh = _positional_gram_hashes_sql(w, k)
     return (
         # pos.i is 1-based (generate_series over the gram list), so the
@@ -1033,7 +1028,14 @@ def dup_span_clean_sql(k: int = SPAN_K) -> str:
         "cov AS (SELECT DISTINCT doc_id, "
         f"unnest(generate_series(i - 1, i + {k - 2})) AS t "
         "FROM pos JOIN dup USING (h)), "
-        f"toks AS (SELECT doc_id, ({w})[idx] AS tok, idx "
+    )
+
+
+def dup_span_clean_sql(k: int = SPAN_K) -> str:
+    w = tokens_sql("text")
+    return (
+        _covered_sql(w, k)
+        + f"toks AS (SELECT doc_id, ({w})[idx] AS tok, idx "
         f"FROM documents, unnest(generate_series(1, len({w}))) AS s(idx)), "
         "clean AS (SELECT tk.doc_id, "
         "COUNT(*) AS kept, string_agg(tk.tok, ' ' ORDER BY tk.idx) AS txt "
@@ -1085,30 +1087,6 @@ def dup_span_maximal(
             f"min_tokens must be >= k ({k}): a duplicated run always "
             "covers at least one whole k-gram"
         )
-    dw = _tokenized(fan_out(_docs(spark, sf_dir)), tokens(F.col("text")))
-    pos = dw.select(
-        "doc_id",
-        F.posexplode(
-            _positional_gram_hashes(F.col("_w"), k)
-        ).alias("p", "h"),
-    ).localCheckpoint(eager=False)
-    dup = (
-        pos.groupBy("h")
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    covered = (
-        pos.join(dup, "h")
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("p"), F.col("p") + (k - 1))
-            ).alias("t"),
-        )
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_set("t")).alias("cov"))
-    )
     # coalesce consecutive covered indices into maximal runs, keep runs
     # >= min_tokens: one JVM aggregate() fold per doc over the sorted
     # array — acc = (rem: removal set so far, run: current open run,
@@ -1146,8 +1124,7 @@ def dup_span_maximal(
     )
     kept = _kept_by_index(F.col("_w"), F.col("rem"))
     return (
-        dw.join(covered, "doc_id", "left")
-        .withColumn("cov", F.coalesce("cov", empty_i))
+        _covered(spark, sf_dir, k)
         .withColumn("_f", fold)
         .withColumn("rem", F.col("_f.rem"))
         .withColumn("_kept", kept)
@@ -1169,18 +1146,10 @@ def dup_span_maximal_sql(
     covered indices) instead of the Spark-side fold — same maximal
     runs, same threshold, same reconstruction."""
     w = tokens_sql("text")
-    gh = _positional_gram_hashes_sql(w, k)
     mt = int(min_tokens)
     return (
-        f"WITH g AS (SELECT doc_id, {gh} AS gh FROM documents), "
-        "pos AS (SELECT doc_id, i, gh[i] AS h FROM g, "
-        "unnest(generate_series(1, len(gh))) AS u(i)), "
-        "dup AS (SELECT h FROM pos GROUP BY h "
-        "HAVING COUNT(DISTINCT doc_id) >= 2), "
-        "cov AS (SELECT DISTINCT doc_id, "
-        f"unnest(generate_series(i - 1, i + {k - 2})) AS t "
-        "FROM pos JOIN dup USING (h)), "
-        "isl AS (SELECT doc_id, t, t - ROW_NUMBER() OVER "
+        _covered_sql(w, k)
+        + "isl AS (SELECT doc_id, t, t - ROW_NUMBER() OVER "
         "(PARTITION BY doc_id ORDER BY t) AS grp FROM cov), "
         "runs AS (SELECT doc_id, grp, COUNT(*) AS len FROM isl "
         "GROUP BY doc_id, grp), "
@@ -1282,28 +1251,14 @@ def bloom_build(
     produce a NULL cell that breaks the collected word list; NULL-text
     reference docs reach here as md5(NULL))."""
     pos = F.array(*_bloom_positions(F.col(col), m, k))
-    return (
-        d.filter(F.col(col).isNotNull())
-        .select(F.explode(pos).alias("p"))
-        .select(
-            F.shiftright(F.col("p"), 6).alias("word_idx"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))").alias(
-                "mask"
-            ),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
+    return _bitmap_words(d, col, F.explode(pos))
 
 
-def bloom_merge(*bitmaps: DataFrame) -> DataFrame:
-    """OR together bitmaps built with the same (m, k) — the shard-merge
-    property that makes the sketch buildable incrementally (tested:
-    merge of per-shard bitmaps == bitmap of the union)."""
-    out = bitmaps[0]
-    for bm in bitmaps[1:]:
-        out = out.unionByName(bm)
-    return out.groupBy("word_idx").agg(F.bit_or("bits").alias("bits"))
+# OR together bitmaps built with the same (m, k) — the shard-merge
+# property that makes the sketch buildable incrementally (tested: merge
+# of per-shard bitmaps == bitmap of the union). A Bloom bitmap merges
+# exactly as a linear-counting bitmap does, so it is the same function.
+bloom_merge = lc_merge
 
 
 def bloom_to_words(bm: DataFrame, m: int = BLOOM_BITS) -> list[int]:

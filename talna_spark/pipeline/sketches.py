@@ -11,7 +11,8 @@ either too big to broadcast or must merge across shards/streams:
   the union (tested) — the merge property that makes it buildable
   incrementally and usable as broadcast state for a stream.
 - Bloom membership lives in pipeline.dedup (bloom_build — same
-  discipline, bit_or instead of sum).
+  discipline, bit_or instead of sum; it builds and merges its bitmap
+  with this module's linear-counting bitmap code).
 - BOTTOM-K (this module; Broder 1997 / Beyer et al. 2007): the k
   smallest distinct hashes — resemblance, containment AND cardinality
   (the KMV estimator) of value sets from k-row sketches; merge = union
@@ -44,10 +45,23 @@ CMS_W = 1 << 12  # counters per hash row (the collision dial)
 CMS_D = 4        # hash rows (the confidence dial)
 
 
-def _cms_pos(col, i: int, w: int):
-    """Row-i counter index of a key — one independent md5-based hash
-    per row (prefix 'cm{i}|'), reduced mod w."""
-    return hash64(F.concat(F.lit(f"cm{i}|"), col)) % F.lit(int(w))
+def _cms_cells(col, w: int, depth: int):
+    """The ``depth`` probe cells of a key, exploded as ``rc`` structs
+    (r, c): row r's counter index is one independent md5-based hash
+    per row (prefix 'cm{r}|'), reduced mod w."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("r"),
+                    (
+                        hash64(F.concat(F.lit(f"cm{i}|"), col)) % F.lit(int(w))
+                    ).alias("c"),
+                )
+                for i in range(int(depth))
+            ]
+        )
+    ).alias("rc")
 
 
 def cms_build(
@@ -65,17 +79,7 @@ def cms_build(
     if int(w) < 1 or int(depth) < 1:
         raise ValueError("w and depth must be >= 1")
     cells = d.filter(F.col(col).isNotNull()).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("r"),
-                        _cms_pos(F.col(col), i, w).alias("c"),
-                    )
-                    for i in range(int(depth))
-                ]
-            )
-        ).alias("rc")
+        _cms_cells(F.col(col), w, depth)
     )
     return (
         cells.groupBy(
@@ -107,20 +111,9 @@ def cms_estimate(
     (tested both ways). Plan: explode d probes per key, one join
     against the sketch-sized cell table, one min hash-agg — only
     (key, r, c) rows shuffle."""
-    probes = keys.select(
-        col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("r"),
-                        _cms_pos(F.col(col), i, w).alias("c"),
-                    )
-                    for i in range(int(depth))
-                ]
-            )
-        ).alias("rc"),
-    ).select(col, F.col("rc.r").alias("r"), F.col("rc.c").alias("c"))
+    probes = keys.select(col, _cms_cells(F.col(col), w, depth)).select(
+        col, F.col("rc.r").alias("r"), F.col("rc.c").alias("c")
+    )
     return (
         probes.join(F.broadcast(sketch), ["r", "c"], "left")
         .groupBy(col)
@@ -174,6 +167,15 @@ def lc_build(d: DataFrame, col: str, m: int = LC_M) -> DataFrame:
     if int(m) < 64 or int(m) % 64 != 0:
         raise ValueError("m must be a positive multiple of 64")
     p = hash64(F.concat(F.lit("lc|"), F.col(col))) % F.lit(int(m))
+    return _bitmap_words(d, col, p)
+
+
+def _bitmap_words(d: DataFrame, col: str, p) -> DataFrame:
+    """(word_idx, bits): the int64-word bitmap with bit ``p`` set for
+    every row whose ``col`` is not NULL — ``p`` is a bit-position
+    column, or an explode of several. ONE map-side projection + ONE
+    bit_or hash-agg (map-side partials) with one row per touched word.
+    The builder of both :func:`lc_build` and dedup.bloom_build."""
     return (
         d.filter(F.col(col).isNotNull())
         .select(p.alias("p"))
@@ -191,7 +193,9 @@ def lc_build(d: DataFrame, col: str, m: int = LC_M) -> DataFrame:
 def lc_merge(*bitmaps: DataFrame) -> DataFrame:
     """OR together bitmaps built with the same m: the bitmap of the
     union of the shards (tested cell-identical) — incremental and
-    per-shard parallel builds compose."""
+    per-shard parallel builds compose. Bloom bitmaps built with the
+    same (m, k) merge the same way (dedup.bloom_merge is this
+    function)."""
     out = bitmaps[0]
     for bm in bitmaps[1:]:
         out = out.unionByName(bm)

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from talna_spark.pipeline.portable import (
+    grams,
     shingles,
     shingles_sql,
     tokens,
@@ -755,20 +756,6 @@ def token_heavy_hitters(
 REP_GRAM_K = 3
 
 
-def _grams(words, k: int) -> "F.Column":
-    """ALL word k-grams in order (unlike portable.shingles, which
-    canonicalizes to a distinct sorted set — repetition needs the
-    multiset)."""
-    n = F.size(words) - (k - 1)
-    return F.when(
-        n >= 1,
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.array_join(F.slice(words, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals per document — the boilerplate /
     degenerate-text detector: duplicated k-gram fraction (1 -
@@ -796,7 +783,7 @@ def repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", tokens(F.col("text")).alias("_w")
     ).localCheckpoint(eager=False)
     w = F.col("_w")
-    g = _grams(w, REP_GRAM_K)
+    g = grams(w, REP_GRAM_K)
     n_g = F.size(w) - F.lit(REP_GRAM_K - 1)
     dup_frac = F.when(
         n_g > 0,

@@ -303,6 +303,45 @@ def test_trained_ivf_full_probe_equals_brute_force(spark):
     assert tr == bf
 
 
+def test_trained_ivf_partial_probe_stays_in_probed_clusters(spark):
+    """At nprobe < full, every neighbor ivf_topk_trained returns lies in
+    one of its query's nprobe nearest trained centroids, and carries the
+    brute-force cosine — probing prunes candidates, it never changes how
+    a candidate scores."""
+    import numpy as np
+
+    from talna_spark.pipeline.similarity import (
+        IVF_CENTROIDS, N_QUERIES, ivf_topk, ivf_topk_trained, kmeans_assign,
+        kmeans_centroids,
+    )
+
+    sf = "/root/testdata/sf0.001"
+    e = _emb(spark, sf)
+    # the same deterministic training ivf_topk_trained runs internally
+    cents, _ = kmeans_centroids(e, k=IVF_CENTROIDS, iters=3)
+    cluster = {
+        r["vec_id"]: r["cluster"]
+        for r in kmeans_assign(e, cents).select("vec_id", "cluster").collect()
+    }
+    c = np.array(cents)
+    qd2 = {
+        r["vec_id"]: ((c - np.array(r["v"])) ** 2).sum(axis=1)
+        for r in e.filter(F.col("vec_id") < N_QUERIES).collect()
+    }
+    # every brute-force score: the seed IVF at full probe IS brute force
+    full = {
+        (r["query_id"], r["neighbor_id"]): r["cos"]
+        for r in ivf_topk(spark, sf, nprobe=IVF_CENTROIDS, k=10**6).collect()
+    }
+    got = ivf_topk_trained(spark, sf, iters=3, nprobe=2).collect()
+    assert got, "nprobe=2 returned nothing"
+    for r in got:
+        d2 = qd2[r["query_id"]]
+        # 1e-6 slack: the engine ranks centroids on 6-dp-rounded d2
+        assert d2[cluster[r["neighbor_id"]]] <= np.sort(d2)[1] + 1e-6, r
+        assert full[(r["query_id"], r["neighbor_id"])] == r["cos"], r
+
+
 def test_kmeans_assign_is_map_side_only(spark):
     # the literal-argmin contract: nothing corpus-sized crosses an
     # Exchange during assignment — no join, no window, no shuffle

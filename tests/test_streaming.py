@@ -249,15 +249,15 @@ def test_map_only_pipeline_ops_run_on_streams(spark, dirs):
     # just in batch passes
     from pyspark.sql import functions as F
 
-    from talna_spark.pipeline.portable import tokens
-    from talna_spark.pipeline.text import _grams, REP_GRAM_K
+    from talna_spark.pipeline.portable import grams, tokens
+    from talna_spark.pipeline.text import REP_GRAM_K
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.limit(100).write.mode("append").parquet(dirs["src"])
     stream = spark.readStream.schema(docs.schema).parquet(dirs["src"])
 
     w = tokens(F.col("text"))
-    g = _grams(w, REP_GRAM_K)
+    g = grams(w, REP_GRAM_K)
     scored = stream.select(
         "doc_id",
         F.size(w).alias("n_tokens"),
