@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from talna_spark.errors import InvalidValueError
 from talna_spark.schema import RESULT_SCHEMA
 
 AGG_KINDS = ("avg", "sum", "min", "max", "count")
@@ -241,14 +242,14 @@ def aligned_buckets(
     return out.select("grp", "start_ts", "end_ts", "value", "len")
 
 
-def _greedy_segment_ids(ts_desc: np.ndarray, width: int) -> np.ndarray:
-    """Segment a DESC-sorted int64 ts array per the reference's greedy rule.
-
-    Port of the loop at src/agg/stream.rs:60-97: the first (newest)
-    point anchors ``end``; a point joins while ``end - ts <= width``
-    (inclusive, line 76); otherwise the bucket closes and the point
-    RE-ANCHORS the next bucket. Returns a bucket id per element
-    (0-based, newest bucket 0).
+def _greedy_starts(pdf: pd.DataFrame, w: int, forced=None) -> np.ndarray:
+    """Greedy anchor scan (reference loop src/agg/stream.rs:60-97) over
+    rows sorted (grp ASC, ts DESC): a segment starts at every group
+    change, at every row flagged in ``forced``, and wherever the open
+    bucket's anchor (its newest point) is more than ``w`` newer than the
+    row (a point joins while ``end - ts <= width``, inclusive, line 76).
+    Plain python lists in the loop (numpy scalar indexing is ~20x
+    slower). Returns segment start indices.
 
     DOCUMENTED DEVIATION (boundary-point semantics, adjudicated r14):
     the reference's else branch (src/agg/stream.rs:81-86) consumes the
@@ -259,64 +260,11 @@ def _greedy_segment_ids(ts_desc: np.ndarray, width: int) -> np.ndarray:
     (value, len contribution, and timestamp) at every greedy bucket
     boundary. The reference has no test exercising a boundary (no test
     calls ``granularity``), and losing data is almost certainly a talna
-    bug. This engine and its oracle twin (oracle.py ``_greedy_runs``)
+    bug. This scan and its oracle twin (oracle.py ``_greedy_runs``)
     instead RE-ANCHOR: the closing point becomes the first member of the
     next bucket — the semantics the reference's own comments describe.
     Pinned by tests/test_greedy.py::test_boundary_point_reanchors; see
-    ``_greedy_segment_ids_drop_boundary`` for the bit-faithful variant.
-    """
-    n = ts_desc.shape[0]
-    ids = np.empty(n, dtype=np.int64)
-    bucket = 0
-    anchor = ts_desc[0] if n else 0
-    for i in range(n):
-        if anchor - ts_desc[i] > width:
-            bucket += 1
-            anchor = ts_desc[i]
-        ids[i] = bucket
-    return ids
-
-
-def _greedy_segment_ids_drop_boundary(ts_desc: np.ndarray, width: int) -> np.ndarray:
-    """Bit-faithful variant of :func:`_greedy_segment_ids` reproducing the
-    reference's ACTUAL boundary behavior (src/agg/stream.rs:81-86): the
-    point whose arrival closes a bucket is consumed and DROPPED — it joins
-    no bucket — and the following point initializes the next bucket.
-
-    Returns a bucket id per element, with ``-1`` marking dropped boundary
-    points. Not used by any query path (the shipped semantics re-anchor,
-    see :func:`_greedy_segment_ids`); exists so the deviation is pinned
-    executable, not just prose — tests/test_greedy.py compares the two on
-    the boundary fixture and asserts exactly where they differ.
-    """
-    n = ts_desc.shape[0]
-    ids = np.empty(n, dtype=np.int64)
-    bucket = -1
-    anchor = None
-    for i in range(n):
-        t = ts_desc[i]
-        if anchor is None:
-            # stream.rs:67-73 — initialize bucket from this point
-            bucket += 1
-            anchor = t
-            ids[i] = bucket
-        elif anchor - t <= width:
-            # stream.rs:76-80 — join (anchor == bucket.end, never updated)
-            ids[i] = bucket
-        else:
-            # stream.rs:81-86 — bucket returned, this point lands NOWHERE
-            ids[i] = -1
-            anchor = None
-    return ids
-
-
-def _greedy_starts(pdf: pd.DataFrame, w: int, forced=None) -> np.ndarray:
-    """Greedy anchor scan (reference loop src/agg/stream.rs:60-97) over
-    rows sorted (grp ASC, ts DESC): a segment starts at every group
-    change, at every row flagged in ``forced``, and wherever the open
-    bucket's anchor (its newest point) is more than ``w`` newer than the
-    row. Plain python lists in the loop (numpy scalar indexing is ~20x
-    slower). Returns segment start indices."""
+    :func:`_boundaries_drop` for the bit-faithful variant."""
     ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
     grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
     forced_list = forced.tolist() if forced is not None else None
@@ -333,12 +281,61 @@ def _greedy_starts(pdf: pd.DataFrame, w: int, forced=None) -> np.ndarray:
     return np.asarray(starts_list, dtype=np.int64)
 
 
+def _boundaries_drop(pdf: pd.DataFrame, w: int):
+    """Bit-faithful variant of :func:`_greedy_starts` reproducing the
+    reference's ACTUAL boundary behavior (src/agg/stream.rs:81-86),
+    restarted at every group change: the point whose arrival closes a
+    bucket is consumed and DROPPED — it joins no bucket and resets the
+    anchor — and the following point initializes the next segment.
+
+    Returns ``(starts, keep, open_end)``: segment start indices, a
+    per-row keep mask (False = dropped boundary point), and whether the
+    trailing segment is still open — False means the last row was
+    dropped, so every segment is final (a future point cannot join an
+    anchor that no longer exists). Dropped points lie strictly BETWEEN
+    segments, never inside one."""
+    ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
+    grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
+    n = len(ts_list)
+    keep = [True] * n
+    starts_list = [0]
+    anchor = ts_list[0]
+    g = grp_list[0]
+    for i in range(1, n):
+        t = ts_list[i]
+        gi = grp_list[i]
+        if gi != g or anchor is None:
+            # new group, or first point after a drop: initialize
+            # (stream.rs:67-73 — a group's first point never drops)
+            starts_list.append(i)
+            anchor = t
+            g = gi
+        elif anchor - t <= w:
+            pass  # joins (stream.rs:76-80; anchor never updated)
+        else:
+            # stream.rs:81-86 — bucket returned, point lands NOWHERE
+            keep[i] = False
+            anchor = None
+    return (
+        np.asarray(starts_list, dtype=np.int64),
+        np.asarray(keep, dtype=bool),
+        anchor is not None,
+    )
+
+
 def _greedy_agg(
-    pdf: pd.DataFrame, starts: np.ndarray, kind: str, pq: "float | None"
+    pdf: pd.DataFrame, starts: np.ndarray, kind: str, pq: "float | None",
+    keep: "np.ndarray | None" = None,
 ) -> pd.DataFrame:
     """Aggregate the contiguous segments of ``pdf`` (sorted ts DESC
-    within each) that begin at ``starts`` into RESULT_SCHEMA rows. Both
-    greedy paths fold through here, so their float order is the same."""
+    within each) that begin at ``starts`` into RESULT_SCHEMA rows. Every
+    greedy path folds through here, so their float order is the same.
+    Rows where ``keep`` is False (dropped boundary points, which sit
+    BETWEEN segments) are filtered first and ``starts`` remapped to
+    kept-row coordinates, so each segment stays contiguous."""
+    if keep is not None and not keep.all():
+        starts = (np.cumsum(keep) - 1)[starts]
+        pdf = pdf.iloc[np.flatnonzero(keep)]
     ts = pdf["ts"].to_numpy(dtype=np.int64)
     val = pdf["value"].to_numpy(dtype=np.float64)
     n = len(ts)
@@ -386,6 +383,52 @@ def _greedy_agg(
     return out[["grp", "start_ts", "end_ts", "value", "len"]]
 
 
+def _greedy_stream(batches, boundaries, w: int, kind: str, pq, guard: int):
+    """The one greedy batch-carry loop over Arrow batches of rows sorted
+    (grp, ts DESC). ``boundaries(pdf)`` returns ``(starts, keep | None,
+    open_end)``. The trailing segment is the open bucket of the trailing
+    group — its membership can still change with the next batch (a
+    not-much-older point may join, or close it); every earlier segment
+    is final. Closed segments are emitted, the open one is carried into
+    the next batch, so Python memory is bounded by the densest single
+    bucket and the float summation order equals a whole-group pass.
+    ``open_end`` False (the last row was a dropped boundary point)
+    makes every segment final and leaves nothing to carry — exactly the
+    reference's post-drop state. ``guard`` caps the carried rows: the
+    task fails loudly instead of OOM-killing the executor."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        if pdf.empty:
+            continue
+        starts, keep, open_end = boundaries(pdf)
+        if not open_end:
+            yield _greedy_agg(pdf, starts, kind, pq, keep)
+            continue
+        cut = int(starts[-1])
+        # rows at/after the last start are all kept: a drop there would
+        # have forced either open_end=False or a later start
+        carry = pdf.iloc[cut:]
+        if len(carry) > guard:
+            raise RuntimeError(
+                f"greedy bucketing: a single data-anchored bucket exceeds "
+                f"{guard} rows (group {carry['grp'].iloc[0]!r}, width {w} "
+                f"ns — every point within one width span). This is "
+                f"inherently sequential per the reference semantics "
+                f"(src/agg/stream.rs:60-97); use aligned mode or a "
+                f"smaller granularity for groups this dense."
+            )
+        if cut:
+            yield _greedy_agg(
+                pdf.iloc[:cut], starts[:-1], kind, pq,
+                None if keep is None else keep[:cut],
+            )
+    if carry is not None and not carry.empty:
+        yield _greedy_agg(carry, np.zeros(1, dtype=np.int64), kind, pq)
+
+
 def greedy_buckets(
     scan: DataFrame,
     group_col: Column,
@@ -397,17 +440,16 @@ def greedy_buckets(
     """B_gr: the reference's data-anchored greedy bucketing (O27), with ONE
     documented deviation: the bucket-closing point RE-ANCHORS the next
     bucket here, whereas the reference silently drops it
-    (src/agg/stream.rs:81-86 — see ``_greedy_segment_ids`` for the
+    (src/agg/stream.rs:81-86 — see ``_greedy_starts`` for the
     adjudication; the oracle twin shares the re-anchor semantics).
 
     ``boundary="drop"`` (r15) runs the reference's ACTUAL bit-faithful
     boundary semantics distributed: the bucket-closing point is
     consumed and joins NO bucket, and the point after it
-    (re)initializes — the executable form of
-    ``_greedy_segment_ids_drop_boundary``, exposed so the deviation is
-    hash-checked end-to-end under the driver's DuckDB oracle (q17
-    ``kind=dropref``), proving the two semantics differ by exactly one
-    dropped point per boundary. (Precision: drop mode applies
+    (re)initializes — the scan :func:`_boundaries_drop`, exposed so
+    the deviation is hash-checked end-to-end under the driver's DuckDB
+    oracle (q17 ``kind=dropref``), proving the two semantics differ by
+    exactly one dropped point per boundary. (Precision: drop mode applies
     stream.rs:81-86 over the documented-INTENT sorted stream;
     reproducing full release behavior for multi-series groups would
     also require the broken merge order adjudicated below — pinned
@@ -462,117 +504,15 @@ def greedy_buckets(
     pq = percentile_q(kind)
     w = int(width)
     guard = int(max_open_bucket_rows)
-    drop_b = boundary == "drop"
+    if boundary == "drop":
+        def _bounds(pdf):
+            return _boundaries_drop(pdf, w)
+    else:
+        def _bounds(pdf):
+            return _greedy_starts(pdf, w), None, True
 
-    def _boundaries_drop(pdf: pd.DataFrame):
-        # Reference drop semantics (src/agg/stream.rs:81-86) restarted
-        # at every group change: the bucket-closing point joins NOTHING
-        # (keep=False) and resets the anchor; the following point
-        # (re)initializes the next segment. Returns (starts, keep,
-        # open_at_end): segment start indices in ORIGINAL coordinates,
-        # a per-row keep flag, and whether the trailing segment is
-        # still open — False means the batch's last row was dropped,
-        # so every segment is final (a future point cannot join an
-        # anchor that no longer exists).
-        ts_list = pdf["ts"].to_numpy(dtype=np.int64).tolist()
-        grp_list = pd.factorize(pdf["grp"].to_numpy())[0].tolist()
-        n = len(ts_list)
-        keep = [True] * n
-        starts_list = [0]
-        anchor = ts_list[0]
-        g = grp_list[0]
-        for i in range(1, n):
-            t = ts_list[i]
-            gi = grp_list[i]
-            if gi != g or anchor is None:
-                # new group, or first point after a drop: initialize
-                # (stream.rs:67-73 — a group's first point never drops)
-                starts_list.append(i)
-                anchor = t
-                g = gi
-            elif anchor - t <= w:
-                pass  # joins (stream.rs:76-80; anchor never updated)
-            else:
-                # stream.rs:81-86 — bucket returned, point lands NOWHERE
-                keep[i] = False
-                anchor = None
-        return starts_list, keep, anchor is not None
-
-    def _aggregate_drop(
-        pdf: pd.DataFrame, starts, keep
-    ) -> pd.DataFrame:
-        # Dropped boundary points sit BETWEEN segments (never inside
-        # one), so filtering them keeps each segment contiguous; remap
-        # the start indices to kept-row coordinates and reuse the
-        # shared aggregation (identical float summation order).
-        keep_arr = np.asarray(keep, dtype=bool)
-        starts_arr = np.asarray(starts, dtype=np.int64)
-        if keep_arr.all():
-            return _greedy_agg(pdf, starts_arr, kind, pq)
-        rank = np.cumsum(keep_arr) - 1
-        return _greedy_agg(
-            pdf.iloc[np.flatnonzero(keep_arr)], rank[starts_arr], kind, pq
-        )
-
-    def _guard_fail(carry: pd.DataFrame):
-        raise RuntimeError(
-            f"greedy bucketing: a single data-anchored bucket exceeds "
-            f"{guard} rows (group {carry['grp'].iloc[0]!r}, width {w} ns "
-            f"— every point within one width span). This is inherently "
-            f"sequential per the reference semantics "
-            f"(src/agg/stream.rs:60-97); use aligned mode or a smaller "
-            f"granularity for groups this dense."
-        )
-
-    def _bucketize_drop(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            starts, keep, open_end = _boundaries_drop(pdf)
-            if not open_end:
-                # last row of the batch was dropped: all segments final,
-                # and the empty carry makes the next batch's first point
-                # initialize — exactly the reference's post-drop state.
-                yield _aggregate_drop(pdf, starts, keep)
-                continue
-            cut = int(starts[-1])
-            # rows at/after the last start are all kept: a drop there
-            # would have forced either open_end=False or a later start
-            carry = pdf.iloc[cut:]
-            if len(carry) > guard:
-                _guard_fail(carry)
-            if cut:
-                yield _aggregate_drop(pdf.iloc[:cut], starts[:-1], keep[:cut])
-        if carry is not None and not carry.empty:
-            yield _greedy_agg(carry, np.asarray([0], dtype=np.int64), kind, pq)
-
-    def _bucketize(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            starts = _greedy_starts(pdf, w)
-            # The trailing segment is the open bucket of the trailing
-            # group — its membership can still change with the next Arrow
-            # batch (a not-much-older point may join, or close it); every
-            # earlier segment is final. Emit the closed ones, carry the
-            # open one. Aggregating only closed segments keeps the float
-            # summation order identical to a whole-group pass.
-            cut = int(starts[-1])
-            carry = pdf.iloc[cut:]
-            if len(carry) > guard:
-                _guard_fail(carry)
-            if cut:
-                yield _greedy_agg(pdf.iloc[:cut], starts[:-1], kind, pq)
-        if carry is not None and not carry.empty:
-            yield _greedy_agg(carry, np.asarray([0], dtype=np.int64), kind, pq)
+    def _segment(batches):
+        return _greedy_stream(batches, _bounds, w, kind, pq, guard)
 
     prepared = (
         scan.select(group_col.alias("grp"), "ts", "value")
@@ -585,9 +525,7 @@ def greedy_buckets(
         # The reference leaves heap ties arbitrary (src/merge.rs:9-13).
         .sortWithinPartitions("grp", F.desc("ts"), F.asc("value"))
     )
-    return prepared.mapInPandas(
-        _bucketize_drop if drop_b else _bucketize, schema=RESULT_SCHEMA
-    )
+    return prepared.mapInPandas(_segment, schema=RESULT_SCHEMA)
 
 
 def _sliced_prepared(scan: DataFrame, group_col: Column, slice_width: int) -> DataFrame:
@@ -613,11 +551,7 @@ GREEDY_AUTO_ROWS = 4_000_000
 
 
 def greedy_auto_decision(
-    scan: DataFrame,
-    group_col: Column,
-    width: int,
-    threshold: "int | None" = None,
-    sample_fraction: "float | None" = None,
+    scan: DataFrame, group_col: Column, width: int
 ) -> tuple:
     """Pick the greedy physical path from the data (r17, VERDICT r16
     item 3): ONE sketch-sized pre-aggregate — per-group count + ts span
@@ -633,46 +567,13 @@ def greedy_auto_decision(
 
     Returns ``(use_sliced, slice_width_ns, stats_dict)``; the stats dict
     records what the decision saw (``max_group_rows``, ``span_ns``,
-    ``threshold``, and ``sample_fraction`` when sampling). Cost: one
-    hash-agg over the scan (shuffle volume = #groups after partials) +
-    a 1-row collect — the stats() discipline.
-
-    ``sample_fraction`` (the 100 TB dial): the exact pass re-reads the
-    filtered scan a second time. Because BOTH physical paths are
-    bit-identical, the decision may be APPROXIMATE with zero
-    correctness risk — a seeded Bernoulli sample (seed fixed at 17, so
-    the choice is reproducible run-to-run) scales observed group counts
-    by 1/fraction before the threshold compare. Honest cost model:
-    Spark's ``sample`` sits ABOVE the scan, so the column-pruned I/O
-    (only the group cols + ts leave the parquet reader) is unchanged —
-    what shrinks ~1/fraction is the per-row decode + hash-agg CPU,
-    which dominates a two-column stats pass at scale. At the ~4M-point
-    crossover even a 1% sample sees ~40k rows of the deciding group
-    (relative error well under the 2x band the crossover is flat
-    across), while groups small enough to be missed entirely are orders
-    of magnitude below threshold anyway. Span (a min/max) is estimated
-    from the same sample — slightly shrunken, which only nudges the
-    derived slice width. Misestimation costs performance, never
-    correctness.
+    ``threshold``). Cost: one hash-agg over the scan (shuffle volume =
+    #groups after partials) + a 1-row collect — the stats() discipline.
+    Both physical paths are bit-identical, so the decision only ever
+    costs performance, never correctness.
     """
-    from talna_spark.errors import InvalidValueError
-
-    thr = GREEDY_AUTO_ROWS if threshold is None else int(threshold)
-    src = scan
-    scale = 1.0
-    if sample_fraction is not None:
-        frac = float(sample_fraction)
-        if not 0.0 < frac <= 1.0:
-            # InvalidValueError: a ValueError for direct callers AND an
-            # InvalidQueryError for builder-style handlers — one error
-            # surface for the same mistake on both entry points
-            raise InvalidValueError(
-                f"sample_fraction must be in (0, 1] (got {sample_fraction!r})"
-            )
-        if frac < 1.0:
-            src = scan.sample(fraction=frac, seed=17)
-            scale = 1.0 / frac
-    per = src.groupBy(group_col.alias("grp")).agg(
+    thr = GREEDY_AUTO_ROWS
+    per = scan.groupBy(group_col.alias("grp")).agg(
         F.count("*").alias("n"),
         (F.max("ts") - F.min("ts")).alias("span"),
     )
@@ -680,11 +581,9 @@ def greedy_auto_decision(
         F.max("n").alias("max_n"),
         F.max_by("span", "n").alias("span_of_largest"),
     ).collect()[0]
-    max_n = int((row["max_n"] or 0) * scale)  # scaled count estimate
+    max_n = int(row["max_n"] or 0)
     span = int(row["span_of_largest"] or 0)
     stats = {"max_group_rows": max_n, "span_ns": span, "threshold": thr}
-    if scale != 1.0:
-        stats["sample_fraction"] = float(sample_fraction)
     if max_n < thr:
         return False, None, stats
     # fewer than two slices can ever fit this span (every legal slice
@@ -715,7 +614,7 @@ def greedy_buckets_sliced(
     """Two-level parallel form of the reference's greedy bucketing (O27),
     bit-identical to :func:`greedy_buckets` — the scale path for groups
     too large for one task. (Shares ``greedy_buckets``'s documented
-    re-anchor deviation at bucket boundaries; see ``_greedy_segment_ids``.)
+    re-anchor deviation at bucket boundaries; see ``_greedy_starts``.)
 
     The greedy rule (src/agg/stream.rs:60-97) is a sequential scan, but it
     has a synchronization property: any inter-point gap > width forces a
@@ -731,7 +630,7 @@ def greedy_buckets_sliced(
       slowdown on many-small-groups data): finalize and aggregate every
       entry-independent closed segment; emit head rows and open-tail
       rows as raw "pending" rows (tail rows flagged).
-    - Pass 2 (per grp, mapInPandas with batch carry): one ordered scan
+    - Pass 2 (per grp, the shared ``_greedy_stream`` carry): one ordered scan
       re-anchoring at each tail-block start (a true boundary — it was
       computed after a forced reset). Heads chain onto the previous
       slice's open bucket exactly as the global sequential scan would;
@@ -759,7 +658,9 @@ def greedy_buckets_sliced(
     (executor_mem / density).
     """
     if int(slice_width) <= int(width):
-        raise ValueError(
+        # InvalidValueError: a ValueError for direct callers AND an
+        # InvalidQueryError at the QueryBuilder boundary
+        raise InvalidValueError(
             "slice_width must exceed the bucket width (a slice shorter "
             "than one bucket can never contain a forced reset)"
         )
@@ -788,7 +689,8 @@ def greedy_buckets_sliced(
 
         def process(pdf: pd.DataFrame):
             # every (grp, slice) block in pdf is COMPLETE; rows sorted
-            # (grp, slice, ts DESC, value ASC) by the upstream shuffle
+            # (grp, slice, ts DESC, value ASC) by the upstream shuffle.
+            # Yields the pending rows, then the closed segments' rows.
             n = len(pdf)
             grp_a = pdf["grp"].to_numpy()
             sl_a = pdf["slice"].to_numpy(dtype=np.int64)
@@ -822,7 +724,6 @@ def greedy_buckets_sliced(
                 pend[b0:first_reset] = True   # head
                 pend[last:b1] = True          # open tail
                 tailm[last:b1] = True
-            parts = []
             if pend.any():
                 sub = pdf[pend]
                 # int64 SENTINEL zeros, not nulls, in the long columns:
@@ -830,7 +731,7 @@ def greedy_buckets_sliced(
                 # float64 in pass 2 and ns timestamps (> 2^53) would
                 # silently lose precision; the `final` flag is the
                 # discriminator, never these fields
-                parts.append(pd.DataFrame(
+                yield pd.DataFrame(
                     {
                         "grp": sub["grp"].to_numpy(),
                         "slice": sub["slice"].to_numpy(),
@@ -843,7 +744,7 @@ def greedy_buckets_sliced(
                         "value": np.nan,
                         "len": np.zeros(len(sub), dtype=np.int64),
                     }
-                )[cols])
+                )[cols]
             if mid_starts:
                 # compact the mid rows; segments stay contiguous and the
                 # last closed segment of a block ends exactly where the
@@ -859,10 +760,7 @@ def greedy_buckets_sliced(
                 agg.insert(3, "tail", False)
                 agg.insert(4, "ts", np.zeros(len(agg), dtype=np.int64))
                 agg.insert(5, "raw", np.nan)
-                parts.append(agg[cols])
-            if not parts:
-                return None
-            return pd.concat(parts, ignore_index=True)[cols]
+                yield agg[cols]
 
         # The open block is accumulated as a LIST of batch frames and
         # concatenated once per emitted block — concatenating the
@@ -884,10 +782,8 @@ def greedy_buckets_sliced(
             sl_a = pdf["slice"].to_numpy(dtype=np.int64)
             if pending and (grp_a[0], int(sl_a[0])) != last_key:
                 # block boundary at the batch junction: pending complete
-                out = process(_one(pending))
+                yield from process(_one(pending))
                 pending = []
-                if out is not None:
-                    yield out
             last_key = (grp_a[-1], int(sl_a[-1]))
             chg = np.flatnonzero(
                 (grp_a[1:] != grp_a[:-1]) | (sl_a[1:] != sl_a[:-1])
@@ -899,51 +795,23 @@ def greedy_buckets_sliced(
             pending.append(pdf.iloc[:cut])
             block = _one(pending)
             pending = [pdf.iloc[cut:].reset_index(drop=True)]
-            out = process(block)
-            if out is not None:
-                yield out
-        if pending:
-            block = _one(pending)
-            if not block.empty:
-                out = process(block)
-                if out is not None:
-                    yield out
+            yield from process(block)
+        if pending:  # every held frame is non-empty
+            yield from process(_one(pending))
 
-    def _pass2(batches):
+    def _stitch_bounds(pdf):
+        # a tail block's first row re-anchors: it was computed after a
+        # forced reset in pass 1
+        sl = pdf["slice"].to_numpy(dtype=np.int64)
+        tl = pdf["tail"].to_numpy(dtype=bool)
+        forced = np.zeros(len(tl), dtype=bool)
+        forced[1:] = tl[1:] & (~tl[:-1] | (sl[:-1] != sl[1:]))
+        return _greedy_starts(pdf, w, forced), None, True
+
+    def _stitch(batches):
         # sequential stitch over PENDING rows only (r17: finals exit via
-        # the parallel filter branch and never reach this operator),
-        # batch-carried like greedy_buckets._bucketize, with forced
-        # re-anchor at tail starts.
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if pdf.empty:
-                continue
-            # a tail block's first row re-anchors: it was computed after
-            # a forced reset in pass 1
-            sl = pdf["slice"].to_numpy(dtype=np.int64)
-            tl = pdf["tail"].to_numpy(dtype=bool)
-            forced = np.zeros(len(tl), dtype=bool)
-            forced[1:] = tl[1:] & (~tl[:-1] | (sl[:-1] != sl[1:]))
-            starts = _greedy_starts(pdf, w, forced)
-            cut = int(starts[-1])
-            carry = pdf.iloc[cut:]
-            if len(carry) > guard:
-                raise RuntimeError(
-                    f"greedy bucketing: a single data-anchored bucket exceeds "
-                    f"{guard} rows — every point within one width span; use "
-                    f"aligned mode for groups this dense."
-                )
-            if cut:
-                body = pdf.iloc[:cut].rename(columns={"raw": "value"})[
-                    ["grp", "ts", "value"]
-                ]
-                yield _greedy_agg(body, starts[:-1], kind, pq)
-        if carry is not None and not carry.empty:
-            body = carry.rename(columns={"raw": "value"})[["grp", "ts", "value"]]
-            yield _greedy_agg(body, np.asarray([0], dtype=np.int64), kind, pq)
+        # the parallel filter branch and never reach this operator)
+        return _greedy_stream(batches, _stitch_bounds, w, kind, pq, guard)
 
     prepared = _sliced_prepared(scan, group_col, slice_width)
     # r16: ONE shuffle keyed on (grp, slice) — hash repartition spreads
@@ -977,9 +845,11 @@ def greedy_buckets_sliced(
     # (finals were computed in pass 1 either way; pending rows reach
     # pass 2 in the same (grp, ts DESC, raw ASC, tail ASC) order — the
     # tail ASC tie-break still reproduces the pass-1 head/tail cut at
-    # equal (ts, raw) pairs). Checkpoint cost: pass-1 output rows
-    # (aggregates + boundary rows, a fraction of the scan) stored
-    # MEMORY_AND_DISK once — the dedup-lineage discipline.
+    # equal (ts, raw) pairs; raw is renamed to value before the
+    # exchange, so pass 2 reads the columns _greedy_agg folds).
+    # Checkpoint cost: pass-1 output rows (aggregates + boundary rows, a
+    # fraction of the scan) stored MEMORY_AND_DISK once — the
+    # dedup-lineage discipline.
     p1 = p1_raw.localCheckpoint(eager=False)
     finals = p1.filter(F.col("final")).select(
         "grp", "start_ts", "end_ts", "value", "len"
@@ -989,13 +859,15 @@ def greedy_buckets_sliced(
         # §2.3): the final/start_ts/end_ts/value/len sentinels of
         # pending rows are dead weight past this point
         p1.filter(~F.col("final"))
-        .select("grp", "slice", "tail", "ts", "raw")
+        .select("grp", "slice", "tail", "ts", F.col("raw").alias("value"))
         .repartition("grp")
         .sortWithinPartitions(
-            "grp", F.desc("ts"), F.asc("raw"), F.asc("tail")
+            "grp", F.desc("ts"), F.asc("value"), F.asc("tail")
         )
     )
-    out = finals.unionByName(pending.mapInPandas(_pass2, schema=RESULT_SCHEMA))
+    out = finals.unionByName(
+        pending.mapInPandas(_stitch, schema=RESULT_SCHEMA)
+    )
     # test seam: the pre-checkpoint pass-1 frame, so plan tests can pin
     # the (grp, slice) exchange shape that the checkpoint hides from the
     # final plan string

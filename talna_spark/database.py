@@ -26,7 +26,13 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from talna_spark.aggregate import aligned_buckets, greedy_buckets, rows_to_bucket_map
+from talna_spark.aggregate import (
+    aligned_buckets,
+    greedy_auto_decision,
+    greedy_buckets,
+    greedy_buckets_sliced,
+    rows_to_bucket_map,
+)
 from talna_spark.dsl.compiler import compile_to_column
 from talna_spark.dsl.parser import parse_filter_query
 from talna_spark.duration import Duration
@@ -294,7 +300,6 @@ class QueryBuilder:
         self._granularity_set = False
         self._mode = "aligned"
         self._greedy_slice_width = None  # int ns | "auto" | None
-        self._greedy_auto_sample: Optional[float] = None  # auto stats sampling
         self._greedy_auto_choice: Optional[tuple] = None  # last auto build
         self._greedy_boundary: str = "reanchor"
         self._gapfill: Optional[str] = None
@@ -336,18 +341,7 @@ class QueryBuilder:
         map-side explode (Spark's own Expand strategy for CUBE), so the
         plan stays a single hash aggregate over 2^k x rows expanded
         id-small rows — no repeated scans, no join."""
-        keys = self._group_keys()
-        if len(keys) < 2:
-            raise InvalidQueryError("cube requires at least two group tags")
-        if self._cube == "cube":  # idempotent re-set (ADVICE r7)
-            return self
-        if self._cube is not None:
-            raise InvalidQueryError(
-                "cube and rollup_sets are mutually exclusive "
-                "(rollup_sets already set)"
-            )
-        self._cube = "cube"
-        return self
+        return self._grouping_sets("cube", "cube", "rollup_sets")
 
     def rollup_sets(self) -> "QueryBuilder":
         """Hierarchical (SQL ROLLUP) subtotals: only the PREFIX subsets
@@ -356,19 +350,17 @@ class QueryBuilder:
         source > lang), k+1 grouping sets instead of cube's 2^k. Same
         Expand-style single-pass plan and ``k:*`` key convention as
         :meth:`cube`; mutually exclusive with it."""
-        keys = self._group_keys()
-        if len(keys) < 2:
-            raise InvalidQueryError(
-                "rollup_sets requires at least two group tags"
-            )
-        if self._cube == "rollup":  # idempotent re-set (ADVICE r7)
-            return self
-        if self._cube is not None:
+        return self._grouping_sets("rollup", "rollup_sets", "cube")
+
+    def _grouping_sets(self, mode: str, name: str, other: str) -> "QueryBuilder":
+        if len(self._group_keys()) < 2:
+            raise InvalidQueryError(f"{name} requires at least two group tags")
+        if self._cube not in (None, mode):  # re-set is idempotent (ADVICE r7)
             raise InvalidQueryError(
                 "cube and rollup_sets are mutually exclusive "
-                "(cube already set)"
+                f"({other} already set)"
             )
-        self._cube = "rollup"
+        self._cube = mode
         return self
 
     def start(self, ts_ns: int) -> "QueryBuilder":
@@ -444,9 +436,7 @@ class QueryBuilder:
         self._greedy_boundary = boundary
         return self
 
-    def greedy_slices(
-        self, slice_width_ns, sample_fraction: "float | None" = None,
-    ) -> "QueryBuilder":
+    def greedy_slices(self, slice_width_ns) -> "QueryBuilder":
         """Greedy mode's scale path: split each group into coarse time
         slices processed as parallel tasks, stitching only entry-dependent
         boundary rows sequentially (aggregate.greedy_buckets_sliced;
@@ -467,8 +457,8 @@ class QueryBuilder:
 
         ``greedy_slices("auto")`` (r17) applies that guidance from the
         data instead of a hand-picked width: at plan-build time ONE
-        sketch-sized pre-aggregate (per-group count/span with map-side
-        partials, 1-row collect) picks the path —
+        exact pre-aggregate over the filtered scan (per-group count/span
+        with map-side partials, 1-row collect) picks the path —
         ``aggregate.greedy_auto_decision``. Largest group under
         ``aggregate.GREEDY_AUTO_ROWS`` (the measured ~4M-point
         crossover) keeps the default one-task-per-group scan; above it
@@ -478,35 +468,11 @@ class QueryBuilder:
         recorded on the builder as ``_greedy_auto_choice``
         (``("single"|"sliced", slice_width_ns, stats)``). Note: auto
         runs its stats job eagerly inside ``to_df()`` (a cache hit
-        skips it along with the rest of plan building).
-
-        ``sample_fraction`` (auto only — the 100 TB dial): the exact
-        stats pass re-reads the filtered scan; because both physical
-        choices are bit-identical, the decision may instead read a
-        seeded Bernoulli sample (counts scaled by 1/fraction before
-        the threshold compare) with zero correctness risk — the
-        column-pruned scan I/O remains (sampling sits above the
-        reader) but the per-row decode+agg CPU shrinks ~1/fraction;
-        misestimation only ever costs performance (cost model in
-        ``aggregate.greedy_auto_decision``)."""
+        skips it along with the rest of plan building)."""
         if slice_width_ns == "auto":
-            if sample_fraction is not None and not (
-                0.0 < float(sample_fraction) <= 1.0
-            ):
-                raise InvalidValueError(
-                    "greedy_slices sample_fraction must be in (0, 1] "
-                    f"(got {sample_fraction!r})"
-                )
             self._greedy_slice_width = "auto"
-            self._greedy_auto_sample = (
-                None if sample_fraction is None else float(sample_fraction)
-            )
             self._greedy_auto_choice = None  # set by the next real build
             return self
-        if sample_fraction is not None:
-            raise InvalidQueryError(
-                "sample_fraction applies to greedy_slices('auto') only"
-            )
         if isinstance(slice_width_ns, str):
             raise InvalidQueryError(
                 "greedy_slices takes a width in ns or 'auto' "
@@ -515,11 +481,8 @@ class QueryBuilder:
         if int(slice_width_ns) <= 0:
             raise InvalidQueryError("greedy slice width must be positive")
         self._greedy_slice_width = int(slice_width_ns)
-        # switching from auto to an explicit width: clear the auto state,
-        # or the plan-cache signature would differ from an identical
-        # fresh builder and the stale choice record would misreport the
-        # last build (r17 review finding)
-        self._greedy_auto_sample = None
+        # switching from auto to an explicit width clears the stale
+        # choice record, which would otherwise misreport the last build
         self._greedy_auto_choice = None
         return self
 
@@ -584,14 +547,7 @@ class QueryBuilder:
         uniquely keyed by their observed min/max ts."""
         from talna_spark.aggregate import sliding_buckets
 
-        if (
-            self._gapfill is not None
-            or self._rolling is not None
-            or self._zscore is not None
-        ):
-            raise InvalidQueryError(
-                "sliding cannot combine with gapfill/rolling/zscore"
-            )
+        self._no_post_ops("sliding")
         if self._mode != "aligned":
             raise InvalidQueryError("sliding requires aligned mode")
         if self._granularity_set:
@@ -604,9 +560,7 @@ class QueryBuilder:
             raise InvalidQueryError(
                 "sliding requires width > 0, slide > 0, width % slide == 0"
             )
-        node = parse_filter_query(self._filter)
-        scan = self._db._backend.scan(self._metric, node, self._start, self._end)
-        scan = self._group_drop_filter(scan)
+        scan = self._scan()
         if self._kind not in ("avg", "sum", "min", "max", "count"):
             raise InvalidQueryError("sliding supports the five basic aggregations")
         return sliding_buckets(scan, self._group_col(), self._kind, w, s)
@@ -627,17 +581,8 @@ class QueryBuilder:
             )
         if self._mode != "aligned":
             raise InvalidQueryError("histogram requires aligned mode")
-        if (
-            self._gapfill is not None
-            or self._rolling is not None
-            or self._zscore is not None
-        ):
-            raise InvalidQueryError(
-                "histogram cannot combine with gapfill/rolling/zscore"
-            )
-        node = parse_filter_query(self._filter)
-        scan = self._db._backend.scan(self._metric, node, self._start, self._end)
-        scan = self._group_drop_filter(scan)
+        self._no_post_ops("histogram")
+        scan = self._scan()
         return histogram_buckets(
             scan, self._group_col(), self._granularity, lo, hi, nbins
         )
@@ -650,14 +595,7 @@ class QueryBuilder:
         only; the five basic aggregations apply per session."""
         from talna_spark.aggregate import session_buckets
 
-        if (
-            self._gapfill is not None
-            or self._rolling is not None
-            or self._zscore is not None
-        ):
-            raise InvalidQueryError(
-                "sessions cannot combine with gapfill/rolling/zscore"
-            )
+        self._no_post_ops("sessions")
         if self._mode != "aligned":
             raise InvalidQueryError("sessions requires aligned mode")
         if self._granularity_set:
@@ -669,9 +607,7 @@ class QueryBuilder:
             raise InvalidQueryError("session gap must be positive")
         if self._kind not in ("avg", "sum", "min", "max", "count"):
             raise InvalidQueryError("sessions supports the five basic aggregations")
-        node = parse_filter_query(self._filter)
-        scan = self._db._backend.scan(self._metric, node, self._start, self._end)
-        scan = self._group_drop_filter(scan)
+        scan = self._scan()
         return session_buckets(scan, self._group_col(), self._kind, int(gap_ns))
 
     def _group_keys(self) -> tuple[str, ...]:
@@ -685,6 +621,24 @@ class QueryBuilder:
         return F.concat_ws(
             ",", *(F.concat(F.lit(f"{k}:"), F.col("tags").getItem(k)) for k in keys)
         )
+
+    def _no_post_ops(self, op: str, why: str = "") -> None:
+        if (
+            self._gapfill is not None
+            or self._rolling is not None
+            or self._zscore is not None
+        ):
+            raise InvalidQueryError(
+                f"{op} cannot combine with gapfill/rolling/zscore{why}"
+            )
+
+    def _scan(self, node=None) -> DataFrame:
+        """The metric's points under the filter and time bounds, with the
+        group-drop filter applied (``node`` = the already-parsed filter)."""
+        if node is None:
+            node = parse_filter_query(self._filter)
+        scan = self._db._backend.scan(self._metric, node, self._start, self._end)
+        return self._group_drop_filter(scan)
 
     def _group_drop_filter(self, df: DataFrame) -> DataFrame:
         # Series lacking ANY group tag are silently dropped (O25,
@@ -701,8 +655,7 @@ class QueryBuilder:
         return (
             "agg", self._kind, self._metric, self._group_by, self._filter,
             self._start, self._end, self._granularity, self._granularity_set,
-            self._mode, self._greedy_slice_width, self._greedy_auto_sample,
-            self._greedy_boundary,
+            self._mode, self._greedy_slice_width, self._greedy_boundary,
             self._gapfill,
             self._rolling, self._zscore, self._value_pred, self._cube,
             self._calendar,
@@ -739,9 +692,8 @@ class QueryBuilder:
             rollup_df = self._try_rollup(node)
             if rollup_df is not None:
                 return self._apply_rolling(self._apply_gapfill(rollup_df))
-        scan = self._db._backend.scan(self._metric, node, self._start, self._end)
+        scan = self._scan(node)
         group_col = self._group_col()
-        scan = self._group_drop_filter(scan)
         if self._value_pred is not None:
             import operator as _op
 
@@ -754,14 +706,7 @@ class QueryBuilder:
         if self._cube:
             if self._mode != "aligned":
                 raise InvalidQueryError("cube requires aligned mode")
-            if (
-                self._gapfill is not None
-                or self._rolling is not None
-                or self._zscore is not None
-            ):
-                raise InvalidQueryError(
-                    "cube cannot combine with gapfill/rolling/zscore"
-                )
+            self._no_post_ops("cube")
         kind = self._kind
         if kind == "rate":
             # per-series derivative first; buckets then average the
@@ -815,15 +760,10 @@ class QueryBuilder:
         if self._calendar is not None:
             if self._mode != "aligned":
                 raise InvalidQueryError("calendar requires aligned mode")
-            if (
-                self._gapfill is not None
-                or self._rolling is not None
-                or self._zscore is not None
-            ):
-                raise InvalidQueryError(
-                    "calendar cannot combine with gapfill/rolling/zscore "
-                    "(their bucket spines/frames assume a fixed width)"
-                )
+            self._no_post_ops(
+                "calendar",
+                " (their bucket spines/frames assume a fixed width)",
+            )
         if self._mode == "greedy":
             from talna_spark.aggregate import approx_percentile_q
 
@@ -848,27 +788,18 @@ class QueryBuilder:
                         "drop state machine is not self-synchronizing at "
                         "a gap; see QueryBuilder.greedy_boundary)"
                     )
-                from talna_spark.aggregate import (
-                    greedy_auto_decision,
-                    greedy_buckets_sliced,
-                )
-
                 slice_w = self._greedy_slice_width
                 if slice_w == "auto":
                     use_sliced, slice_w, stats = greedy_auto_decision(
-                        scan, group_col, self._granularity,
-                        sample_fraction=self._greedy_auto_sample,
+                        scan, group_col, self._granularity
                     )
-                    if not use_sliced:
-                        self._greedy_auto_choice = ("single", None, stats)
-                        return greedy_buckets(
-                            scan, group_col, kind, self._granularity,
-                            boundary=self._greedy_boundary,
-                        )
-                    self._greedy_auto_choice = ("sliced", slice_w, stats)
-                return greedy_buckets_sliced(
-                    scan, group_col, kind, self._granularity, slice_w,
-                )
+                    self._greedy_auto_choice = (
+                        "sliced" if use_sliced else "single", slice_w, stats
+                    )
+                if slice_w is not None:
+                    return greedy_buckets_sliced(
+                        scan, group_col, kind, self._granularity, slice_w,
+                    )
             return greedy_buckets(
                 scan, group_col, kind, self._granularity,
                 boundary=self._greedy_boundary,

@@ -368,9 +368,10 @@ def _spark_round6(x: float) -> float:
 def _greedy_runs(ts_desc, width: int):
     """Independent second port of the reference greedy bucketizer
     (src/agg/stream.rs:60-97), deliberately written in a different style
-    from ``talna_spark.aggregate._greedy_segment_ids`` (plain-Python run
-    accumulation over a list — no numpy, no per-element id array) so the
-    driver oracle shares NO code with the engine it certifies
+    from the engine's ``talna_spark.aggregate._greedy_starts`` scan
+    (plain-Python run accumulation over a list — no group codes, no
+    start-index array) so the driver oracle shares NO code with the
+    engine it certifies
     (VERDICT r7 item 1). Returns ``[(start_index, length), ...]`` runs
     over a DESC-sorted timestamp sequence: a run's anchor is its newest
     (first) timestamp, a point joins while ``anchor - ts <= width``
@@ -385,7 +386,7 @@ def _greedy_runs(ts_desc, width: int):
     following item. Both this oracle and the engine RE-ANCHOR that point
     as the next bucket's first member instead (the reference silently
     loses data at every boundary and never tests one); the deviation is
-    pinned executable in aggregate._greedy_segment_ids_drop_boundary."""
+    pinned executable in aggregate._boundaries_drop."""
     runs: list[tuple[int, int]] = []
     anchor = None
     for i, t in enumerate(ts_desc):
@@ -403,9 +404,9 @@ def _greedy_runs_drop(ts_desc, width: int):
     behavior (src/agg/stream.rs:81-86; the drop semantics adjudicated
     r14): the point whose arrival closes a bucket is consumed and joins
     NO run; the point after it initializes the next run. Written
-    independently of the engine's ``_boundaries_drop`` closure in
-    ``aggregate.greedy_buckets`` (plain-Python run list, three-way
-    branch on an Optional anchor — no numpy, no keep mask) so the
+    independently of the engine's ``aggregate._boundaries_drop`` scan
+    (plain-Python run list, three-way branch on an Optional anchor —
+    no numpy, no keep mask) so the
     driver's q17 ``kind=dropref`` row certifies the engine with shared
     ZERO code. Returns ``[(start_index, length), ...]`` — dropped
     points lie strictly BETWEEN runs, so each run is contiguous."""
@@ -444,7 +445,7 @@ def greedy_events_values_sql(
     as every aligned oracle, each group is ordered (ts DESC, value ASC) —
     the engine's pinned merge order — and the literal port of the
     reference loop (``_greedy_runs`` above — an oracle-local port written
-    independently of the engine's ``_greedy_segment_ids``) segments it. Bucket
+    independently of the engine's ``_greedy_starts``) segments it. Bucket
     values replicate the engine's aggregation order bit-for-bit, then
     Spark-style 6-dp rounding; the result is emitted as a VALUES table the
     driver can run like any other oracle SQL. Returns None when the

@@ -595,6 +595,47 @@ def _greedy_merge(syms: list, ranks: dict) -> list:
     return syms
 
 
+def nonempty_words(cell) -> list:
+    """The non-empty words of a words-array cell; a NULL cell is the
+    empty document."""
+    return [w for w in cell if w] if cell is not None else []
+
+
+def _doc_words(pat):
+    """(input column, cell -> words) for an encoder: the GPT-2 pretokens
+    of the text when ``pat`` is set, else the words array's non-empty
+    words. A NULL cell is the empty document, never a crash."""
+    if pat is not None:
+        return "text", lambda cell: pat.findall(cell) if cell else []
+    return "words", nonempty_words
+
+
+def encode_counts(
+    pdf: pd.DataFrame, col: str, split, n_tokens, tok_col: str
+) -> pd.DataFrame:
+    """One encoded batch's (doc_id, n_words, ``tok_col``, compression)
+    frame: ``split(cell)`` gives the words of a ``col`` cell,
+    ``n_tokens(word)`` a word's token count, and compression =
+    round(chars-per-token, 6)."""
+    n_words, n_tok, n_chars = [], [], []
+    for cell in pdf[col]:
+        ws = split(cell)
+        n_words.append(len(ws))
+        n_tok.append(sum(n_tokens(w) for w in ws))
+        n_chars.append(sum(len(w) for w in ws))
+    out = pd.DataFrame(
+        {
+            "doc_id": pdf["doc_id"].astype("int64"),
+            "n_words": n_words,
+            tok_col: n_tok,
+        }
+    )
+    out["compression"] = [
+        round(c / t, 6) if t else 0.0 for c, t in zip(n_chars, n_tok)
+    ]
+    return out
+
+
 def bpe_encode(
     spark: SparkSession,
     sf_dir: str,
@@ -631,30 +672,9 @@ def bpe_encode(
                 got = cache[w] = len(_greedy_merge(init_syms(w), ranks))
             return got
 
+        col, split = _doc_words(pat)
         for pdf in batches:
-            n_words, n_tok, n_chars = [], [], []
-            src = pdf["text"] if pat is not None else pdf["words"]
-            for cell in src:
-                # NULL text -> NULL words array / None text cell: treat
-                # as the empty document, don't crash
-                if pat is not None:
-                    ws = pat.findall(cell) if cell else []
-                else:
-                    ws = [w for w in cell if w] if cell is not None else []
-                n_words.append(len(ws))
-                n_tok.append(sum(word_tokens(w) for w in ws))
-                n_chars.append(sum(len(w) for w in ws))
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_words": n_words,
-                    "n_bpe_tokens": n_tok,
-                }
-            )
-            out["compression"] = [
-                round(c / t, 6) if t else 0.0 for c, t in zip(n_chars, n_tok)
-            ]
-            yield out
+            yield encode_counts(pdf, col, split, word_tokens, "n_bpe_tokens")
 
     return d.mapInPandas(
         _enc,
@@ -751,18 +771,12 @@ def bpe_encode_ids(
                 ]
             return got
 
+        col, split = _doc_words(pat)
         for pdf in batches:
             rows = []
-            src = pdf["text"] if pat is not None else pdf["words"]
-            for did, cell in zip(pdf["doc_id"], src):
+            for did, cell in zip(pdf["doc_id"], pdf[col]):
                 ids: list[int] = []
-                # NULL text -> None words array / None cell: the empty
-                # document
-                if pat is not None:
-                    ws = pat.findall(cell) if cell else []
-                else:
-                    ws = [w for w in cell if w] if cell is not None else []
-                for w in ws:
+                for w in split(cell):
                     ids.extend(word_ids(w))
                 rows.append((int(did), len(ids), ids))
             yield pd.DataFrame(

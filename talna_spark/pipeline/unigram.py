@@ -52,6 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from talna_spark.pipeline.bpe import encode_counts, nonempty_words
 from talna_spark.pipeline.portable import tokens
 from talna_spark.pipeline.scan import read_documents
 
@@ -421,23 +422,9 @@ def unigram_encode(
             return got
 
         for pdf in batches:
-            n_words, n_tok, n_chars = [], [], []
-            for cell in pdf["words"]:
-                ws = [w for w in cell if w] if cell is not None else []
-                n_words.append(len(ws))
-                n_tok.append(sum(viterbi_len(w) for w in ws))
-                n_chars.append(sum(len(w) for w in ws))
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_words": n_words,
-                    "n_unigram_tokens": n_tok,
-                }
+            yield encode_counts(
+                pdf, "words", nonempty_words, viterbi_len, "n_unigram_tokens"
             )
-            out["compression"] = [
-                round(c / t, 6) if t else 0.0 for c, t in zip(n_chars, n_tok)
-            ]
-            yield out
 
     return d.mapInPandas(
         _enc,
@@ -495,8 +482,7 @@ def unigram_encode_ids(
             rows = []
             for did, cell in zip(pdf["doc_id"], pdf["words"]):
                 ids: list[int] = []
-                ws = [w for w in cell if w] if cell is not None else []
-                for w in ws:
+                for w in nonempty_words(cell):
                     ids.extend(word_ids(w))
                 rows.append((int(did), len(ids), ids))
             yield pd.DataFrame(

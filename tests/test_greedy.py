@@ -7,10 +7,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from talna_spark.aggregate import _greedy_segment_ids
 from talna_spark.database import Database
 from talna_spark.duration import Duration
-from tests.conftest import make_points
+from tests.conftest import make_points, segment_ids
 
 S = Duration.SECOND
 # clusters straddling floor boundaries and gaps > width (F6)
@@ -23,7 +22,7 @@ def python_greedy(ts_values, width, kind):
     pairs = sorted(ts_values, key=lambda p: -p[0])
     ts = np.array([p[0] for p in pairs], dtype=np.int64)
     vals = np.array([p[1] for p in pairs], dtype=np.float64)
-    seg = _greedy_segment_ids(ts, width)
+    seg = segment_ids(ts, width)
     out = []
     for s in sorted(set(seg.tolist())):
         m = seg == s
@@ -54,7 +53,7 @@ def test_greedy_segmentation_shape(spark):
     # width=1s: anchors at 61, 10.4, 2.5, then 0.9 (since 2.5-0.9>1) joins
     # 0.5 and 0 (0.9-0<=1 inclusive)
     ts = np.array(sorted(F6_TS, reverse=True), dtype=np.int64)
-    seg = _greedy_segment_ids(ts, S)
+    seg = segment_ids(ts, S)
     # newest bucket 0 = {61s}; bucket 1 = {10.4, 10}; bucket 2 = {2.5, 1.7};
     # bucket 3 = {0.9, 0.5, 0}
     assert seg.tolist() == [0, 1, 1, 2, 2, 3, 3, 3]
@@ -81,24 +80,30 @@ def test_greedy_multi_series_merge(spark):
     assert [b.len for b in res["x"]] == [2, 1]
 
 
-def test_greedy_open_bucket_guard(spark):
+@pytest.mark.parametrize("path", ["reanchor", "drop", "sliced"])
+def test_greedy_open_bucket_guard(spark, path):
     # pathological density: every point of a group within one width span
     # -> the open bucket can never close; the task must fail loudly with a
-    # pointer to aligned mode instead of accumulating rows until OOM
+    # pointer to aligned mode instead of accumulating rows until OOM. All
+    # three scans share one carry loop and so one guard message.
     from pyspark.sql import functions as F
 
-    from talna_spark.aggregate import greedy_buckets
+    from talna_spark.aggregate import greedy_buckets, greedy_buckets_sliced
 
     rows = [("m", i, float(i), {"h": "a"}) for i in range(10)]  # all within 1s
-    pts = make_points(spark, rows)
-    df = greedy_buckets(
-        pts.filter(F.col("metric") == "m"),
-        F.col("tags").getItem("h"),
-        "sum",
-        S,
-        max_open_bucket_rows=4,
-    )
-    with pytest.raises(Exception, match="aligned mode"):
+    pts = make_points(spark, rows).filter(F.col("metric") == "m")
+    grp = F.col("tags").getItem("h")
+    if path == "sliced":
+        df = greedy_buckets_sliced(
+            pts, grp, "sum", S, 10 * S, max_open_bucket_rows=4
+        )
+    else:
+        df = greedy_buckets(
+            pts, grp, "sum", S, max_open_bucket_rows=4, boundary=path
+        )
+    with pytest.raises(
+        Exception, match="exceeds 4 rows .* use aligned mode or a smaller"
+    ):
         df.collect()
 
 
@@ -428,71 +433,6 @@ def test_greedy_auto_rejects_other_strings(spark):
         db.avg("app.purchase", "user").mode("greedy").greedy_slices("wide")
 
 
-def test_greedy_auto_sampled_decision(spark, monkeypatch):
-    """The 100 TB dial: auto's stats pass may read a SEEDED sample and
-    scale counts by 1/fraction before the threshold compare — the
-    decision is approximate but both physical paths are bit-identical,
-    so only performance is at stake. Pin: deterministic (seeded),
-    recorded in stats, correct results in both decision outcomes, and
-    the scaled estimate lands near the true max group size."""
-    import talna_spark.aggregate as agg
-
-    db = Database.from_events(spark, "/root/testdata/sf0.001")
-    base = (
-        db.avg("app.purchase", "user")
-        .mode("greedy")
-        .granularity(Duration.MINUTE)
-    )
-    single = _collect_buckets(base.to_df())
-
-    from talna_spark.dsl.parser import parse_filter_query
-
-    def _scan():
-        return base._db._backend.scan(
-            "app.purchase", parse_filter_query("*"), None, None
-        )
-
-    # exact decision for the true max group size
-    _u, _w, exact_stats = agg.greedy_auto_decision(
-        _scan(), base._group_col(), Duration.MINUTE
-    )
-    true_max = exact_stats["max_group_rows"]
-
-    # sampled, threshold forced low -> sliced; results still exact
-    monkeypatch.setattr(agg, "GREEDY_AUTO_ROWS", 2)
-    b = (
-        db.avg("app.purchase", "user")
-        .mode("greedy")
-        .granularity(Duration.MINUTE)
-        .greedy_slices("auto", sample_fraction=0.5)
-    )
-    assert _collect_buckets(b.to_df()) == single
-    path, _sw, stats = b._greedy_auto_choice
-    assert path == "sliced"
-    assert stats["sample_fraction"] == 0.5
-    # scaled estimate within 3x of truth at fraction=0.5 on ~20-row
-    # groups (loose: Bernoulli variance is high at this tiny sf)
-    assert 0 < stats["max_group_rows"] < 3 * max(true_max, 1) + 10
-    # seeded: the same decision twice sees the same sample
-    _u2, _w2, stats2 = agg.greedy_auto_decision(
-        _scan(), base._group_col(), Duration.MINUTE,
-        threshold=2, sample_fraction=0.5,
-    )
-    assert stats2["max_group_rows"] == stats["max_group_rows"]
-
-    # validation surface
-    from talna_spark.errors import InvalidQueryError
-
-    with pytest.raises(InvalidQueryError, match="sample_fraction"):
-        db.avg("app.purchase", "user").mode("greedy").greedy_slices(
-            "auto", sample_fraction=1.5
-        )
-    with pytest.raises(InvalidQueryError, match="auto"):
-        db.avg("app.purchase", "user").mode("greedy").greedy_slices(
-            Duration.HOUR, sample_fraction=0.5
-        )
-
-
 def test_greedy_auto_state_cleared_on_explicit_width(spark):
     """r17 review: switching a builder from auto back to an explicit
     width must clear the auto state — otherwise the plan-cache
@@ -507,19 +447,21 @@ def test_greedy_auto_state_cleared_on_explicit_width(spark):
             .granularity(Duration.MINUTE)
         )
 
-    switched = fresh().greedy_slices("auto", sample_fraction=0.5)
+    switched = fresh().greedy_slices("auto")
     switched.to_df()
     assert switched._greedy_auto_choice is not None
     switched.greedy_slices(6 * Duration.HOUR)
-    assert switched._greedy_auto_sample is None
     assert switched._greedy_auto_choice is None
     explicit = fresh().greedy_slices(6 * Duration.HOUR)
     assert switched._plan_signature() == explicit._plan_signature()
     # and re-arming auto clears the stale choice until the next build
+    # (the first auto build cached this very signature: drop it, so the
+    # next to_df() really builds)
+    db._invalidate_plans()
     rearmed = fresh().greedy_slices("auto")
     rearmed.to_df()
     assert rearmed._greedy_auto_choice is not None
-    rearmed.greedy_slices("auto", sample_fraction=0.5)
+    rearmed.greedy_slices("auto")
     assert rearmed._greedy_auto_choice is None
 
 
@@ -534,10 +476,11 @@ def test_greedy_auto_small_span_stays_single(spark, monkeypatch):
 
     # 40 points, span = 39 ns; width 60 ns -> min slice width 61 >
     # span/2, so no two slices fit; threshold lowered below the group
+    monkeypatch.setattr(agg, "GREEDY_AUTO_ROWS", 10)
     rows = [("m", t, 1.0, {"h": "a"}) for t in range(40)]
     pts = make_points(spark, rows).filter(F.col("metric") == "m")
     use, sw, stats = agg.greedy_auto_decision(
-        pts, F.col("tags").getItem("h"), 60, threshold=10
+        pts, F.col("tags").getItem("h"), 60
     )
     assert use is False and sw is None
     assert stats["max_group_rows"] == 40  # over threshold, yet single
@@ -545,7 +488,7 @@ def test_greedy_auto_small_span_stays_single(spark, monkeypatch):
     rows2 = [("m", t * 200, 1.0, {"h": "a"}) for t in range(40)]
     pts2 = make_points(spark, rows2).filter(F.col("metric") == "m")
     use2, sw2, _ = agg.greedy_auto_decision(
-        pts2, F.col("tags").getItem("h"), 60, threshold=10
+        pts2, F.col("tags").getItem("h"), 60
     )
     assert use2 is True and 60 < sw2 <= (39 * 200) // 2
 
@@ -597,10 +540,16 @@ def test_sliced_greedy_slice_width_validation(spark):
     from pyspark.sql import functions as F
 
     from talna_spark.aggregate import greedy_buckets_sliced
+    from talna_spark.errors import InvalidQueryError
 
     pts = make_points(spark, _rows(SLICED_TS))
     with pytest.raises(ValueError, match="slice_width"):
         greedy_buckets_sliced(pts, F.col("tags").getItem("h"), "sum", S, S)
+    # through the builder the same mistake is a typed API-boundary error
+    db = Database.from_points(spark, pts)
+    with pytest.raises(InvalidQueryError, match="slice_width"):
+        (db.sum("m", "h").mode("greedy").granularity(Duration.MINUTE)
+         .greedy_slices(Duration.MINUTE).to_df())
 
 
 def test_greedy_multigroup(spark):
@@ -628,12 +577,12 @@ def test_greedy_multigroup(spark):
 # ---- oracle-port independence (VERDICT r7 item 1) -----------------------
 # The driver oracle (oracle._greedy_runs) is a SECOND, standalone port of
 # src/agg/stream.rs:60-97 that shares no code with the engine's
-# aggregate._greedy_segment_ids. These tests prove the two ports agree on
+# aggregate._greedy_starts scan. These tests prove the two ports agree on
 # the fixture corpora and on randomized streams, so the driver's q17/q18
 # hash check is no longer self-referential.
 
 def _runs_from_ids(seg: np.ndarray) -> list[tuple[int, int]]:
-    """Convert the engine port's per-element id array to (start, len) runs."""
+    """Convert the engine scan's per-element id array to (start, len) runs."""
     out: list[tuple[int, int]] = []
     for i, s in enumerate(seg.tolist()):
         if out and s == prev:  # noqa: F821 - prev set on first iteration
@@ -654,7 +603,7 @@ def test_greedy_ports_agree_on_fixtures(width, ts_list):
 
     ts = np.array(sorted(ts_list, reverse=True), dtype=np.int64)
     assert _greedy_runs(ts.tolist(), width) == _runs_from_ids(
-        _greedy_segment_ids(ts, width)
+        segment_ids(ts, width)
     )
 
 
@@ -668,7 +617,7 @@ def test_greedy_ports_agree_randomized():
         ts = np.sort(np.cumsum(gaps).astype(np.int64))[::-1].copy()
         width = int(rng.integers(1, 2 * S))
         runs = _greedy_runs(ts.tolist(), width)
-        assert runs == _runs_from_ids(_greedy_segment_ids(ts, width))
+        assert runs == _runs_from_ids(segment_ids(ts, width))
         assert sum(n for _, n in runs) == len(ts)
 
 
@@ -722,11 +671,9 @@ def test_boundary_point_reanchors(spark, sliced):
 
 
 def test_drop_boundary_variant_pins_reference_behavior():
-    from talna_spark.aggregate import _greedy_segment_ids_drop_boundary
-
     ts = np.array(sorted(BOUNDARY_TS, reverse=True), dtype=np.int64)
-    reanchor = _greedy_segment_ids(ts, S)
-    drop = _greedy_segment_ids_drop_boundary(ts, S)
+    reanchor = segment_ids(ts, S)
+    drop = segment_ids(ts, S, drop=True)
     # shipped semantics: [3S, 2S] bucket 0, [0] bucket 1
     assert reanchor.tolist() == [0, 0, 1]
     # reference semantics: [3S, 2S] bucket 0, ts=0 dropped (-1) — one point
@@ -739,19 +686,15 @@ def test_drop_boundary_variant_consecutive_boundaries():
     # bucket each); the reference drops every OTHER point (each dropped
     # point also resets, so the next one initializes a fresh bucket)
     ts = np.array([10 * S, 7 * S, 4 * S, 0], dtype=np.int64)
-    assert _greedy_segment_ids(ts, S).tolist() == [0, 1, 2, 3]
-    from talna_spark.aggregate import _greedy_segment_ids_drop_boundary
-
-    assert _greedy_segment_ids_drop_boundary(ts, S).tolist() == [0, -1, 1, -1]
+    assert segment_ids(ts, S).tolist() == [0, 1, 2, 3]
+    assert segment_ids(ts, S, drop=True).tolist() == [0, -1, 1, -1]
 
 
 def test_drop_boundary_variant_agrees_when_no_boundary():
     # with no boundary crossing the two semantics are identical
-    from talna_spark.aggregate import _greedy_segment_ids_drop_boundary
-
     ts = np.array([3 * S, int(2.5 * S), 2 * S], dtype=np.int64)
-    assert _greedy_segment_ids(ts, 2 * S).tolist() == [0, 0, 0]
-    assert _greedy_segment_ids_drop_boundary(ts, 2 * S).tolist() == [0, 0, 0]
+    assert segment_ids(ts, 2 * S).tolist() == [0, 0, 0]
+    assert segment_ids(ts, 2 * S, drop=True).tolist() == [0, 0, 0]
 
 
 # ---- drop semantics EXECUTABLE end-to-end (r15, VERDICT r14 item 2) -----
@@ -761,7 +704,7 @@ def test_drop_boundary_variant_agrees_when_no_boundary():
 
 
 def _drop_runs_from_ids(seg: np.ndarray) -> list[tuple[int, int]]:
-    """(start, len) runs from the drop variant's id array; -1 elements
+    """(start, len) runs from the drop scan's id array; -1 elements
     (dropped boundary points) belong to no run."""
     out: list[tuple[int, int]] = []
     for i, s in enumerate(seg.tolist()):
@@ -781,17 +724,15 @@ def _drop_runs_from_ids(seg: np.ndarray) -> list[tuple[int, int]]:
                 [0, S, 2 * S, 3 * S]]
 )
 def test_drop_ports_agree_on_fixtures(width, ts_list):
-    from talna_spark.aggregate import _greedy_segment_ids_drop_boundary
     from talna_spark.oracle import _greedy_runs_drop
 
     ts = np.array(sorted(ts_list, reverse=True), dtype=np.int64)
     assert _greedy_runs_drop(ts.tolist(), width) == _drop_runs_from_ids(
-        _greedy_segment_ids_drop_boundary(ts, width)
+        segment_ids(ts, width, drop=True)
     )
 
 
 def test_drop_ports_agree_randomized():
-    from talna_spark.aggregate import _greedy_segment_ids_drop_boundary
     from talna_spark.oracle import _greedy_runs, _greedy_runs_drop
 
     rng = np.random.default_rng(15)
@@ -801,7 +742,7 @@ def test_drop_ports_agree_randomized():
         ts = np.sort(np.cumsum(gaps).astype(np.int64))[::-1].copy()
         width = int(rng.integers(1, 2 * S))
         runs = _greedy_runs_drop(ts.tolist(), width)
-        ids = _greedy_segment_ids_drop_boundary(ts, width)
+        ids = segment_ids(ts, width, drop=True)
         assert runs == _drop_runs_from_ids(ids)
         n_dropped = int((ids == -1).sum())
         assert sum(ln for _, ln in runs) + n_dropped == len(ts)
@@ -869,14 +810,20 @@ def test_greedy_drop_engine_carry_across_batches(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
 
 
-def test_greedy_drop_engine_matches_oracle_randomized(spark):
-    # distributed engine vs the oracle's independent drop port on a
-    # randomized multi-group stream, summation order and all
+@pytest.mark.parametrize("batch", [1, 7, 10000])
+@pytest.mark.parametrize("boundary", ["reanchor", "drop"])
+def test_greedy_engine_matches_oracle_randomized(spark, boundary, batch):
+    # distributed engine vs the oracle's independent port of the same
+    # boundary rule on a randomized multi-group stream, summation order
+    # and all; tiny Arrow batches make the carry hold multi-row open
+    # buckets across batch junctions
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from talna_spark.aggregate import greedy_buckets
-    from talna_spark.oracle import _greedy_runs_drop
+    from talna_spark.oracle import _greedy_runs, _greedy_runs_drop
 
+    port = _greedy_runs_drop if boundary == "drop" else _greedy_runs
     rng = np.random.default_rng(16)
     rows = []
     for h in ("a", "b", "c"):
@@ -886,18 +833,24 @@ def test_greedy_drop_engine_matches_oracle_randomized(spark):
             rows.append(("m", int(t), float(rng.normal()), {"h": h}))
     pts = make_points(spark, rows).filter(F.col("metric") == "m")
     grp = F.col("tags").getItem("h")
-    got = _collect_buckets(greedy_buckets(pts, grp, "sum", S, boundary="drop"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        got = _collect_buckets(
+            greedy_buckets(pts, grp, "sum", S, boundary=boundary)
+        )
+    finally:
+        spark.conf.set(key, old)
 
     expected = []
-    import pandas as pd
-
     pdf = pd.DataFrame(
         [(r[3]["h"], r[1], r[2]) for r in rows], columns=["g", "ts", "v"]
     ).sort_values(["g", "ts", "v"], ascending=[True, False, True])
     for g, gdf in pdf.groupby("g", sort=True):
         ts_l = gdf["ts"].tolist()
         v_arr = gdf["v"].to_numpy(dtype=np.float64)
-        runs = _greedy_runs_drop(ts_l, S)
+        runs = port(ts_l, S)
         kept = v_arr[np.concatenate([np.arange(s, s + n) for s, n in runs])]
         lens = np.array([n for _, n in runs])
         starts = np.concatenate(([0], np.cumsum(lens)[:-1])).astype(np.int64)
@@ -907,20 +860,19 @@ def test_greedy_drop_engine_matches_oracle_randomized(spark):
                 (g, ts_l[s + n - 1], ts_l[s], float(sums[i]), n)
             )
     assert got == sorted(expected)
+    # the stream really holds multi-point buckets to carry
+    assert max(n for *_, n in got) > 1
 
 
 @pytest.mark.parametrize("kind", ["avg", "min", "max", "count", "p95", "stddev"])
 def test_greedy_drop_all_kinds(spark, kind):
     # every aggregation kind through the drop path equals the value
-    # computed from the plain-Python drop-variant ids on the same data
-    # (the shared _aggregate handles the kind; the keep-mask filter and
+    # computed from the drop scan's ids on the same data
+    # (the shared _greedy_agg handles the kind; the keep-mask filter and
     # start remap must not disturb any of them)
     from pyspark.sql import functions as F
 
-    from talna_spark.aggregate import (
-        _greedy_segment_ids_drop_boundary,
-        greedy_buckets,
-    )
+    from talna_spark.aggregate import greedy_buckets
 
     ts_list = sorted(SLICED_TS, reverse=True)
     rows = [("m", t, float(i + 1), {"h": "a"}) for i, t in enumerate(ts_list)]
@@ -931,7 +883,7 @@ def test_greedy_drop_all_kinds(spark, kind):
     ts = np.array(ts_list, dtype=np.int64)
     # engine sorts (ts DESC, value ASC); equal-ts rows here are absent
     vals = np.array([float(i + 1) for i in range(len(ts_list))])
-    ids = _greedy_segment_ids_drop_boundary(ts, S)
+    ids = segment_ids(ts, S, drop=True)
     expected = []
     for b in range(int(ids.max()) + 1 if len(ids) else 0):
         sel = ids == b

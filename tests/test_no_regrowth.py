@@ -14,7 +14,7 @@ import os
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "talna_spark")
 WINDOW = 8
-MAX_REPEATED_LINES = 16
+MAX_REPEATED_LINES = 0
 
 
 def repeated_lines(root: str = PKG) -> dict:

@@ -12,9 +12,9 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from talna_spark.aggregate import _greedy_segment_ids
 from talna_spark.dsl.ast import AllStar, And, Eq, Node, Not, Or, Wildcard
 from talna_spark.dsl.parser import parse_filter_query
+from tests.conftest import segment_ids
 
 # DSL charsets (reference src/query/lexer.rs:3-26)
 KEY_ALPHA = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ_-"
@@ -73,7 +73,7 @@ def test_parser_round_trips_rendered_ast(node):
 @settings(max_examples=200, deadline=None)
 def test_greedy_invariants(ts_values, width):
     ts = np.array(sorted(ts_values, reverse=True), dtype=np.int64)
-    seg = _greedy_segment_ids(ts, width)
+    seg = segment_ids(ts, width)
     # bucket ids are 0-based, contiguous, nondecreasing over the DESC scan
     assert seg[0] == 0
     assert set(np.diff(seg).tolist()) <= {0, 1}
