@@ -170,6 +170,7 @@ from talna_spark.pipeline import sampling as _sampling
 from talna_spark.pipeline import similarity as _sim
 from talna_spark.pipeline import text as _text
 from talna_spark.pipeline.packing import chunk_documents_sql as _chunk_sql
+from talna_spark.pipeline.scan import read_documents
 
 _EXT: dict[str, tuple] = {
     # x01 consolidates the four map-only text signals (token stats,
@@ -1093,13 +1094,11 @@ def _x01_text_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unicodedata against DuckDB's INDEPENDENT nfc_normalize
     # byte-for-byte; v1 = changed flag, v2 = composed length, v3 =
     # composition shrink.
-    deco = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id",
-            F.concat(
-                F.col("text"), _text.nfc_demo_decoration(F.col("doc_id"))
-            ).alias("text"),
-        )
+    deco = read_documents(spark, sf_dir, "doc_id", "text").select(
+        "doc_id",
+        F.concat(
+            F.col("text"), _text.nfc_demo_decoration(F.col("doc_id"))
+        ).alias("text"),
     )
     nfc = norm(
         _text.nfc_normalize_text(deco),

@@ -43,6 +43,7 @@ from talna_spark.pipeline.portable import (
     tokens,
     tokens_sql,
 )
+from talna_spark.pipeline.scan import fan_out, read_documents
 
 # Demo dimensionality for the driver-checked scoring row: small enough
 # that the oracle's weight table is a range() scan, large enough that
@@ -52,10 +53,6 @@ DEMO_BIAS = 0.0
 
 NANO = 1_000_000_000.0
 MICRO = 1_000_000.0
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # ------------------------------------------------------------- features
@@ -83,8 +80,6 @@ def hashed_features(
     with sibling consumers; the derivation is identical (same tokens()
     split, same explode), so features are bit-identical. ``None`` keeps
     the self-contained plan."""
-    from talna_spark.pipeline.scan import fan_out
-
     if tok is None:
         tok = fan_out(docs).select(
             "doc_id", F.explode(tokens(F.col(text_col))).alias("token")
@@ -129,8 +124,6 @@ def char_ngram_features(
     fan_out-widened (a no-op unless the bench env var is set — on the
     single-row-group bench file the whole featurize otherwise ran on
     ONE task)."""
-    from talna_spark.pipeline.scan import fan_out
-
     base = fan_out(docs).select(
         "doc_id", norm_text(F.col(text_col)).alias("_t")
     ).localCheckpoint(eager=False)
@@ -207,8 +200,9 @@ def score_documents(
     ``tok`` (r18): pass-through to :func:`hashed_features` — a shared
     (doc_id, token) stream replacing the self-contained scan+explode
     (bit-identical features; ``None`` keeps the self-contained plan)."""
-    d = docs if docs is not None else (_docs(spark, sf_dir) if tok is None else None)
-    feat = hashed_features(d, n_features, tok=tok)
+    if docs is None and tok is None:
+        docs = read_documents(spark, sf_dir, "doc_id", "text")
+    feat = hashed_features(docs, n_features, tok=tok)
     wdf = weights_df(spark, n_features, weights)
     nano = F.round(
         F.col("w") * (F.col("tf").cast("double") / F.col("n")) * NANO

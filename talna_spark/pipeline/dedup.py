@@ -33,7 +33,7 @@ from talna_spark.pipeline.portable import (
     tokens,
     tokens_sql,
 )
-from talna_spark.pipeline.scan import fan_out
+from talna_spark.pipeline.scan import fan_out, read_documents
 from talna_spark.pipeline.sketches import _bitmap_words, lc_merge
 
 SHINGLE_K = 3          # word 3-grams
@@ -60,16 +60,12 @@ LENGTH_BUCKET = 64     # chars, blocking key for the quadratic verifier
 LSH_MAX_BUCKET = 1000
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 # -------------------------------------------------------------- exact dedup
 def exact_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash: the surviving (canonical) doc per
     distinct text = min doc_id, with the group size. A pipeline keeps
     ``keep_doc`` and drops the rest."""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     return (
         d.groupBy(F.md5("text").alias("text_hash"))
         .agg(F.min("doc_id").alias("keep_doc"), F.count("*").alias("n_copies"))
@@ -162,7 +158,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # captures the words expression, so the inline form re-ran the
     # token SPLIT once per shingle (r12; measured 4.91 -> 2.61 s at
     # sf0.1, same fix class as the survivor rebuild)
-    dw = _tokenized(_docs(spark, sf_dir), tokens(F.col("text")))
+    d = read_documents(spark, sf_dir, "doc_id", "text")
+    dw = _tokenized(d, tokens(F.col("text")))
     sh = shingles(F.col("_w"), SHINGLE_K)
     return dw.select("doc_id", *_minhash_cols(sh))
 
@@ -245,7 +242,8 @@ def lsh_hot_buckets(
     the exclusion is audited, not silent; a non-empty report means the
     corpus needs exact dedup first (identical-text floods) or a larger
     cap. One map-side-combined groupBy over id-only band rows."""
-    dw = _tokenized(_docs(spark, sf_dir), tokens(F.col("text")))
+    d = read_documents(spark, sf_dir, "doc_id", "text")
+    dw = _tokenized(d, tokens(F.col("text")))
     sh = shingles(F.col("_w"), SHINGLE_K)
     sig = dw.select("doc_id", *_minhash_cols(sh))
     return (
@@ -288,7 +286,8 @@ def lsh_near_dup_pairs(
     # TALNA_MIN_SCAN_TASKS fan-out (pipeline.scan) spreads a
     # single-row-group source across tasks (no-op on real multi-file
     # sources and in the default configuration)
-    dw = _tokenized(fan_out(_docs(spark, sf_dir)), tokens(F.col("text")))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
+    dw = _tokenized(d, tokens(F.col("text")))
     sh = shingles(F.col("_w"), SHINGLE_K)
     # Materialize (shingles, base hashes) ONCE behind a lazy
     # localCheckpoint, then derive the H signature columns from the
@@ -395,7 +394,7 @@ def simhash(
     kept via the final coalesce)."""
     if not 1 <= int(bits) <= 60:
         raise ValueError("bits must be in [1, 60] (hash64 is 60-bit)")
-    d = fan_out(_docs(spark, sf_dir))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
     th = F.transform(tokens(F.col("text")), lambda t: hash64(t))
     zero = F.lit(0).cast("long")
     powers = F.array(*[F.lit(1 << b).cast("long") for b in range(int(bits))])
@@ -651,7 +650,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str, max_iter: int = 25) -> Data
             "(component diameter too large — raise max_iter or use the "
             "small-star/large-star variant)"
         )
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = read_documents(spark, sf_dir, "doc_id")
     out = docs.join(labels, docs.doc_id == labels.id, "left").select(
         "doc_id",
         F.coalesce("label", "doc_id").alias("cluster"),
@@ -701,7 +700,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one shingle in every doc of a bucket) go quadratic per (lb, h)
     group by design — the same degenerate input the LSH hot-bucket
     guard documents; exact dedup runs first."""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     # integer division on both sides: DuckDB CAST(float AS BIGINT) rounds
     # half-to-even while Spark's cast truncates — `div` / `//` sidestep it
     dt = d.select(
@@ -943,7 +942,8 @@ def _dup_positions(spark: SparkSession, sf_dir: str, k: int) -> tuple:
     start — a gram is duplicated when >= 2 distinct documents hold it.
     The one gram-position scan behind :func:`dup_spans`,
     :func:`dup_span_clean` and :func:`dup_span_maximal`."""
-    dw = _tokenized(fan_out(_docs(spark, sf_dir)), tokens(F.col("text")))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
+    dw = _tokenized(d, tokens(F.col("text")))
     # (doc_id, p, gram_hash) computed ONCE behind a lazy localCheckpoint:
     # its consumers (dup set, the duplicated-position join) would
     # otherwise each re-evaluate the md5 transform — the LSH planning
@@ -1205,8 +1205,8 @@ def dedup_against(
     accumulate). Exact flags ride a broadcast-or-shuffle join on the
     text hash (AQE decides — the hash set is corpus-sized for the
     reference, id-only rows)."""
-    new_d = fan_out(_docs(spark, new_dir))
-    ref_d = fan_out(_docs(spark, ref_dir))
+    new_d = fan_out(read_documents(spark, new_dir, "doc_id", "text"))
+    ref_d = fan_out(read_documents(spark, ref_dir, "doc_id", "text"))
     return dedup_against_frames(new_d, ref_d, max_bucket=max_bucket)
 
 
@@ -1798,7 +1798,7 @@ def dedup_against_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefilter — one oracle states both (the bitmap never drops a true
     member, so the verdicts must be identical; a false-negative bug in
     the bloom breaks the hash)."""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
 
     def run(bloom_bits):
         out = dedup_against_frames(
@@ -1895,7 +1895,8 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shape as dup_span_clean, at paragraph instead of k-gram
     granularity.
     """
-    dw = _tokenized(_docs(spark, sf_dir), F.split(F.col("text"), "\n"))
+    d = read_documents(spark, sf_dir, "doc_id", "text")
+    dw = _tokenized(d, F.split(F.col("text"), "\n"))
     # (doc_id, idx, h) id-rows for non-empty paragraphs only
     pos = (
         dw.select(
@@ -1969,7 +1970,7 @@ def within_doc_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, no aggregate, no UDF, nothing leaves the scan stage
     (plan-tested). Per-doc cost is O(lines^2) string compares in the
     worst case, bounded by document size, not corpus size."""
-    d = fan_out(_docs(spark, sf_dir))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
     return d.select(
         "doc_id",
         F.split(F.col("text"), "\n").alias("ps"),

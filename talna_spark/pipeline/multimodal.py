@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from talna_spark.aggregate import round6
+from talna_spark.pipeline.scan import fan_out, read_documents
 
 EMBED_DIMS = 4
 
@@ -51,19 +52,6 @@ FEATURE_SCHEMA = (
     "doc_id long, media_type string, n_bytes long, fingerprint string, "
     + ", ".join(f"f{i} double" for i in range(EMBED_DIMS))
 )
-
-
-def _fan_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents scan behind the shared compute-in-scan fan-out (r17):
-    every codec leg SYNTHESIZES its payloads (deflate, huffman, CRC —
-    real per-doc Python work) and decodes them in a second Arrow pass,
-    both inside the scan stage; on a single-row-group bench source the
-    whole leg otherwise serialized onto ONE task. No-op unless
-    TALNA_MIN_SCAN_TASKS widens the scan (production plan shapes are
-    unchanged — see pipeline/scan.py)."""
-    from talna_spark.pipeline.scan import fan_out
-
-    return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
 _MEDIA_SCHEMA = "doc_id long, media_type string, payload binary"
@@ -76,7 +64,11 @@ def _synth_media(
     bytes`` in an Arrow-batched mapInPandas pass over the doc ids (the
     stand-in for reading real media files — the container ships none).
     Returns (doc_id, media_type, payload binary)."""
-    d = _fan_docs(spark, sf_dir).select("doc_id")
+    # every codec leg SYNTHESIZES its payloads (deflate, huffman, CRC —
+    # real per-doc Python work) and decodes them in a second Arrow pass,
+    # both inside the scan stage: the shared compute-in-scan fan-out
+    # (pipeline/scan.py) keeps a single-row-group source off ONE task
+    d = fan_out(read_documents(spark, sf_dir, "doc_id"))
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -160,7 +152,9 @@ def _dib_rows(
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> multimodal layout: (doc_id, media_type, payload binary,
     meta struct). The payload is the utf-8 encoding of the text."""
-    d = _fan_docs(spark, sf_dir)
+    d = fan_out(
+        read_documents(spark, sf_dir, "doc_id", "text", "lang", "source", "n_chars")
+    )
     return d.select(
         "doc_id",
         F.lit("text/plain").alias("media_type"),
@@ -1788,7 +1782,7 @@ def make_pdf(text: str, compress: bool) -> bytes:
 def pdf_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One PDF blob per document row (even doc_ids FlateDecode-compressed,
     odd raw — both stream paths exercised on every run)."""
-    d = _fan_docs(spark, sf_dir).select("doc_id", "text")
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -33,15 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from talna_spark.pipeline.portable import tokens
-from talna_spark.pipeline.scan import read_documents
+from talna_spark.pipeline.scan import fan_out, read_documents
 
 PACK_BUDGET = 2048
 N_SHARDS = 64
 _SHARD_STRIDE = 1 << 40  # pack_id = shard * stride + local pack index
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 def pack_assign(
@@ -56,7 +52,7 @@ def pack_assign(
     Lengths are whitespace-token counts; :func:`pack_assign_lengths`
     packs by any caller-supplied length (e.g. BPE tokens — see
     :func:`tokenize_pack`)."""
-    d = _docs(spark, sf_dir).select(
+    d = read_documents(spark, sf_dir, "doc_id", "text").select(
         "doc_id", F.size(tokens(F.col("text"))).alias("n_tokens")
     )
     return pack_assign_lengths(d, budget=budget, n_shards=n_shards)
@@ -193,9 +189,9 @@ def chunk_documents(
     if not 0 < st <= ms:
         raise ValueError("require 0 < step <= max_tokens")
     overlap = ms - st
-    from talna_spark.pipeline.scan import fan_out
-
-    d = fan_out(_docs(spark, sf_dir)).filter(F.col("text").isNotNull())
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text")).filter(
+        F.col("text").isNotNull()
+    )
     w = tokens(F.col("text"))
     # explode in its own select (generators cannot nest in expressions)
     starts = F.sequence(

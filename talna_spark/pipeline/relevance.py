@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from talna_spark.aggregate import round6
 from talna_spark.pipeline.portable import tokens, tokens_sql
+from talna_spark.pipeline.scan import fan_out, read_documents
 
 K1 = 1.2
 B = 0.75
@@ -43,15 +44,6 @@ def _terms(query: str) -> list[str]:
     return list(dict.fromkeys(query.strip().lower().split()))
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from talna_spark.pipeline.scan import fan_out
-
-    # r17: BM25 tokenizes and scores map-side inside the scan stage —
-    # widen single-row-group sources (no-op unless TALNA_MIN_SCAN_TASKS
-    # is set; integer stats + per-row scoring are partition-independent)
-    return fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
-
-
 def bm25_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -63,7 +55,10 @@ def bm25_topk(
     from pyspark.sql.window import Window
 
     terms = _terms(query)
-    d = _docs(spark, sf_dir).select(
+    # BM25 tokenizes and scores map-side inside the scan stage — widen
+    # single-row-group sources (no-op unless TALNA_MIN_SCAN_TASKS is set;
+    # integer stats + per-row scoring are partition-independent)
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text")).select(
         "doc_id", tokens(F.col("text")).alias("_w")
     )
     # (1) one integer-valued stats aggregate: N, sum of doc lengths, and

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from talna_spark.pipeline.scan import read_documents
+from talna_spark.pipeline.scan import fan_out, read_documents
 
 TRAIN_PCT = 80
 VAL_PCT = 10  # test = remainder
@@ -122,9 +122,8 @@ def mix_token_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONCE instead of once per sampler. 100 TB shape: the checkpoint
     holds (id, source, int64) rows only, never raw text."""
     from talna_spark.pipeline.portable import tokens
-    from talna_spark.pipeline.scan import fan_out
 
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "source", "text"))
     return d.select(
         "doc_id",
         "source",
@@ -585,12 +584,11 @@ def dsir_select(
     once; nothing corpus-sized shuffles except (doc_id, bucket) ids.
     """
     from talna_spark.pipeline.portable import grams, hash64, tokens
-    from talna_spark.pipeline.scan import fan_out
 
     m = int(n_buckets)
     # the gram explode + hash is the dominant map cost; the shared
     # TALNA_MIN_SCAN_TASKS fan-out spreads a single-row-group source
-    d = fan_out(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
     # tokens materialized first: grams' slice lambda captures the words
     # expression, so the inline form re-ran the split per gram (r12,
     # the dedup._tokenized rule)
@@ -1034,7 +1032,6 @@ def doremi_weights_iterated(
     lazy localCheckpoints — rounds add scoring passes, never new
     corpus scans."""
     from talna_spark.pipeline.portable import tokens
-    from talna_spark.pipeline.scan import fan_out
     from talna_spark.pipeline.text import lm_score_bigram
 
     if int(rounds) < 1:

@@ -15,17 +15,21 @@ IS an Exchange that moves document text.
 Benchmarks set the env var once instead of threading a knob through
 every call site; production jobs on many-file sources never need it.
 
-The module also declares the documents table's column types
-(:func:`read_documents`), so the readers that name their columns skip
-the parquet schema-inference job.
+The module is also the documents table's only reader:
+:func:`read_documents` reads the columns an operator names under their
+declared :data:`DOCUMENTS_COLUMNS` types, so no reader runs a parquet
+schema-inference job and a missing column fails with one typed error.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from talna_spark.errors import MissingColumnError
 
@@ -51,7 +55,13 @@ def fan_out(d: DataFrame, key: str = "doc_id") -> DataFrame:
 # The documents table's column types. Readers name the columns they use
 # and read them under this declared schema: an undeclared parquet read
 # runs a schema-inference job on every call, one Spark job per reader.
-DOCUMENTS_COLUMNS = {"doc_id": "BIGINT", "text": "STRING", "source": "STRING"}
+DOCUMENTS_COLUMNS = {
+    "doc_id": "BIGINT",
+    "text": "STRING",
+    "lang": "STRING",
+    "source": "STRING",
+    "n_chars": "BIGINT",
+}
 
 
 def read_documents(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
@@ -62,11 +72,23 @@ def read_documents(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     be read as the declared one fails the scan with Spark's typed error.
     A named column the file lacks raises :class:`MissingColumnError`
     (checked against the parquet footer on the driver, no Spark job):
-    a declared-schema read would return it as NULL on every row."""
+    a declared-schema read would return it as NULL on every row. A
+    column stored with the parquet NULL type (pandas writes an
+    all-``None`` column so) cannot be read as its declared type; it is
+    returned as a NULL of that type, as the undeclared read returns it."""
     path = f"{sf_dir}/documents.parquet"
-    present = ds.dataset(path, format="parquet").schema.names
-    missing = [c for c in cols if c not in present]
+    footer = ds.dataset(path, format="parquet").schema
+    missing = [c for c in cols if c not in footer.names]
     if missing:
         raise MissingColumnError(f"{path} has no column {', '.join(missing)}")
-    schema = ", ".join(f"{c} {DOCUMENTS_COLUMNS[c]}" for c in cols)
-    return spark.read.schema(schema).parquet(path)
+    nulls = {c for c in cols if pa.types.is_null(footer.field(c).type)}
+    schema = ", ".join(f"{c} {DOCUMENTS_COLUMNS[c]}" for c in cols if c not in nulls)
+    d = spark.read.schema(schema or StructType()).parquet(path)
+    if not nulls:
+        return d
+    return d.select(
+        *[
+            F.lit(None).cast(DOCUMENTS_COLUMNS[c]).alias(c) if c in nulls else c
+            for c in cols
+        ]
+    )

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from talna_spark.pipeline.portable import cosine
+from talna_spark.pipeline.scan import fan_out, read_documents
 
 N_QUERIES = 8        # query set: vec_id < 8
 TOP_K = 5
@@ -52,8 +53,6 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (no-op unless TALNA_MIN_SCAN_TASKS is set; all scoring is
     # per-row map work with (score, id) tie-breaks, so results are
     # partitioning-independent)
-    from talna_spark.pipeline.scan import fan_out
-
     return fan_out(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"), key="vec_id"
     ).select(
@@ -1551,10 +1550,8 @@ def srp_embed_documents(
 
     if not 1 <= int(dim) <= 60:
         raise ValueError("dim must be in [1, 60] (sign bits of one hash)")
-    from talna_spark.pipeline.scan import fan_out
-
     d = docs if docs is not None else fan_out(
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_documents(spark, sf_dir, "doc_id", "text")
     )
     tok = d.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("token")

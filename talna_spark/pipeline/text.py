@@ -21,6 +21,7 @@ from talna_spark.pipeline.portable import (
     tokens,
     tokens_sql,
 )
+from talna_spark.pipeline.scan import fan_out, read_documents
 
 PUNCT_CLASS = "[.,!?;:]"
 STOPWORDS = ("the", "a", "and", "of", "to", "in")
@@ -38,10 +39,6 @@ LANG_MARKERS = {
 }
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def _count_in(words, wordset) -> "F.Column":
     return F.size(F.filter(words, lambda w: w.isin(*wordset)))
 
@@ -53,7 +50,7 @@ def _count_in_sql(words_expr: str, wordset) -> str:
 
 # ------------------------------------------------------------ token stats
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     w = tokens(F.col("text"))
     return d.select(
         "doc_id",
@@ -99,9 +96,7 @@ def quality_parts(words=None) -> tuple:
 
 
 def quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from talna_spark.pipeline.scan import fan_out
-
-    d = fan_out(_docs(spark, sf_dir))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
     n_tok, punct_ratio, stop_ratio, score = quality_parts()
     return d.select(
         "doc_id",
@@ -134,7 +129,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every branch — ~N/2 x (N+1) filter evaluations per row. With
     # per-code score columns the chain compares attributes; measured
     # 0.66 -> 0.20 s at sf0.1, identical output.
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text", "lang")
     codes = sorted(LANG_MARKERS)
     dw = d.select(
         "doc_id", "lang", tokens(F.col("text")).alias("_w")
@@ -223,7 +218,9 @@ def lang_id_learned(
     text; per-class logits are exact int64 in any aggregation order."""
     from talna_spark.pipeline.classifier import NANO, char_ngram_features
 
-    d = docs if docs is not None else _docs(spark, sf_dir)
+    d = docs if docs is not None else read_documents(
+        spark, sf_dir, "doc_id", "text", "lang"
+    )
     if model is not None:
         classes = list(model["classes"])
         n_features = model["n_features"]
@@ -369,7 +366,8 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stable under small edits away from the minimizing window."""
     from talna_spark.pipeline.dedup import _tokenized
 
-    dw = _tokenized(_docs(spark, sf_dir), tokens(F.col("text")))
+    d = read_documents(spark, sf_dir, "doc_id", "text")
+    dw = _tokenized(d, tokens(F.col("text")))
     sh = shingles(F.col("_w"), FINGERPRINT_K)
     fp = F.array_min(F.transform(sh, F.md5))
     return dw.select("doc_id", fp.alias("fingerprint"))
@@ -427,7 +425,8 @@ def winnow_fingerprints(
     # columns make both captures O(1) attribute reads; at sf0.1 the
     # inline form did not finish in 500 s, this one runs in 2.0 s
     # (identical fingerprints, oracle-verified).
-    dw = _tokenized(_docs(spark, sf_dir), tokens(F.col("text")))
+    d = read_documents(spark, sf_dir, "doc_id", "text")
+    dw = _tokenized(d, tokens(F.col("text")))
     dh = dw.select(
         "doc_id",
         _positional_gram_hashes(F.col("_w"), int(k)).alias("_h"),
@@ -489,7 +488,7 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-units (int64) — float summation order differs between Spark's
     partial/final tree and DuckDB's sequential loop, and a group landing
     on a round-half boundary would flip the last digit."""
-    d = _docs(spark, sf_dir).select("doc_id", "source", "lang")
+    d = read_documents(spark, sf_dir, "doc_id", "source", "lang")
     q = quality(spark, sf_dir).select("doc_id", "n_tokens", "quality")
     micro = F.round(F.col("quality") * 1_000_000).cast("long")
     return (
@@ -530,7 +529,7 @@ def pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     job. JVM-side regexp_extract_all (codegen), embarrassingly parallel,
     no shuffle; a `filter(has_pii)` on the output pushes down to the
     scan."""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     emails = F.size(F.regexp_extract_all("text", F.lit(EMAIL_RE), F.lit(0)))
     phones = F.size(F.regexp_extract_all("text", F.lit(PHONE_RE), F.lit(0)))
     return d.select(
@@ -570,7 +569,7 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight to the export sink. (The IPv4 pattern is a shape match,
     not an octet-range validator — over-matching toward redaction is
     the safe direction for a privacy pass.)"""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     emails = F.size(F.regexp_extract_all("text", F.lit(EMAIL_RE), F.lit(0)))
     phones = F.size(F.regexp_extract_all("text", F.lit(PHONE_RE), F.lit(0)))
     ips = F.size(F.regexp_extract_all("text", F.lit(IPV4_RE), F.lit(0)))
@@ -618,7 +617,7 @@ def token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors) — no single-reducer sort of the full vocabulary."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "text")
     counts = (
         d.select(F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("token")
@@ -692,7 +691,7 @@ def token_heavy_hitters(
     from pyspark.sql.window import Window
 
     m = int(slots)
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "text")
     toks = d.select(F.explode(tokens(F.col("text"))).alias("token"))
 
     def _misra_gries(batches):
@@ -777,9 +776,7 @@ def repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     once behind a lazy localCheckpoint (the shared-base rule every
     HOF-over-computed-column op follows), and the guard/divisor use the
     closed form size(g) == max(n_words - k + 1, 0)."""
-    from talna_spark.pipeline.scan import fan_out
-
-    d = fan_out(_docs(spark, sf_dir)).select(
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text")).select(
         "doc_id", tokens(F.col("text")).alias("_w")
     ).localCheckpoint(eager=False)
     w = F.col("_w")
@@ -860,10 +857,8 @@ def lm_token_base(spark: SparkSession, sf_dir: str) -> dict:
     scorer. 100 TB shape: each frame is a map-only derivation of the
     one before it; the checkpoints hold id/token rows only (never raw
     text) and replace k full corpus re-tokenizations with one."""
-    from talna_spark.pipeline.scan import fan_out
-
     d = (
-        fan_out(_docs(spark, sf_dir))
+        fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
         .select("doc_id", tokens(F.col("text")).alias("_w"))
         .localCheckpoint(eager=False)
     )
@@ -921,9 +916,7 @@ def signal_token_base(spark: SparkSession, sf_dir: str) -> dict:
     additional corpus scans + text splits (quality, gopher, c4) and —
     via the shared ``tok`` stream — the classifier slice's tokenize with
     map-only derivations of one pass."""
-    from talna_spark.pipeline.scan import fan_out
-
-    raw = fan_out(_docs(spark, sf_dir)).select(
+    raw = fan_out(read_documents(spark, sf_dir, "doc_id", "source", "text")).select(
         "doc_id",
         "source",
         "text",
@@ -987,12 +980,10 @@ def lm_score(
     identical either way, so results are bit-identical (pinned in
     tests/test_curation_ops.py); ``None`` keeps the self-contained plan.
     """
-    from talna_spark.pipeline.scan import fan_out
-
     if base is not None:
         tok = base["tok"]
     else:
-        d = fan_out(_docs(spark, sf_dir))
+        d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
         tok = d.select(
             "doc_id", F.explode(tokens(F.col("text"))).alias("token")
         )
@@ -1072,7 +1063,7 @@ def quality_cutoff_filter(
         )
     else:
         q = quality(spark, sf_dir).select("doc_id", "quality")
-        d = _docs(spark, sf_dir).select("doc_id", "source")
+        d = read_documents(spark, sf_dir, "doc_id", "source")
         scored = d.join(q, "doc_id")
     cuts = scored.groupBy("source").agg(
         F.round(F.percentile("quality", F.lit(CUTOFF_PCT)), 6).alias("cutoff")
@@ -1143,7 +1134,7 @@ def perplexity_buckets(
     d = (
         src.select("doc_id", "source")
         if src is not None
-        else _docs(spark, sf_dir).select("doc_id", "source")
+        else read_documents(spark, sf_dir, "doc_id", "source")
     )
     scored = d.join(xent, "doc_id")
     p1, p2 = PPL_TERCILES
@@ -1293,8 +1284,6 @@ def gopher_rules(
     (identical expressions → bit-identical values); ``None`` keeps the
     self-contained plan.
     """
-    from talna_spark.pipeline.scan import fan_out
-
     if base is not None:
         m = F.col("g_fail_mask")
         return base["signals"].select(
@@ -1306,7 +1295,7 @@ def gopher_rules(
                 "verdict"
             ),
         )
-    d = fan_out(_docs(spark, sf_dir))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
     n, mask, n_failed = gopher_parts()
     return d.select(
         "doc_id",
@@ -1412,7 +1401,7 @@ def compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    d = _docs(spark, sf_dir).select("doc_id", "text")
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     return d.mapInPandas(_compress, schema=out_schema)
 
 
@@ -1504,8 +1493,6 @@ def c4_rules(
     (identical expressions → bit-identical values); ``None`` keeps the
     self-contained plan.
     """
-    from talna_spark.pipeline.scan import fan_out
-
     if base is not None:
         m = F.col("c4_fail_mask")
         return base["signals"].select(
@@ -1517,7 +1504,7 @@ def c4_rules(
                 "verdict"
             ),
         )
-    d = fan_out(_docs(spark, sf_dir))
+    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
     kept_frac, mask, n_failed = c4_parts()
     return d.select(
         "doc_id",
@@ -1583,7 +1570,7 @@ def unicode_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: map-only JVM regexp counts over one corpus scan — no
     UDF, no shuffle, codegen end-to-end (the quality/lang_id class).
     """
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     L = F.greatest(F.length("text"), F.lit(1))
     repl = F.size(F.regexp_extract_all("text", F.lit("(�)"), 1))
     ctrl = F.size(
@@ -1644,7 +1631,7 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-doc rows <= the alphabet, so no skew funnel)."""
     from pyspark.sql.window import Window as W
 
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     counts = (
         d.select(
             "doc_id", F.explode(F.split(F.col("text"), "")).alias("c")
@@ -1977,7 +1964,7 @@ def script_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: map-only JVM regexp counts over one corpus scan (one
     codegen'd regexp_extract_all per script), no UDF, no shuffle — the
     unicode_signals class."""
-    d = _docs(spark, sf_dir)
+    d = read_documents(spark, sf_dir, "doc_id", "text")
     script, best, total = script_parts()
     return d.select(
         "doc_id",

@@ -71,6 +71,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from talna_spark.pipeline.scan import read_documents
+
 MMIDX_MAGIC = b"MMIDIDX\x00\x00"
 MMIDX_VERSION = 1
 
@@ -704,7 +706,7 @@ def mm_roundtrip_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from talna_spark.pipeline.portable import tokens
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_documents(spark, sf_dir, "doc_id", "text").select(
         "doc_id",
         F.col("doc_id").cast("string").alias("seq_id"),
         F.transform(

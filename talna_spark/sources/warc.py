@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from talna_spark.pipeline.scan import read_documents
+
 WARC_SCHEMA = (
     "warc_file string, record_id string, url string, warc_date string, "
     "http_status int, content_type string, payload string"
@@ -641,9 +643,8 @@ def synth_url_sql() -> str:
 
 
 def _synth_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", synth_url_col().alias("url"), "text")
+    return read_documents(spark, sf_dir, "doc_id", "text").select(
+        "doc_id", synth_url_col().alias("url"), "text"
     )
 
 

@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from talna_spark.pipeline.scan import read_documents
+
 IMAGE_EXTS = ("bmp", "jpg", "jpeg", "png")
 
 WDS_SCHEMA = (
@@ -324,9 +326,7 @@ def roundtrip_layer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from talna_spark.pipeline.multimodal import bmp_media_table
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs = read_documents(spark, sf_dir, "doc_id", "text")
     media = bmp_media_table(spark, sf_dir).select(
         "doc_id", F.col("payload").alias("image")
     )

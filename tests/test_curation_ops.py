@@ -59,12 +59,12 @@ def test_dup_spans_cross_doc_only(spark, span_dir):
 def test_lm_score_matches_hand_computation(spark, span_dir):
     """Add-one unigram cross-entropy recomputed in pure Python for the
     same corpus, including the per-token micro-nat rounding."""
-    from talna_spark.pipeline.dedup import _docs  # same reader
+    from talna_spark.pipeline.scan import read_documents  # same reader
     from talna_spark.pipeline.text import lm_score
 
     texts = {
         r["doc_id"]: r["text"].lower().strip().split()
-        for r in _docs(spark, span_dir).collect()
+        for r in read_documents(spark, span_dir, "doc_id", "text").collect()
     }
     counts: dict[str, int] = {}
     for toks in texts.values():

@@ -642,9 +642,10 @@ def test_dedup_against_bloom_prefilter_identical(spark):
     recovers precision; a dropped true dup would diverge here)."""
     from pyspark.sql import functions as F
 
-    from talna_spark.pipeline.dedup import _docs, dedup_against_frames
+    from talna_spark.pipeline.dedup import dedup_against_frames
+    from talna_spark.pipeline.scan import read_documents
 
-    d = _docs(spark, "/root/testdata/sf0.001")
+    d = read_documents(spark, "/root/testdata/sf0.001", "doc_id", "text")
     new_d = d.filter(F.col("doc_id") % 3 != 0)
     ref_d = d.filter(F.col("doc_id") % 3 == 0)
     plain = sorted(

@@ -712,6 +712,35 @@ def test_read_documents_missing_column_raises(spark, tmp_path):
     with pytest.raises(MissingColumnError, match="text"):
         read_documents(spark, str(tmp_path), "doc_id", "text")
     assert read_documents(spark, str(tmp_path), "doc_id", "source").count() == 2
+    # the operators read through the same reader, so they raise it too
+    from talna_spark.pipeline.text import token_stats
+
+    with pytest.raises(MissingColumnError, match="text"):
+        token_stats(spark, str(tmp_path))
+
+
+def test_read_documents_null_typed_column(spark, tmp_path):
+    """pandas writes an all-None column with the parquet NULL type,
+    which cannot be read as the declared STRING: the reader returns it
+    as a NULL of the declared type, as an undeclared read would, and
+    an operator over such a corpus runs."""
+    import pandas as pd
+
+    from talna_spark.pipeline.sampling import reservoir_docs
+    from talna_spark.pipeline.scan import read_documents
+
+    pd.DataFrame(
+        {"doc_id": [1, 2], "text": ["a b", "c"], "source": [None, None]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    d = read_documents(spark, str(tmp_path), "source", "doc_id", "text")
+    assert d.columns == ["source", "doc_id", "text"]
+    assert d.dtypes == [
+        ("source", "string"), ("doc_id", "bigint"), ("text", "string")
+    ]
+    assert sorted(map(tuple, d.collect())) == [(None, 1, "a b"), (None, 2, "c")]
+    assert read_documents(spark, str(tmp_path), "source").count() == 2
+    sample = reservoir_docs(spark, str(tmp_path)).collect()
+    assert sorted(r["doc_id"] for r in sample) == [1, 2]
 
 
 # ------------------------------------------------------------- histogram

@@ -53,6 +53,25 @@ def test_repeated_lines_do_not_grow():
     )
 
 
+def test_documents_table_has_one_reader():
+    """Only pipeline/scan.py names the documents file: every other module
+    reads it through ``read_documents`` under the declared schema."""
+    hits = []
+    for d, _, names in os.walk(PKG):
+        for n in sorted(names):
+            if n.endswith(".py"):
+                path = os.path.join(d, n)
+                rel = os.path.relpath(path, PKG)
+                with open(path, encoding="utf-8") as f:
+                    hits += [
+                        f"{rel}:{i}"
+                        for i, ln in enumerate(f, 1)
+                        if "documents.parquet" in ln
+                        and rel != os.path.join("pipeline", "scan.py")
+                    ]
+    assert not hits, hits
+
+
 def test_scan_finds_a_planted_copy(tmp_path):
     body = "".join(f"x{i} = {i}\n" for i in range(WINDOW))
     (tmp_path / "a.py").write_text("# a\n" + body)

@@ -872,6 +872,25 @@ def test_curate_step_job_counts(spark, monkeypatch):
     assert n <= 6, n
 
 
+@pytest.mark.parametrize(
+    "op, budget",
+    [("text.token_stats", 1), ("dedup.exact_survivors", 2), ("text.corpus_stats", 3)],
+)
+def test_documents_reader_job_budget(spark, monkeypatch, op, budget):
+    """Operators read the documents table under its declared schema
+    (pipeline.scan.read_documents), so no call runs a parquet
+    schema-inference job: at sf0.001 without the scan fan-out,
+    token_stats runs 1 job, exact_survivors 2 and corpus_stats (two
+    reads) 3; the undeclared read ran 2, 3 and 5."""
+    import importlib
+
+    monkeypatch.delenv("TALNA_MIN_SCAN_TASKS", raising=False)
+    mod, fn = op.split(".")
+    f = getattr(importlib.import_module(f"talna_spark.pipeline.{mod}"), fn)
+    n, _ = _collect_in_group(spark, lambda: f(spark, "/root/testdata/sf0.001"))
+    assert n <= budget, n
+
+
 def test_bloom_gate_not_copied_to_reference_scan(spark):
     """In the literal regime both Bloom exact-dedup callers evaluate the
     gate once per new row inside the new-side checkpoint and hand on

@@ -288,14 +288,14 @@ def test_r13_stack_incremental_crawls_prebuilt_bloom(spark):
     against everything accepted so far. Exactness contract: verdicts at
     every step are bit-identical to the plain (no-bloom) path."""
     from talna_spark.pipeline.dedup import (
-        _docs,
         bloom_build,
         bloom_merge,
         dedup_against_frames,
     )
+    from talna_spark.pipeline.scan import read_documents
 
     M = 1 << 16
-    d = _docs(spark, SF)
+    d = read_documents(spark, SF, "doc_id", "text")
     ref = d.filter(F.col("doc_id") % 3 == 0).select("doc_id", "text")
     bm = bloom_build(
         ref.select(F.md5("text").alias("_h")), "_h", m=M
