@@ -1233,26 +1233,38 @@ def test_mixture_family_shared_base_bit_identical(spark):
 
 
 def test_lm_family_shared_base_bit_identical(spark):
-    """r17: the lm_token_base bundle (one corpus tokenization shared by
-    the LM scorer family, the x22/doremi fast path) must produce rows
-    bit-identical to each scorer's self-contained plan — the token
-    frames are the same derivation, only materialized once."""
+    """The signal_token_base bundle (one corpus pass shared by the whole
+    x22 battery) must produce rows bit-identical to each scorer's
+    standalone call: the LM family (whose standalone calls build an
+    lm_token_base of their own), the gopher / c4 / cutoff rule slices
+    and the perplexity buckets fed the shared lm frame and sources."""
     from talna_spark.pipeline.text import (
+        c4_rules,
+        gopher_rules,
         lm_score,
         lm_score_bigram,
         lm_score_trigram_kn,
-        lm_token_base,
         perplexity_buckets,
+        quality_cutoff_filter,
+        signal_token_base,
     )
 
-    base = lm_token_base(spark, SF)
-    for fn in (lm_score, lm_score_bigram, lm_score_trigram_kn):
+    base = signal_token_base(spark, SF)
+    for fn in (
+        lm_score, lm_score_bigram, lm_score_trigram_kn,
+        gopher_rules, c4_rules, quality_cutoff_filter,
+    ):
         alone = sorted(map(tuple, fn(spark, SF).collect()))
         shared = sorted(map(tuple, fn(spark, SF, base=base).collect()))
         assert alone == shared, fn.__name__
     lm_full = lm_score(spark, SF, base=base)
     alone = sorted(map(tuple, perplexity_buckets(spark, SF).collect()))
     shared = sorted(
-        map(tuple, perplexity_buckets(spark, SF, lm_xent=lm_full).collect())
+        map(
+            tuple,
+            perplexity_buckets(
+                spark, SF, lm_xent=lm_full, src=base["signals"]
+            ).collect(),
+        )
     )
     assert alone == shared
