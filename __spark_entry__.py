@@ -1309,18 +1309,13 @@ def _x22_quality_scoring(
             F.lit(kind).alias("kind"),
         )
 
-    # r17: the LM-family slices (lm, lm2, lm3, pplbucket) share ONE
-    # corpus tokenization (d/tok/pairs behind lazy localCheckpoints)
-    # instead of re-splitting the text per slice, and pplbucket reuses
-    # the lm slice's scored frame instead of re-running the whole
-    # unigram pass. r18 extends the shared base to the WHOLE battery
-    # (signal_token_base): the same single scan also evaluates the
-    # cutoff/gopher/c4 rule columns, and the clf slice consumes the
-    # shared (doc_id, token) stream — one corpus scan + tokenization
-    # for all 8 slices. Every slice's rows are bit-identical to the
-    # self-contained plans (the token stream and rule expressions are
-    # the same derivations materialized once; pinned in
-    # tests/test_curation_ops.py) — the oracle twin is unchanged.
+    # one corpus scan + tokenization for all 8 slices: every scorer
+    # takes the signal_token_base bundle (the token frames plus the
+    # cutoff/gopher/c4 signal columns, behind lazy localCheckpoints),
+    # the clf slice its (doc_id, token) stream, and pplbucket the lm
+    # slice's scored frame. A scorer called without the bundle builds
+    # the same frames for itself, so the rows are the same either way
+    # (pinned in tests/test_curation_ops.py).
     _lm_base = _text.signal_token_base(spark, sf_dir)
     _lm_full = _text.lm_score(spark, sf_dir, base=_lm_base).localCheckpoint(
         eager=False

@@ -800,9 +800,10 @@ def main() -> None:
         from pyspark.sql import functions as _Fc
 
         from talna_spark.pipeline.classifier import train_classifier as _clf_train
+        from talna_spark.pipeline.scan import read_documents as _read_docs
 
         def _bench_clf_train(spark, sf_dir):
-            docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+            docs = _read_docs(spark, sf_dir, "doc_id", "text")
             labels = docs.select(
                 "doc_id", (_Fc.col("doc_id") % 2).cast("double").alias("y")
             )
@@ -908,9 +909,7 @@ def main() -> None:
         def _bench_bloom_dedup(spark, sf_dir, bloom_bits=_BLOOM_BITS):
             from pyspark.sql import functions as _Fb
 
-            d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-                "doc_id", "text"
-            )
+            d = _read_docs(spark, sf_dir, "doc_id", "text")
             return _daf(
                 new_d=d.filter(_Fb.col("doc_id") % 3 != 0),
                 ref_d=d.filter(_Fb.col("doc_id") % 3 == 0),
@@ -957,11 +956,7 @@ def main() -> None:
             # fan_out: the 5k-doc parquet is one row group; without it
             # every map-side pass (explode, md5, bitmap probes) runs on
             # ONE task and the comparison measures nothing
-            return _fan(
-                spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-                    "doc_id", "text"
-                )
-            )
+            return _fan(_read_docs(spark, sf_dir, "doc_id", "text"))
 
         def _bloom_am_ref(spark, sf_dir):
             from pyspark.sql import functions as _Fb
@@ -1089,7 +1084,7 @@ def main() -> None:
             # file (the operator costs being tracked are the sketch
             # hash-aggs, not a serialized input prep)
             toks = (
-                _fan_docs(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+                _fan_docs(_read_docs(spark, sf_dir, "doc_id", "text"))
                 .select(_tok(_Fs.col("text")).alias("_w"))
                 .localCheckpoint(eager=False)
                 .select(_Fs.explode(_shg(_Fs.col("_w"), 3)).alias("v"))

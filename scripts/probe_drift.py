@@ -241,6 +241,7 @@ spark.sparkContext.setLogLevel("ERROR")
 
 from talna_spark.database import Database
 from talna_spark.sources.events import points_from_events
+from talna_spark.pipeline.scan import read_documents
 from talna_spark.pipeline.similarity import srp_embed_documents
 
 SF = "/root/testdata/sf0.1"
@@ -304,7 +305,7 @@ def _tokenize_pack_byte_run():
 def _clf_train_run():
     from talna_spark.pipeline.classifier import train_classifier
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    docs = read_documents(spark, SF, "doc_id", "text")
     labels = docs.select(
         "doc_id", (F.col("doc_id") % 2).cast("double").alias("y")
     )
@@ -366,7 +367,7 @@ def _bloom_dedup_off_run():
 
     from talna_spark.pipeline.dedup import dedup_against_frames
 
-    d = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    d = read_documents(spark, SF, "doc_id", "text")
     rows = dedup_against_frames(
         new_d=d.filter(_Fb.col("doc_id") % 3 != 0),
         ref_d=d.filter(_Fb.col("doc_id") % 3 == 0),

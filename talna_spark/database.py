@@ -1035,16 +1035,10 @@ class DatabaseBuilder:
     write here is an atomic parquet job commit (SURVEY.md O3/O4).
     """
 
-    def __init__(self) -> None:
-        self._cache_size_mib = 32
-        self._hyper_mode = False
-
     def cache_size_mib(self, mib: int) -> "DatabaseBuilder":
-        self._cache_size_mib = mib
         return self
 
     def hyper_mode(self, enabled: bool) -> "DatabaseBuilder":
-        self._hyper_mode = enabled
         return self
 
     def open(self, spark: SparkSession, warehouse_path: str) -> "Database":
@@ -1077,6 +1071,20 @@ class Database:
     def _invalidate_plans(self) -> None:
         self._plan_cache.clear()
 
+    def _warehouse(self, op: str) -> WarehouseBackend:
+        """The warehouse backend; ``op`` on any other backend raises."""
+        if not isinstance(self._backend, WarehouseBackend):
+            raise InvalidQueryError(f"{op} requires a warehouse-backed Database")
+        return self._backend
+
+    def _reopen(self) -> None:
+        """Re-read the warehouse after its files changed: re-init builds a
+        fresh fact reader (and with it a fresh file listing) and series
+        dim, and no cached plan keeps a file index over the old files. A
+        session-wide clearCache would evict unrelated cached DataFrames."""
+        self._backend.__init__(self.spark, self._backend.path)
+        self._invalidate_plans()
+
     @staticmethod
     def builder() -> DatabaseBuilder:
         return DatabaseBuilder()
@@ -1103,13 +1111,11 @@ class Database:
     def compact(self) -> None:
         """Run warehouse maintenance: series-dim compaction + fact
         clustering (talna_spark.maintenance)."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("compact requires a warehouse-backed Database")
+        path = self._warehouse("compact").path
         from talna_spark.maintenance import compact
 
-        compact(self.spark, self._backend.path)
-        self._backend.__init__(self.spark, self._backend.path)
-        self._invalidate_plans()
+        compact(self.spark, path)
+        self._reopen()
 
     def stats(self) -> DataFrame:
         """Warehouse inventory: per-metric point count, distinct series,
@@ -1117,15 +1123,14 @@ class Database:
         reads before sizing queries or retention. One partial-aggregated
         scan over facts plus the (small) series dim; at cluster scale
         this is the job you schedule nightly, not per query."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("stats requires a warehouse-backed Database")
-        facts = self._backend.facts.groupBy("metric").agg(
+        backend = self._warehouse("stats")
+        facts = backend.facts.groupBy("metric").agg(
             F.count(F.lit(1)).alias("n_points"),
             F.countDistinct("ts_day").alias("n_days"),
             F.min("ts").alias("min_ts"),
             F.max("ts").alias("max_ts"),
         )
-        series = self._backend.series.groupBy("metric").agg(
+        series = backend.series.groupBy("metric").agg(
             F.countDistinct("series_id").alias("n_series")
         )
         return facts.join(series, "metric", "left").select(
@@ -1136,16 +1141,11 @@ class Database:
         """Retention: drop fact (and rollup) partitions for days entirely
         before ``cutoff_ns`` (day-granular; metadata-only deletes — see
         talna_spark.maintenance.expire). Returns partitions removed."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("expire requires a warehouse-backed Database")
+        path = self._warehouse("expire").path
         from talna_spark.maintenance import expire
 
-        n = expire(self.spark, self._backend.path, int(cutoff_ns))
-        # backend re-init is enough: every query builds a fresh reader (and
-        # with it a fresh file listing), same invalidation as compact() —
-        # a session-wide clearCache would evict unrelated cached DataFrames
-        self._backend.__init__(self.spark, self._backend.path)
-        self._invalidate_plans()
+        n = expire(self.spark, path, int(cutoff_ns))
+        self._reopen()
         return n
 
     def build_rollup(self, width_ns: int) -> None:
@@ -1155,11 +1155,10 @@ class Database:
         never consulted for bounds/kinds they can't answer exactly, but a
         rollup built before an append does NOT see the new points — refresh
         belongs in the same maintenance cadence as compact())."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("build_rollup requires a warehouse-backed Database")
+        path = self._warehouse("build_rollup").path
         from talna_spark.rollup import build_rollup
 
-        build_rollup(self.spark, self._backend.path, int(width_ns))
+        build_rollup(self.spark, path, int(width_ns))
         # a cached plan built before this rollup existed keeps using the
         # raw scan (correct, just unoptimized); drop the cache so repeat
         # queries get the rewrite — and so no cached ROLLUP-reading plan
@@ -1172,13 +1171,10 @@ class Database:
         (talna_spark.rollup changelog) — maintenance cost scales with new
         data, not table size. Falls back to a full rebuild after
         compaction (the dedup can touch unknown partitions)."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError(
-                "refresh_rollup requires a warehouse-backed Database"
-            )
+        path = self._warehouse("refresh_rollup").path
         from talna_spark.rollup import refresh_rollup
 
-        refresh_rollup(self.spark, self._backend.path, int(width_ns))
+        refresh_rollup(self.spark, path, int(width_ns))
         self._invalidate_plans()  # same staleness contract as build_rollup
 
     def register_views(self, prefix: str = "talna") -> None:
@@ -1210,14 +1206,11 @@ class Database:
         warehouse. ``persist=False`` skips caching the enriched batch —
         faster when the source is cheap to recompute (see
         ingest.write_batch)."""
-        if not isinstance(self._backend, WarehouseBackend):
-            raise InvalidQueryError("write_batch requires a warehouse-backed Database")
+        path = self._warehouse("write_batch").path
         from talna_spark.ingest import write_batch
 
-        write_batch(points, self._backend.path, persist=persist)
-        # refresh the dimension view
-        self._backend.__init__(self.spark, self._backend.path)
-        self._invalidate_plans()
+        write_batch(points, path, persist=persist)
+        self._reopen()
 
     def write(self, metric: str, value: float, tags: dict) -> None:
         """Ingest one point at now() (reference ``Database::write``,

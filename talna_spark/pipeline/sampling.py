@@ -373,9 +373,8 @@ def doremi_weights(
     t = float(temperature)
     if not t > 0:
         raise ValueError("temperature must be positive")
-    # r17: the proxy/reference pair shares ONE corpus tokenization
-    # (lm_token_base) — the token frames are identical to the scorers'
-    # self-contained ones, so both xent columns are bit-identical
+    # the proxy/reference pair shares ONE corpus tokenization
+    # (lm_token_base) instead of each scorer building its own
     base = lm_token_base(spark, sf_dir)
     uni = lm_score(spark, sf_dir, base=base).select("doc_id", "xent")
     bi = lm_score_bigram(spark, sf_dir, base=base).select("doc_id", "xent2")

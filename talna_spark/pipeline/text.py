@@ -77,8 +77,8 @@ def quality_parts(words=None) -> tuple:
     curate composition (pipeline.curate computes the score inline on its
     one corpus scan instead of joining a second scan's output).
 
-    ``words`` (r18): an already-tokenized array column to use instead of
-    re-splitting ``text`` — lets :func:`signal_token_base` evaluate the
+    ``words``: an already-tokenized array column to use instead of
+    re-splitting ``text`` — lets :func:`_signal_scan` evaluate the
     battery over ONE shared tokenization (the expressions are otherwise
     identical, so values are bit-identical)."""
     w = tokens(F.col("text")) if words is None else words
@@ -894,31 +894,22 @@ def _token_streams(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     return tok, pairs
 
 
-def signal_token_base(spark: SparkSession, sf_dir: str) -> dict:
-    """Superset of :func:`lm_token_base` for the full quality battery
-    (r18 optimization round, guide §2.3): ONE corpus scan evaluates the
-    tokenization AND the rule-battery signal columns, behind one lazy
-    ``localCheckpoint``, so the battery's non-LM slices (cutoff / gopher
-    / c4) stop re-reading and re-splitting the corpus per slice.
-
-    Returns the ``lm_token_base`` keys (``d`` / ``tok`` / ``pairs`` —
-    drop-in for the LM scorers) plus ``signals``: (doc_id, source, _w,
-    q_quality, g_n_words, g_fail_mask, g_n_failed, c4_kept_line_frac,
-    c4_fail_mask, c4_n_failed). The signal expressions are exactly
+def _signal_scan(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The quality battery's signal rows over one corpus scan: (doc_id,
+    ``cols``, _w, q_quality, g_n_words, g_fail_mask, g_n_failed,
+    c4_kept_line_frac, c4_fail_mask, c4_n_failed). The signals are
     :func:`quality_parts` / :func:`gopher_parts` / :func:`c4_parts`
-    evaluated over one shared token/line split (the split columns are
+    over one shared token and line split (the split columns are
     projected once and referenced by attribute — CollapseProject keeps
-    non-cheap multi-referenced aliases, verified in the r18 plan dumps),
-    so every value is bit-identical to the self-contained operators.
+    non-cheap multi-referenced aliases, verified in the r18 plan dumps).
 
-    100 TB shape: the checkpoint holds token arrays + a handful of
-    numeric signal columns per doc (never raw text); it replaces three
-    additional corpus scans + text splits (quality, gopher, c4) and —
-    via the shared ``tok`` stream — the classifier slice's tokenize with
-    map-only derivations of one pass."""
-    raw = fan_out(read_documents(spark, sf_dir, "doc_id", "source", "text")).select(
+    This one projection is what :func:`signal_token_base` checkpoints
+    and what a standalone rule operator (gopher, c4, cutoff) selects
+    from unmaterialized: Catalyst prunes the signals it does not
+    select, so the standalone plan stays one map-only scan."""
+    raw = fan_out(read_documents(spark, sf_dir, "doc_id", *cols, "text")).select(
         "doc_id",
-        "source",
+        *cols,
         "text",
         tokens(F.col("text")).alias("_w"),
         F.split(F.col("text"), "\n").alias("_lines"),
@@ -927,9 +918,9 @@ def signal_token_base(spark: SparkSession, sf_dir: str) -> dict:
     _, _, _, q_score = quality_parts(words=w)
     g_n, g_mask, g_nf = gopher_parts(words=w, lines=lines)
     c_kept, c_mask, c_nf = c4_parts(lines=lines)
-    d_full = raw.select(
+    return raw.select(
         "doc_id",
-        "source",
+        *cols,
         "_w",
         F.round(q_score, 6).alias("q_quality"),
         g_n.cast("long").alias("g_n_words"),
@@ -938,17 +929,34 @@ def signal_token_base(spark: SparkSession, sf_dir: str) -> dict:
         c_kept.cast("double").alias("c4_kept_line_frac"),
         c_mask.alias("c4_fail_mask"),
         c_nf.alias("c4_n_failed"),
-    ).localCheckpoint(eager=False)
+    )
+
+
+def signal_token_base(spark: SparkSession, sf_dir: str) -> dict:
+    """Superset of :func:`lm_token_base` for the full quality battery
+    (guide §2.3): ONE corpus scan evaluates the tokenization AND the
+    rule-battery signal columns, behind one lazy ``localCheckpoint``, so
+    the battery's non-LM slices (cutoff / gopher / c4) do not re-read
+    and re-split the corpus per slice.
+
+    Returns the ``lm_token_base`` keys (``d`` / ``tok`` / ``pairs`` —
+    drop-in for the LM scorers) plus ``signals``: the
+    :func:`_signal_scan` rows with ``source``, (doc_id, source, _w,
+    q_quality, g_*, c4_*).
+
+    100 TB shape: the checkpoint holds token arrays + a handful of
+    numeric signal columns per doc (never raw text); it replaces three
+    additional corpus scans + text splits (quality, gopher, c4) and —
+    via the shared ``tok`` stream — the classifier slice's tokenize with
+    map-only derivations of one pass."""
+    d_full = _signal_scan(spark, sf_dir, "source").localCheckpoint(eager=False)
     d = d_full.select("doc_id", "_w")
     tok, pairs = _token_streams(d)
     return {"d": d, "tok": tok, "pairs": pairs, "signals": d_full}
 
 
 def lm_score(
-    spark: SparkSession,
-    sf_dir: str,
-    broadcast_vocab: bool = True,
-    base: "dict | None" = None,
+    spark: SparkSession, sf_dir: str, base: "dict | None" = None
 ) -> DataFrame:
     """Unigram language-model cross-entropy per document — the classic
     corpus-level quality signal (CCNet/Gopher-style filtering uses a
@@ -971,22 +979,12 @@ def lm_score(
     ~1e7 rows — broadcastable — and the totals (N, V) ride along as a
     crossJoin of a broadcast 1-row aggregate, so no collect() and no
     corpus shuffle: the only wide exchange carries (doc_id, token) ids.
-    ``broadcast_vocab=False`` drops the broadcast hint for vocabularies
-    past executor memory (multilingual char-soup corpora) and lets Spark
-    plan a shuffle join on the token key instead.
 
-    ``base`` (r17): a :func:`lm_token_base` bundle shares the corpus
-    tokenization with the other LM scorers — the token stream is
-    identical either way, so results are bit-identical (pinned in
-    tests/test_curation_ops.py); ``None`` keeps the self-contained plan.
+    ``base``: a :func:`lm_token_base` (or :func:`signal_token_base`)
+    bundle shares the corpus tokenization with the other LM scorers;
+    without one the call builds its own ``lm_token_base``.
     """
-    if base is not None:
-        tok = base["tok"]
-    else:
-        d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
-        tok = d.select(
-            "doc_id", F.explode(tokens(F.col("text"))).alias("token")
-        )
+    tok = (base or lm_token_base(spark, sf_dir))["tok"]
     vocab = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     totals = vocab.agg(
         F.sum("c").alias("n_total"), F.count(F.lit(1)).alias("v_size")
@@ -995,10 +993,8 @@ def lm_score(
         -F.log((F.col("c") + 1.0) / (F.col("n_total") + F.col("v_size")))
         * 1_000_000
     ).cast("long")
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
     return (
-        tok.join(vocab, "token")
+        tok.join(F.broadcast(vocab), "token")
         .crossJoin(F.broadcast(totals))
         .groupBy("doc_id")
         .agg(
@@ -1050,21 +1046,14 @@ def quality_cutoff_filter(
     cardinality is #domains, not #docs — for per-token-level quantiles
     the approx_percentile sketch is the scale path (aggregate.py:73).
 
-    ``base`` (r18): a :func:`signal_token_base` bundle supplies the
-    already-scored (doc_id, source, quality) rows from the battery's one
-    shared scan — the quality expression is identical and source rides
-    the same row, so the doc_id join of the self-contained plan (a 1:1
-    join on the unique key) disappears without changing any row;
-    ``None`` keeps the self-contained plan.
+    The scored (doc_id, source, quality) rows are the battery signals:
+    a :func:`signal_token_base` bundle's checkpoint when ``base`` is
+    given, else the same projection over one scan. Source rides the
+    scored row, so the oracle's doc_id join (1:1 on the unique key) has
+    no Spark counterpart.
     """
-    if base is not None:
-        scored = base["signals"].select(
-            "doc_id", "source", F.col("q_quality").alias("quality")
-        )
-    else:
-        q = quality(spark, sf_dir).select("doc_id", "quality")
-        d = read_documents(spark, sf_dir, "doc_id", "source")
-        scored = d.join(q, "doc_id")
+    signals = base["signals"] if base else _signal_scan(spark, sf_dir, "source")
+    scored = signals.select("doc_id", "source", F.col("q_quality").alias("quality"))
     cuts = scored.groupBy("source").agg(
         F.round(F.percentile("quality", F.lit(CUTOFF_PCT)), 6).alias("cutoff")
     )
@@ -1117,26 +1106,18 @@ def perplexity_buckets(
     #sources-row exact-percentile aggregate broadcast back; the bucket
     label is a map-side compare — no additional corpus shuffle.
 
-    ``lm_xent`` (r17): an already-computed ``lm_score`` frame (must
-    carry doc_id + xent) shares the unigram pass with a sibling lm
-    consumer (the x22 battery computes lm once for its ``lm`` AND
-    ``pplbucket`` slices); ``None`` keeps the self-contained plan.
-    Same scores either way, so results are bit-identical.
-
-    ``src`` (r18): an already-materialized (doc_id, source) frame (e.g.
-    the battery's shared :func:`signal_token_base` checkpoint) replacing
-    the two column-pruned docs re-scans of the self-contained plan —
-    same parquet column through the same rows, bit-identical."""
-    if lm_xent is not None:
-        xent = lm_xent.select("doc_id", "xent")
-    else:
-        xent = lm_score(spark, sf_dir).select("doc_id", "xent")
-    d = (
-        src.select("doc_id", "source")
-        if src is not None
-        else read_documents(spark, sf_dir, "doc_id", "source")
+    ``lm_xent`` (a frame carrying doc_id + xent) and ``src`` (one
+    carrying doc_id + source) are the two inputs: the x22 battery passes
+    its lm slice's scored frame and its :func:`signal_token_base`
+    checkpoint, so the unigram pass and the scan are shared. A
+    standalone call scores with :func:`lm_score` and reads the sources."""
+    if lm_xent is None:
+        lm_xent = lm_score(spark, sf_dir)
+    if src is None:
+        src = read_documents(spark, sf_dir, "doc_id", "source")
+    scored = src.select("doc_id", "source").join(
+        lm_xent.select("doc_id", "xent"), "doc_id"
     )
-    scored = d.join(xent, "doc_id")
     p1, p2 = PPL_TERCILES
     cuts = scored.groupBy("source").agg(
         F.round(F.percentile("xent", F.lit(p1)), 6).alias("head_cut"),
@@ -1200,8 +1181,8 @@ def gopher_parts(words=None, lines=None) -> tuple:
     pattern: keeping the rules as free-standing map-only expressions is
     what lets the SAME battery run on batch scans and micro-batches.
 
-    ``words`` / ``lines`` (r18): pre-split token / line array columns so
-    :func:`signal_token_base` shares one split across batteries; the
+    ``words`` / ``lines``: pre-split token / line array columns so
+    :func:`_signal_scan` shares one split across batteries; the
     expressions over them are unchanged, so values are bit-identical."""
     w = tokens(F.col("text")) if words is None else words
     n = F.size(w)
@@ -1258,6 +1239,17 @@ def gopher_parts(words=None, lines=None) -> tuple:
     return n, mask, n_failed
 
 
+def _verdict(mask: str, n_failed: str) -> tuple:
+    """(fail_mask, n_failed, verdict) output columns of a rule battery
+    from its signal columns."""
+    m = F.col(mask)
+    return (
+        m.alias("fail_mask"),
+        F.col(n_failed).alias("n_failed"),
+        F.when(m == 0, F.lit("pass")).otherwise(F.lit("fail")).alias("verdict"),
+    )
+
+
 def gopher_rules(
     spark: SparkSession, sf_dir: str, base: "dict | None" = None
 ) -> DataFrame:
@@ -1279,30 +1271,15 @@ def gopher_rules(
     JVM array/string builtins, no UDF, no shuffle, codegen end-to-end
     (same class as quality/lang_id; plan-tested with them).
 
-    ``base`` (r18): a :func:`signal_token_base` bundle supplies the
-    already-evaluated rule columns from the battery's one shared scan
-    (identical expressions → bit-identical values); ``None`` keeps the
-    self-contained plan.
+    The rule columns are the battery signals: a :func:`signal_token_base`
+    bundle's checkpoint when ``base`` is given, else the same projection
+    over one scan.
     """
-    if base is not None:
-        m = F.col("g_fail_mask")
-        return base["signals"].select(
-            "doc_id",
-            F.col("g_n_words").alias("n_words"),
-            m.alias("fail_mask"),
-            F.col("g_n_failed").alias("n_failed"),
-            F.when(m == 0, F.lit("pass")).otherwise(F.lit("fail")).alias(
-                "verdict"
-            ),
-        )
-    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
-    n, mask, n_failed = gopher_parts()
-    return d.select(
+    signals = base["signals"] if base else _signal_scan(spark, sf_dir)
+    return signals.select(
         "doc_id",
-        n.cast("long").alias("n_words"),
-        mask.alias("fail_mask"),
-        n_failed.alias("n_failed"),
-        F.when(mask == 0, F.lit("pass")).otherwise(F.lit("fail")).alias("verdict"),
+        F.col("g_n_words").alias("n_words"),
+        *_verdict("g_fail_mask", "g_n_failed"),
     )
 
 
@@ -1432,8 +1409,8 @@ def c4_parts(lines=None) -> tuple:
     ``text`` column — the gopher_parts pattern, reusable on batch scans
     and micro-batches alike.
 
-    ``lines`` (r18): a pre-split line array column so
-    :func:`signal_token_base` shares one line split with gopher_parts;
+    ``lines``: a pre-split line array column so
+    :func:`_signal_scan` shares one line split with gopher_parts;
     the per-line rules over it are unchanged (bit-identical values)."""
     low = F.lower(F.col("text"))
     L = F.length(low)
@@ -1488,30 +1465,13 @@ def c4_rules(
     100 TB shape: map-only JVM projection over one corpus scan — no
     UDF, no shuffle, codegen end-to-end (same class as gopher_rules).
 
-    ``base`` (r18): a :func:`signal_token_base` bundle supplies the
-    already-evaluated rule columns from the battery's one shared scan
-    (identical expressions → bit-identical values); ``None`` keeps the
-    self-contained plan.
+    The rule columns come as in :func:`gopher_rules`.
     """
-    if base is not None:
-        m = F.col("c4_fail_mask")
-        return base["signals"].select(
-            "doc_id",
-            F.col("c4_kept_line_frac").alias("kept_line_frac"),
-            m.alias("fail_mask"),
-            F.col("c4_n_failed").alias("n_failed"),
-            F.when(m == 0, F.lit("pass")).otherwise(F.lit("fail")).alias(
-                "verdict"
-            ),
-        )
-    d = fan_out(read_documents(spark, sf_dir, "doc_id", "text"))
-    kept_frac, mask, n_failed = c4_parts()
-    return d.select(
+    signals = base["signals"] if base else _signal_scan(spark, sf_dir)
+    return signals.select(
         "doc_id",
-        kept_frac.cast("double").alias("kept_line_frac"),
-        mask.alias("fail_mask"),
-        n_failed.alias("n_failed"),
-        F.when(mask == 0, F.lit("pass")).otherwise(F.lit("fail")).alias("verdict"),
+        F.col("c4_kept_line_frac").alias("kept_line_frac"),
+        *_verdict("c4_fail_mask", "c4_n_failed"),
     )
 
 
@@ -2009,10 +1969,7 @@ LM2_LAMBDA = 0.7  # interpolation weight on the bigram term
 
 
 def lm_score_bigram(
-    spark: SparkSession,
-    sf_dir: str,
-    broadcast_vocab: bool = True,
-    base: "dict | None" = None,
+    spark: SparkSession, sf_dir: str, base: "dict | None" = None
 ) -> DataFrame:
     """Interpolated bigram language-model cross-entropy per document —
     one rung up the KenLM ladder from :func:`lm_score`: position i >= 2
@@ -2025,17 +1982,12 @@ def lm_score_bigram(
     Same float discipline as lm_score (per-position integer micro-nats
     before the doc sum) and same 100 TB shape: unigram AND bigram
     vocabs are token-keyed hash aggregates broadcast back over the
-    positional stream (``broadcast_vocab=False`` for vocabularies past
-    executor memory); the only wide exchange carries id/token rows.
+    positional stream; the only wide exchange carries id/token rows.
 
-    ``base`` (r17): a :func:`lm_token_base` bundle shares the tokenized
-    ``d``/``tok``/``pairs`` frames with the other LM scorers — the
-    frames are identical either way, so results are bit-identical
-    (pinned in tests/test_curation_ops.py); ``None`` builds the bundle
-    for this call alone.
+    ``base``: as in :func:`lm_score`, the tokenized ``d``/``tok``/
+    ``pairs`` frames shared with the other LM scorers.
     """
-    if base is None:
-        base = lm_token_base(spark, sf_dir)
+    base = base or lm_token_base(spark, sf_dir)
     d, tok, pairs = base["d"], base["tok"], base["pairs"]
     w = F.col("_w")
     uni = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
@@ -2045,8 +1997,7 @@ def lm_score_bigram(
     bi = pairs.groupBy("t1", "t2").agg(F.count(F.lit(1)).alias("c2"))
     c1 = uni.select(F.col("token").alias("t1"), F.col("c").alias("c1"))
     cu = uni.select(F.col("token").alias("t2"), F.col("c").alias("cu"))
-    if broadcast_vocab:
-        uni, bi, c1, cu = (F.broadcast(x) for x in (uni, bi, c1, cu))
+    uni, bi, c1, cu = (F.broadcast(x) for x in (uni, bi, c1, cu))
     lam = float(LM2_LAMBDA)
     p_bi = (F.col("c2") + 1.0) / (F.col("c1") + F.col("v_size"))
     p_uni = (F.col("cu") + 1.0) / (F.col("n_total") + F.col("v_size"))
@@ -2124,10 +2075,7 @@ LM3_DISCOUNT = 0.75  # absolute discount D (the standard KN setting)
 
 
 def lm_score_trigram_kn(
-    spark: SparkSession,
-    sf_dir: str,
-    broadcast_vocab: bool = True,
-    base: "dict | None" = None,
+    spark: SparkSession, sf_dir: str, base: "dict | None" = None
 ) -> DataFrame:
     """Interpolated trigram Kneser-Ney cross-entropy per document — the
     next rung up the KenLM ladder from :func:`lm_score_bigram`, and a
@@ -2163,15 +2111,11 @@ def lm_score_trigram_kn(
     broadcast back over the positional streams; the only wide exchanges
     carry id/token rows; no collect().
 
-    ``base`` (r17): a :func:`lm_token_base` bundle shares the tokenized
-    ``d``/``tok``/``pairs`` frames with the other LM scorers — results
-    bit-identical either way (pinned in tests/test_curation_ops.py);
-    ``None`` builds the bundle for this call alone. Only the tris stream
-    is per-call (no other scorer consumes it).
+    ``base``: as in :func:`lm_score`. Only the tris stream is per-call
+    (no other scorer consumes it).
     """
     D = float(LM3_DISCOUNT)
-    if base is None:
-        base = lm_token_base(spark, sf_dir)
+    base = base or lm_token_base(spark, sf_dir)
     d, tok, pairs = base["d"], base["tok"], base["pairs"]
     w = F.col("_w")
     tri_structs = F.when(
@@ -2233,13 +2177,12 @@ def lm_score_trigram_kn(
         uni.agg(F.count(F.lit(1)).alias("v_size"))
         .crossJoin(bi.agg(F.count(F.lit(1)).alias("nbt")))
     )
-    if broadcast_vocab:
-        # broadcast the TOKEN-keyed stats only: the unigram table is
-        # vocab-sized (safely broadcastable), but the pair and trigram
-        # tables grow with corpus n-gram diversity — AQE picks broadcast
-        # vs shuffle for those from their measured size (measured at
-        # sf0.1: forcing tri's broadcast cost ~2x the whole operator)
-        uni_stats = F.broadcast(uni_stats)
+    # broadcast the TOKEN-keyed stats only: the unigram table is
+    # vocab-sized (safely broadcastable), but the pair and trigram
+    # tables grow with corpus n-gram diversity — AQE picks broadcast
+    # vs shuffle for those from their measured size (measured at
+    # sf0.1: forcing tri's broadcast cost ~2x the whole operator)
+    uni_stats = F.broadcast(uni_stats)
 
     def p1(cont_col):
         return (cont_col + 1.0) / (F.col("nbt") + F.col("v_size"))

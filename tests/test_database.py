@@ -245,6 +245,30 @@ def test_write_fanout_heuristic():
     assert write_fanout(_ROWS_PER_WRITE_TASK * 100 + 1, 32) == 101
 
 
+@pytest.mark.parametrize(
+    "op, call",
+    [
+        ("compact", lambda db, pts: db.compact()),
+        ("stats", lambda db, pts: db.stats()),
+        ("expire", lambda db, pts: db.expire(0)),
+        ("build_rollup", lambda db, pts: db.build_rollup(1000)),
+        ("refresh_rollup", lambda db, pts: db.refresh_rollup(1000)),
+        ("write_batch", lambda db, pts: db.write_batch(pts)),
+    ],
+)
+def test_warehouse_ops_reject_view_backend(spark, op, call):
+    """Maintenance and ingest need a warehouse: on a view-backed
+    Database each raises a typed error naming the operation."""
+    from talna_spark.errors import InvalidQueryError
+
+    pts = make_points(spark, F2_ROWS)
+    db = Database.from_points(spark, pts)
+    with pytest.raises(
+        InvalidQueryError, match=f"^{op} requires a warehouse-backed Database$"
+    ):
+        call(db, pts)
+
+
 def test_expire_drops_old_days_everywhere(spark, tmp_path):
     """Retention is day-granular, consistent across facts and rollups."""
     from talna_spark.duration import Duration
