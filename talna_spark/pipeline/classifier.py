@@ -75,11 +75,12 @@ def hashed_features(
     compute-in-scan work, and without it the whole featurize ran on ONE
     task on the bench file, measured 4.4 s of a 5.5 s training run).
 
-    ``tok`` (r18): an already-exploded (doc_id, token) stream — e.g.
-    ``signal_token_base(...)["tok"]`` — shares the corpus tokenization
-    with sibling consumers; the derivation is identical (same tokens()
-    split, same explode), so features are bit-identical. ``None`` keeps
-    the self-contained plan."""
+    ``tok`` (r18): an already-exploded (doc_id, token) stream — the x22
+    battery passes ``signal_token_base(...)["tok"]`` so sibling
+    consumers share one corpus tokenization. A standalone call derives
+    its own (doc_id, token) stream from ``docs`` with the same
+    derivation as that ``tok`` (same tokens() split, same explode), so
+    features are bit-identical either way."""
     if tok is None:
         tok = fan_out(docs).select(
             "doc_id", F.explode(tokens(F.col(text_col))).alias("token")
@@ -197,9 +198,10 @@ def score_documents(
     n_features-row weight table → doc_id hash-agg. Map-side scoring
     against a broadcast model, the production quality-gate shape.
 
-    ``tok`` (r18): pass-through to :func:`hashed_features` — a shared
-    (doc_id, token) stream replacing the self-contained scan+explode
-    (bit-identical features; ``None`` keeps the self-contained plan)."""
+    ``tok`` (r18): pass-through to :func:`hashed_features` — the x22
+    battery passes ``signal_token_base``'s shared (doc_id, token)
+    stream; a standalone call derives its own with the same derivation
+    (bit-identical features)."""
     if docs is None and tok is None:
         docs = read_documents(spark, sf_dir, "doc_id", "text")
     feat = hashed_features(docs, n_features, tok=tok)

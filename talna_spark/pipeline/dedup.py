@@ -174,10 +174,10 @@ def minhash_signatures_sql() -> str:
 # minhash component => 16 effective bits per 2-row band, shrinking the
 # corpus-scale (band, key) shuffle ~4x vs full-width string keys while
 # candidates stay a superset (masking is a projection). ONE definition
-# here; the driver registration (__spark_entry__), bench.py's
-# pipe_lsh_bbit row, and scripts/probe_drift.py all read it so the
-# benched width can never drift from the driver-checked width (r15,
-# was a private cross-module constant read).
+# here; the driver registration (__spark_entry__) and bench.py's
+# pipe_lsh_bbit row both read it so the benched width can never drift
+# from the driver-checked width (r15, was a private cross-module
+# constant read).
 LSH_BBIT_DEFAULT = 8
 
 
@@ -1308,9 +1308,9 @@ def _pow64():
     return _POW64
 
 
-def bloom_might_contain(col, words: list[int], m: int = BLOOM_BITS,
-                        k: int = BLOOM_K):
-    """Boolean Column: all k bits set in the LITERAL bitmap — a pure
+def bloom_might_contain(col, words: list[int], k: int = BLOOM_K):
+    """Boolean Column: all k bits set in the LITERAL bitmap of
+    m = 64 x len(``words``) bits (:func:`bloom_to_words`) — a pure
     map-side expression, zero shuffle (the broadcast is the plan
     itself; bit masks come from a literal 64-long powers array because
     shift amounts must be columns here). NULL values yield False (a
@@ -1328,7 +1328,7 @@ def bloom_might_contain(col, words: list[int], m: int = BLOOM_BITS,
     py4j calls (r18, :func:`_long_array_expr` — measured 2.1 -> 0.5 s
     fixed cost per gate, interleaved)."""
     arr = _long_array_expr(words)
-    positions = F.array(*_bloom_positions(col, m, k))
+    positions = F.array(*_bloom_positions(col, 64 * len(words), k))
     return F.aggregate(
         positions,
         F.lit(True),
@@ -1349,13 +1349,12 @@ def bloom_prefilter(
     m: int = BLOOM_BITS,
     k: int = BLOOM_K,
     id_col: str = "doc_id",
-    literal_max_words: int = BLOOM_LITERAL_WORDS,
 ) -> DataFrame:
     """Rows of ``d`` whose ``col`` MIGHT be in the bitmap (never drops a
     true member). Strategy by bitmap size — the centroid-path
     discipline:
 
-    - m/64 <= ``literal_max_words``: collect + the literal expression
+    - m/64 <= BLOOM_LITERAL_WORDS: collect + the literal expression
       (:func:`bloom_might_contain`) — map-only;
     - larger: explode the k (word_idx, mask) probes per DISTINCT
       (id, value) pair, join the bitmap on word_idx (id-rows only),
@@ -1367,8 +1366,8 @@ def bloom_prefilter(
       duplicated row and reject a TRUE member — the regression the
       tests pin).
     Both bit-identical (tested, incl. duplicate rows)."""
-    if int(m) // 64 <= int(literal_max_words):
-        return d.filter(bloom_might_contain(F.col(col), bloom_to_words(bm, m), m, k))
+    if int(m) // 64 <= BLOOM_LITERAL_WORDS:
+        return d.filter(bloom_might_contain(F.col(col), bloom_to_words(bm, m), k))
     probes = (
         d.select(id_col, col)
         .distinct()
@@ -1428,7 +1427,7 @@ def _bloom_gate(
         if words is None:
             words = bloom_to_words(bm, m)
         hashes = new_hashes.withColumn(
-            "_g", bloom_might_contain(F.col("_h"), words, int(m), int(k))
+            "_g", bloom_might_contain(F.col("_h"), words, int(k))
         ).localCheckpoint(eager=False)
         return hashes, hashes.filter("_g")
     hashes = new_hashes.localCheckpoint(eager=False)
@@ -1576,8 +1575,9 @@ def exact_dedup_against_bloom(
     candidate-sized broadcasts; the reference is re-SCANNED (map-side,
     no shuffle) only to verify candidates. Returns (doc_id, exact_dup
     boolean), one row per distinct new doc_id (a doc_id carrying several
-    texts is a dup if any of them is). One-shot callers should NOT take
-    this path — see the crossover note on :func:`dedup_against_frames`.
+    texts is a dup if any of them is). Each batch beats the plain
+    semi-join, but the bitmap build is repaid only after 2-3 batches —
+    see the crossover rule on :func:`dedup_against_frames`.
 
     A SATURATED bitmap fails loudly (r13, the lc-saturation
     discipline): above ``max_fp`` expected false positives the gate
@@ -1628,74 +1628,48 @@ def dedup_against_frames(
     new_d: DataFrame,
     ref_d: DataFrame,
     max_bucket: int = LSH_MAX_BUCKET,
-    bloom_bits: "int | None" = None,
     bloom_bm: "DataFrame | None" = None,
+    m: int = BLOOM_BITS,
 ) -> DataFrame:
     """Frame-level core of :func:`dedup_against` — new/reference as any
     (doc_id, text, ...) DataFrames (r6: lets the driver row split one
     corpus into ref/new deterministically, and lets callers dedup
     against a warehouse scan instead of a directory).
 
-    ``bloom_bits`` (r11) prefilters the exact path through an m-bit
-    Bloom bitmap of the reference text-hash set; ``bloom_bm`` (r13)
-    supplies a PREBUILT bitmap (from :func:`bloom_build` over the ref
-    text hashes, with m = ``bloom_bits`` or BLOOM_BITS) so the build
-    amortizes across batches. Either way the exact stage becomes the
-    zero-ref-shuffle shape (:func:`_bloom_dup_hashes`) and the RESULT
-    stays bit-identical (no false negatives by construction — tested).
-    Size m for the target fp rate: ~1.2 bytes/ref-doc at k=4 gives
-    ~2% fp.
+    ``bloom_bm`` is a PREBUILT m-bit Bloom bitmap of the reference
+    text-hash set (:func:`bloom_build` over md5(text)); with it the
+    exact leg is :func:`exact_dedup_against_bloom` — its gate,
+    saturation check and zero-ref-shuffle semi-join — and the RESULT
+    stays bit-identical to the plain hash join (no false negatives by
+    construction — tested). Size m for the target fp rate: ~1.2
+    bytes/ref-doc at k=4 gives ~2% fp.
 
-    CROSSOVER RULE (r13, VERDICT r12 #2 — measured, not asserted):
-    one-shot ``bloom_bits`` is strictly OVERHEAD — the bitmap build
-    explodes k hash-probe rows per ref doc, and in the sparse regime
-    (m sized for a useful fp rate) its aggregation exchanges ~k·R
-    16-byte rows, ~1.6x the bytes of the R-row hash join it replaces
-    (measured 2.2x wall at sf0.1, BENCH pipe_bloom_dedup pair). The
-    sketch pays when the SAME reference serves >= 2 dedup batches:
-    build once, pass ``bloom_bm`` per batch, and each batch's exact
-    stage drops the corpus-sized ref shuffle entirely (measured at 4M
-    ref hashes x 3 batches, interleaved warm: bitmap 6.1 s total vs
-    plain joins 11.2 s — 1.8x, BENCH pipe_bloom_amortized pair; at 1M
-    refs on local[32] the exchange is task-overhead-cheap and the two
-    tie, so size the decision by what the ref-side shuffle actually
-    costs on the target cluster). For unbounded streams use
-    streaming.dedup_against_reference_bloom — the same amortization,
-    per micro-batch."""
-    # exact: new text hash present in the reference hash set
-    ref_hashes_raw = ref_d.select(F.md5("text").alias("_h"))
-    new_hashes = new_d.select("doc_id", F.md5("text").alias("_h"))
-    if bloom_bm is not None or bloom_bits:
-        m = int(bloom_bits) if bloom_bits else BLOOM_BITS
-        if bloom_bm is None:
-            # r18 (guide §2.3/§5): building in-call gives the ref hash
-            # frame TWO consumers (bitmap build + candidate verify),
-            # i.e. two corpus text scans + md5 passes. A lazy
-            # localCheckpoint of the hash-only proxy rows makes it one.
-            # With a PREBUILT bitmap the verify is the only consumer —
-            # no checkpoint (don't materialize for a single pass).
-            ref_hashes_raw = ref_hashes_raw.localCheckpoint(eager=False)
-        bm = (
-            bloom_bm
-            if bloom_bm is not None
-            # build from the RAW hashes: bit_or is idempotent, so the
-            # distinct's corpus-wide shuffle is pure waste here
-            else bloom_build(ref_hashes_raw, "_h", m=m)
-        )
-        # same rule for the new side, checkpointed with its gate: gate +
-        # flags semi-join
-        new_hashes, cand = _bloom_gate(new_hashes, bm, m)
-        dup = _bloom_dup_hashes(cand, ref_hashes_raw)
+    CROSSOVER RULE (measured, not asserted): the bitmap pays only when
+    the SAME reference serves several batches. Building it is a full
+    reference pass that exchanges ~k probe rows per ref doc; one-shot,
+    that is pure overhead (sf0.1: ON 7.1 s vs OFF 5.1-5.6 s, bench
+    pair pipe_bloom_dedup). Amortized, each batch's exact stage beats
+    the plain semi-join and the one build is repaid in 2-3 batches.
+    Measured at the pipe_bloom_amortized shape (sf0.1, local[4], ~4M
+    ref hashes, m=2^24 — the join regime — k=2, 5k-doc batches), two
+    interleaved rounds: build 10.9 s / 6.8 s (5 jobs); per batch ON
+    2.8-4.9 s (13 jobs) vs OFF 6.7-10.4 s (6 jobs), ON faster in 6/6
+    pairs, saving ~4 s per batch. So build once when the reference
+    serves >= 3 batches, and use the plain hash join below that. For
+    unbounded streams use streaming.dedup_against_reference_bloom —
+    the same amortization, per micro-batch."""
+    if bloom_bm is None:
         exact = (
-            new_hashes.join(F.broadcast(dup), "_h", "left_semi")
+            new_d.select("doc_id", F.md5("text").alias("_h"))
+            .join(ref_d.select(F.md5("text").alias("_h")).distinct(), "_h")
             .select("doc_id", F.lit(True).alias("_exact"))
             .distinct()
         )
     else:
         exact = (
-            new_hashes.join(ref_hashes_raw.distinct(), "_h")
+            exact_dedup_against_bloom(new_d, ref_d, bloom_bm, m=m)
+            .filter("exact_dup")
             .select("doc_id", F.lit(True).alias("_exact"))
-            .distinct()
         )
 
     # near: new band rows join ref band rows on the bucket
@@ -1795,16 +1769,18 @@ def dedup_against_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two ``kind`` slices since r11: ``direct`` = the plain hash join,
     ``bloom`` = the same semantics through the Bloom-bitmap exact-path
-    prefilter — one oracle states both (the bitmap never drops a true
-    member, so the verdicts must be identical; a false-negative bug in
-    the bloom breaks the hash)."""
+    prefilter, with the BLOOM_BITS bitmap of the reference hashes built
+    by :func:`bloom_build` and passed in — one oracle states both (the
+    bitmap never drops a true member, so the verdicts must be
+    identical; a false-negative bug in the bloom breaks the hash)."""
     d = read_documents(spark, sf_dir, "doc_id", "text")
+    ref_d = d.filter(F.col("doc_id") % 3 == 0)
 
-    def run(bloom_bits):
+    def run(bloom_bm):
         out = dedup_against_frames(
             new_d=d.filter(F.col("doc_id") % 3 != 0),
-            ref_d=d.filter(F.col("doc_id") % 3 == 0),
-            bloom_bits=bloom_bits,
+            ref_d=ref_d,
+            bloom_bm=bloom_bm,
         )
         return out.select(
             "doc_id",
@@ -1815,12 +1791,11 @@ def dedup_against_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("jaccard"), F.lit(0.0)).alias("jaccard"),
         )
 
+    bm = bloom_build(ref_d.select(F.md5("text").alias("_h")), "_h")
     return (
         run(None)
         .withColumn("kind", F.lit("direct"))
-        .unionByName(
-            run(BLOOM_BITS).withColumn("kind", F.lit("bloom"))
-        )
+        .unionByName(run(bm).withColumn("kind", F.lit("bloom")))
     )
 
 

@@ -45,6 +45,14 @@ CMS_W = 1 << 12  # counters per hash row (the collision dial)
 CMS_D = 4        # hash rows (the confidence dial)
 
 
+def _not_null(*cols):
+    """Row predicate: every named column is non-NULL."""
+    cond = F.col(cols[0]).isNotNull()
+    for c in cols[1:]:
+        cond = cond & F.col(c).isNotNull()
+    return cond
+
+
 def _cms_cells(col, w: int, depth: int):
     """The ``depth`` probe cells of a key, exploded as ``rc`` structs
     (r, c): row r's counter index is one independent md5-based hash
@@ -299,6 +307,50 @@ def bk_merge(a: DataFrame, b: DataFrame, k: int = BK_K) -> DataFrame:
     return a.unionByName(b).distinct().orderBy("h").limit(int(k))
 
 
+def _bk_overlap(a: DataFrame, b: DataFrame, k: int, *keys) -> DataFrame:
+    r"""(\*keys, n_union_k, n_a_k, n_common): the bottom-k overlap counts
+    behind every resemblance and containment estimator — X =
+    bottom_k(A u B) per key group, n_union_k = |X|, n_a_k = |X ∩ A|,
+    n_common = |X ∩ A ∩ B|. ``keys`` is ``()`` for two scalar sketches
+    (the global aggregate: exactly one row, zero counts on empty input)
+    and ``("g",)`` for two grouped ones. One tagged union, one
+    membership max-agg per (keys, h), one rank window and one count
+    aggregate — all sketch-sized, no driver action."""
+    from pyspark.sql.window import Window as W
+
+    def tag(sk, ina, inb):
+        return sk.select(
+            *keys, "h", F.lit(ina).alias("_a"), F.lit(inb).alias("_b")
+        )
+
+    x = (
+        tag(a, 1, 0)
+        .unionByName(tag(b, 0, 1))
+        .groupBy(*keys, "h")
+        .agg(F.max("_a").alias("_a"), F.max("_b").alias("_b"))
+        .withColumn(
+            "_r", F.row_number().over(W.partitionBy(*keys).orderBy("h"))
+        )
+        .filter(F.col("_r") <= int(k))
+    )
+    return x.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_union_k"),
+        F.coalesce(F.sum("_a"), F.lit(0)).cast("long").alias("n_a_k"),
+        F.coalesce(F.sum(F.col("_a") * F.col("_b")), F.lit(0))
+        .cast("long")
+        .alias("n_common"),
+    )
+
+
+def _bk_ratio(num: str, den: str):
+    """num / den at 6 dp, rounded half away from zero like the DuckDB
+    twins; NULL when den = 0 (no ANSI divide-by-zero)."""
+    return F.when(
+        F.col(den) > 0,
+        F.round(F.col(num).cast("double") / F.col(den).cast("double"), 6),
+    ).alias("est")
+
+
 def bk_resemblance(a: DataFrame, b: DataFrame, k: int = BK_K) -> DataFrame:
     """One row (n_union_k, n_common, est): Broder's resemblance
     estimator between the two sketched sets — est = n_common /
@@ -306,19 +358,10 @@ def bk_resemblance(a: DataFrame, b: DataFrame, k: int = BK_K) -> DataFrame:
     n_common counts union-sketch members present in BOTH input
     sketches. Deterministic given the sketches (portable hash64), so
     two engines report the identical estimate; exact when the union
-    has <= k distinct values. Plan: sketch-sized joins only."""
-    x = bk_merge(a, b, k)
-    both = (
-        x.join(a.withColumnRenamed("h", "ha"), F.col("h") == F.col("ha"))
-        .join(b.withColumnRenamed("h", "hb"), F.col("h") == F.col("hb"))
-        .select("h")
-    )
-    nu = x.count()
-    nc = both.count()
-    est = round(nc / nu, 6) if nu else None
-    spark = a.sparkSession
-    return spark.createDataFrame(
-        [(nu, nc, est)], "n_union_k long, n_common long, est double"
+    has <= k distinct values. Two empty sketches give (0, 0, NULL).
+    Plan: :func:`_bk_overlap`, sketch-sized work only."""
+    return _bk_overlap(a, b, k).select(
+        "n_union_k", "n_common", _bk_ratio("n_common", "n_union_k")
     )
 
 
@@ -360,18 +403,10 @@ def bk_containment(a: DataFrame, b: DataFrame, k: int = BK_K) -> DataFrame:
     uniform sample of A u B, so the members drawn from A estimate
     |A ∩ B| / |A|). The decontamination-style question ("what fraction
     of corpus A already sits in B?") answered from two k-row sketches,
-    no corpus work. Deterministic; exact when |A u B| <= k."""
-    x = bk_merge(a, b, k)
-    xa = x.join(a.withColumnRenamed("h", "ha"), F.col("h") == F.col("ha"))
-    n_a = xa.count()
-    n_common = (
-        xa.join(b.withColumnRenamed("h", "hb"), F.col("h") == F.col("hb"))
-        .count()
-    )
-    est = round(n_common / n_a, 6) if n_a else None
-    spark = a.sparkSession
-    return spark.createDataFrame(
-        [(n_a, n_common, est)], "n_a_k long, n_common long, est double"
+    no corpus work. Deterministic; exact when |A u B| <= k; est NULL
+    when no union member comes from A."""
+    return _bk_overlap(a, b, k).select(
+        "n_a_k", "n_common", _bk_ratio("n_common", "n_a_k")
     )
 
 
@@ -436,43 +471,10 @@ def bk_resemblance_grouped(
     """Per-group Broder resemblance between two grouped sketches, as
     ONE DataFrame op (no driver-side counts — groups can number in the
     millions): (g, n_union_k, n_common, est). Groups present in only
-    one input estimate 0.0 against an empty other side. The union's
-    bottom-k per group is ranked from the two sketches' union — all
-    sketch-sized work keyed by group."""
-    from pyspark.sql.window import Window as W
-
-    u = a.unionByName(b).distinct()
-    w = W.partitionBy("g").orderBy("h")
-    x = (
-        u.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= int(k))
-        .select("g", "h")
-    )
-    ina = a.withColumn("_ina", F.lit(1))
-    inb = b.withColumn("_inb", F.lit(1))
-    j = (
-        x.join(ina, ["g", "h"], "left")
-        .join(inb, ["g", "h"], "left")
-        .groupBy("g")
-        .agg(
-            F.count(F.lit(1)).alias("n_union_k"),
-            F.sum(
-                (
-                    F.coalesce(F.col("_ina"), F.lit(0))
-                    * F.coalesce(F.col("_inb"), F.lit(0))
-                ).cast("long")
-            ).alias("n_common"),
-        )
-    )
-    return j.select(
-        "g",
-        "n_union_k",
-        "n_common",
-        F.round(
-            F.col("n_common").cast("double")
-            / F.col("n_union_k").cast("double"),
-            6,
-        ).alias("est"),
+    one input estimate 0.0 against an empty other side. The same
+    :func:`_bk_overlap` body as the scalar form, keyed by group."""
+    return _bk_overlap(a, b, k, "g").select(
+        "g", "n_union_k", "n_common", _bk_ratio("n_common", "n_union_k")
     )
 
 
@@ -531,6 +533,52 @@ def bk_resemblance_grouped_sql(
 QS_RATE_PPM = 10_000  # 1% default sample
 
 
+def _qs_sample(
+    d: DataFrame, col: str, id_col: str, rate_ppm: int, *keys
+) -> DataFrame:
+    r"""(\*keys, v): rows of ``d`` whose 'qs|'-prefixed id-hash falls
+    under ``rate_ppm``, with NULL values and NULL keys dropped — the
+    one gate behind :func:`qs_build` (``keys=()``) and
+    :func:`qs_build_grouped` (``keys=("g",)``). Map-only."""
+    if not 0 < int(rate_ppm) <= 1_000_000:
+        raise ValueError("rate_ppm must be in (0, 1e6]")
+    gate = (
+        hash64(F.concat(F.lit("qs|"), F.col(id_col).cast("string")))
+        % F.lit(1_000_000)
+    )
+    return (
+        d.filter(_not_null(col, *keys))
+        .filter(gate < F.lit(int(rate_ppm)))
+        .select(*keys, F.col(col).alias("v"))
+    )
+
+
+def _qs_rank(sample: DataFrame, probs: list, *keys) -> DataFrame:
+    r"""(\*keys, p, v): exact type-1 quantiles of each key group's
+    sample — v = the element at rank max(1, ceil(p * m)) of the group's
+    ascending sort. One window partitioned by ``keys`` (the whole
+    sample when ``keys=()``) plus a broadcast probe join; empty groups
+    return no rows."""
+    from pyspark.sql.window import Window as W
+
+    spark = sample.sparkSession
+    ps = spark.createDataFrame([(float(p),) for p in probs], "p double")
+    w = W.partitionBy(*keys)
+    ranked = sample.select(
+        *keys,
+        "v",
+        F.row_number().over(w.orderBy(F.col("v").asc())).alias("_r"),
+        F.count(F.lit(1)).over(w).alias("_m"),
+    )
+    want = F.greatest(
+        F.lit(1), F.ceil(F.col("p") * F.col("_m")).cast("long")
+    )
+    return (
+        ranked.join(F.broadcast(ps), F.col("_r") == want)
+        .select(*keys, "p", "v")
+    )
+
+
 def qs_build(
     d: DataFrame,
     col: str,
@@ -542,17 +590,7 @@ def qs_build(
     not order statistics and are excluded. Map-only (one filter +
     projection, zero shuffle); merge shard samples with a plain union
     (same gate => same rows, tested)."""
-    if not 0 < int(rate_ppm) <= 1_000_000:
-        raise ValueError("rate_ppm must be in (0, 1e6]")
-    gate = (
-        hash64(F.concat(F.lit("qs|"), F.col(id_col).cast("string")))
-        % F.lit(1_000_000)
-    )
-    return (
-        d.filter(F.col(col).isNotNull())
-        .filter(gate < F.lit(int(rate_ppm)))
-        .select(F.col(col).alias("v"))
-    )
+    return _qs_sample(d, col, id_col, rate_ppm)
 
 
 def qs_quantiles(sample: DataFrame, probs: list) -> DataFrame:
@@ -562,22 +600,7 @@ def qs_quantiles(sample: DataFrame, probs: list) -> DataFrame:
     a broadcast of the probe list; empty samples return no rows (no
     order statistics exist) — callers treat absence as 'grow the
     rate'."""
-    from pyspark.sql.window import Window as W
-
-    spark = sample.sparkSession
-    ps = spark.createDataFrame([(float(p),) for p in probs], "p double")
-    ranked = sample.select(
-        "v",
-        F.row_number().over(W.orderBy(F.col("v").asc())).alias("_r"),
-        F.count(F.lit(1)).over(W.partitionBy(F.lit(1))).alias("_m"),
-    )
-    want = F.greatest(
-        F.lit(1), F.ceil(F.col("p") * F.col("_m")).cast("long")
-    )
-    return (
-        ranked.join(F.broadcast(ps), F.col("_r") == want)
-        .select("p", "v")
-    )
+    return _qs_rank(sample, probs)
 
 
 def qs_sql(values_sql: str, rate_ppm: int = QS_RATE_PPM) -> str:
@@ -621,43 +644,20 @@ def qs_build_grouped(
     "p99 doc length per domain" dashboard cut). Same hash gate, so a
     row's membership is independent of its group: shard samples union
     exactly, and regrouping never resamples."""
-    if not 0 < int(rate_ppm) <= 1_000_000:
-        raise ValueError("rate_ppm must be in (0, 1e6]")
-    gate = (
-        hash64(F.concat(F.lit("qs|"), F.col(id_col).cast("string")))
-        % F.lit(1_000_000)
+    keyed = d.select(
+        F.col(group_col).alias("g"),
+        F.col(col).alias("_v"),
+        F.col(id_col).alias("_id"),
     )
-    return (
-        d.filter(F.col(col).isNotNull() & F.col(group_col).isNotNull())
-        .filter(gate < F.lit(int(rate_ppm)))
-        .select(F.col(group_col).alias("g"), F.col(col).alias("v"))
-    )
+    return _qs_sample(keyed, "_v", "_id", rate_ppm, "g")
 
 
 def qs_quantiles_grouped(sample: DataFrame, probs: list) -> DataFrame:
     """(g, p, v): exact type-1 quantiles of each group's sample — the
-    scalar :func:`qs_quantiles` rank rule applied group-wise. One
-    window partitioned BY GROUP over the sketch-sized sample (per-group
-    rows bounded by the rate contract) plus a broadcast probe join;
-    empty groups return no rows."""
-    from pyspark.sql.window import Window as W
-
-    spark = sample.sparkSession
-    ps = spark.createDataFrame([(float(p),) for p in probs], "p double")
-    w = W.partitionBy("g")
-    ranked = sample.select(
-        "g",
-        "v",
-        F.row_number().over(w.orderBy(F.col("v").asc())).alias("_r"),
-        F.count(F.lit(1)).over(w).alias("_m"),
-    )
-    want = F.greatest(
-        F.lit(1), F.ceil(F.col("p") * F.col("_m")).cast("long")
-    )
-    return (
-        ranked.join(F.broadcast(ps), F.col("_r") == want)
-        .select("g", "p", "v")
-    )
+    scalar :func:`qs_quantiles` rank rule applied group-wise (the same
+    :func:`_qs_rank` body, partitioned by group); empty groups return
+    no rows."""
+    return _qs_rank(sample, probs, "g")
 
 
 def qs_grouped_sql(values_sql: str, rate_ppm: int = QS_RATE_PPM) -> str:
@@ -789,49 +789,6 @@ def _hll_check_p(p: int) -> tuple[int, int, int]:
 HLL_SAT_THRESHOLD = float(1 << 32) * (1.0 - 1e-12)
 
 
-def _hll_register_cols(d: DataFrame, col: str, p: int, *keep) -> DataFrame:
-    r"""(\*keep, bucket, rho) rows before the max-agg — ONE shared
-    implementation of the bucket/rank pipeline for the scalar and
-    grouped builds (a correction applied to one cannot miss the
-    other)."""
-    p, m, q = _hll_check_p(p)
-    h32 = hash64(F.concat(F.lit("hll|"), F.col(col))).bitwiseAND(
-        F.lit(4294967295)
-    )
-    return (
-        d.select(*keep, h32.alias("_h"))
-        .select(
-            *keep,
-            F.col("_h").bitwiseAND(F.lit(m - 1)).alias("bucket"),
-            F.shiftright(F.col("_h"), p).alias("_w"),
-        )
-        .select(
-            *keep,
-            "bucket",
-            F.least(
-                F.bit_count(
-                    F.col("_w").bitwiseAND(-F.col("_w")) - F.lit(1)
-                )
-                + F.lit(1),
-                F.lit(q),
-            )
-            .cast("int")
-            .alias("rho"),
-        )
-    )
-
-
-def _hll_sum_aggs(p: int) -> tuple:
-    """(count-agg, scaled-register-sum-agg) for one register group."""
-    _, _, q = _hll_check_p(p)
-    cnt = F.count(F.lit(1)).cast("long")
-    sumterm = F.coalesce(
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {q} - rho)")),
-        F.lit(0),
-    ).cast("long")
-    return cnt, sumterm
-
-
 def _hll_est_cols(p: int) -> tuple:
     """(zeros, est) Columns over the (_cnt, _st) aggregate row — the
     three-branch corrected estimate, shared by the scalar and grouped
@@ -905,6 +862,76 @@ def _hll_est_case_sql(m: int, q: int) -> str:
 
 
 
+def _hll_build(d: DataFrame, col: str, p: int, *keys) -> DataFrame:
+    r"""(\*keys, bucket, rho): the register table per key group — the
+    one bucket/rank pipeline behind :func:`hll_build` (``keys=()``)
+    and :func:`hll_build_grouped` (``keys=("g",)``). Rows with a NULL
+    value or key are dropped; then one projection to (bucket, rho) and
+    ONE max hash-agg keyed on (keys, bucket)."""
+    p, m, q = _hll_check_p(p)
+    h32 = hash64(F.concat(F.lit("hll|"), F.col(col))).bitwiseAND(
+        F.lit(4294967295)
+    )
+    rows = (
+        d.filter(_not_null(col, *keys))
+        .select(*keys, h32.alias("_h"))
+        .select(
+            *keys,
+            F.col("_h").bitwiseAND(F.lit(m - 1)).alias("bucket"),
+            F.shiftright(F.col("_h"), p).alias("_w"),
+        )
+        .select(
+            *keys,
+            "bucket",
+            F.least(
+                F.bit_count(
+                    F.col("_w").bitwiseAND(-F.col("_w")) - F.lit(1)
+                )
+                + F.lit(1),
+                F.lit(q),
+            )
+            .cast("int")
+            .alias("rho"),
+        )
+    )
+    return rows.groupBy(*keys, "bucket").agg(F.max("rho").alias("rho"))
+
+
+def _hll_merge(sketches, *keys) -> DataFrame:
+    """Register-wise MAX of register tables built with the same p, per
+    key group — the body of :func:`hll_merge` and
+    :func:`hll_merge_grouped`."""
+    out = sketches[0]
+    for s in sketches[1:]:
+        out = out.unionByName(s)
+    return out.groupBy(*keys, "bucket").agg(F.max("rho").alias("rho"))
+
+
+def _hll_estimate(sketch: DataFrame, p: int, *keys) -> DataFrame:
+    r"""(\*keys, buckets_set, zeros, est): one sketch-sized aggregate per
+    key group — the set-register count and the integer scaled register
+    sum S' = sum(2^(Q - rho)) — then the shared corrected estimate
+    (:func:`_hll_est_cols`). ``keys=()`` is the global aggregate:
+    exactly one row, also for an empty sketch."""
+    _, _, q = _hll_check_p(p)
+    agg = sketch.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("long").alias("_cnt"),
+        F.coalesce(
+            F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {q} - rho)")),
+            F.lit(0),
+        )
+        .cast("long")
+        .alias("_st"),
+    )
+    zeros, est = _hll_est_cols(p)
+    return agg.select(
+        *keys,
+        F.col("_cnt").alias("buckets_set"),
+        zeros.alias("zeros"),
+        est.alias("est"),
+    )
+
+
 def hll_build(d: DataFrame, col: str, p: int = HLL_P) -> DataFrame:
     """(bucket, rho): the HyperLogLog register table of ``col``'s
     distinct values — bucket = low ``p`` bits of the portable hash's
@@ -917,20 +944,14 @@ def hll_build(d: DataFrame, col: str, p: int = HLL_P) -> DataFrame:
     2^p rows regardless of corpus size — the same bounded-shuffle
     discipline as lc_build, good to ~2^32/30 distincts where LC's
     bitmap saturates at ~LC_M."""
-    rows = _hll_register_cols(
-        d.filter(F.col(col).isNotNull()), col, p
-    )
-    return rows.groupBy("bucket").agg(F.max("rho").alias("rho"))
+    return _hll_build(d, col, p)
 
 
 def hll_merge(*sketches: DataFrame) -> DataFrame:
     """MAX together register tables built with the same p: the
     registers of the union of the shards (tested cell-identical) —
     incremental and per-shard parallel builds compose."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("bucket").agg(F.max("rho").alias("rho"))
+    return _hll_merge(sketches)
 
 
 def hll_estimate(sketch: DataFrame, p: int = HLL_P) -> DataFrame:
@@ -944,12 +965,7 @@ def hll_estimate(sketch: DataFrame, p: int = HLL_P) -> DataFrame:
     precedent). A SATURATED sketch (e_raw >= 2^32 — every register
     near max rank) estimates NULL explicitly on both engines, like lc;
     see ``_hll_est_cols``. Plan: one sketch-sized aggregate."""
-    cnt, sumterm = _hll_sum_aggs(p)
-    agg = sketch.agg(cnt.alias("_cnt"), sumterm.alias("_st"))
-    zeros, est = _hll_est_cols(p)
-    return agg.select(
-        F.col("_cnt").alias("buckets_set"), zeros.alias("zeros"), est.alias("est")
-    )
+    return _hll_estimate(sketch, p)
 
 
 def _hll_rho_sql(p: int, q: int) -> str:
@@ -1002,48 +1018,30 @@ def hll_build_grouped(
     """(g, bucket, rho): a HyperLogLog register table PER GROUP in one
     distributed pass — the per-domain form of :func:`hll_build` (a
     crawl dashboard sketches every domain's distinct-URL count at
-    once, never one job per domain). Same register semantics (ONE
-    shared bucket/rank pipeline); mergeable with
-    :func:`hll_merge_grouped`.
+    once, never one job per domain). Same register semantics (the one
+    :func:`_hll_build` body); mergeable with :func:`hll_merge_grouped`.
 
     100 TB shape: ONE max hash-agg keyed on (group, bucket) with
     map-side partials — shuffle rows capped at groups x 2^p, and no
     per-group funneling (the agg key carries the bucket, so a
     mega-group spreads across reducers)."""
-    rows = _hll_register_cols(
-        d.filter(F.col(col).isNotNull() & F.col(group_col).isNotNull())
-        .select(F.col(group_col).alias("g"), F.col(col).alias(col)),
-        col,
-        p,
-        "g",
-    )
-    return rows.groupBy("g", "bucket").agg(F.max("rho").alias("rho"))
+    keyed = d.select(F.col(group_col).alias("g"), F.col(col).alias("_v"))
+    return _hll_build(keyed, "_v", p, "g")
 
 
 def hll_merge_grouped(*sketches: DataFrame) -> DataFrame:
     """MAX together grouped register tables built with the same p —
     per-shard crawl sketches compose into the union's per-group
     registers (tested cell-identical)."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("g", "bucket").agg(F.max("rho").alias("rho"))
+    return _hll_merge(sketches, "g")
 
 
 def hll_estimate_grouped(sketch: DataFrame, p: int = HLL_P) -> DataFrame:
     """(g, buckets_set, zeros, est): the per-group HLL estimate — the
-    scalar :func:`hll_estimate` formula applied group-wise (the SAME
-    shared correction expression, so a fix to one cannot miss the
-    other). Plan: one sketch-sized hash-agg keyed on the group."""
-    cnt, sumterm = _hll_sum_aggs(p)
-    agg = sketch.groupBy("g").agg(cnt.alias("_cnt"), sumterm.alias("_st"))
-    zeros, est = _hll_est_cols(p)
-    return agg.select(
-        "g",
-        F.col("_cnt").alias("buckets_set"),
-        zeros.alias("zeros"),
-        est.alias("est"),
-    )
+    scalar :func:`hll_estimate` body keyed on the group, so a fix to
+    one cannot miss the other. Plan: one sketch-sized hash-agg keyed
+    on the group."""
+    return _hll_estimate(sketch, p, "g")
 
 
 def hll_grouped_registers_sql(

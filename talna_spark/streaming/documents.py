@@ -106,7 +106,6 @@ def dedup_against_reference_bloom(
     doc_stream: DataFrame,
     reference: DataFrame,
     bloom_words: list[int],
-    m: int | None = None,
     k: int | None = None,
 ) -> DataFrame:
     """:func:`dedup_against_reference` with a Bloom fast path — the
@@ -118,19 +117,15 @@ def dedup_against_reference_bloom(
     row-identical to the plain variant (tested). ``bloom_words`` is the
     collected bitmap (pipeline.dedup.bloom_build -> bloom_to_words),
     built once per reference refresh OUTSIDE the stream — the sketch is
-    a broadcast constant, so the gate stays stateless.
+    a broadcast constant, so the gate stays stateless; its size m is
+    64 x len(``bloom_words``).
 
     NULL-text docs pass (md5(NULL) never equals a reference hash —
     matching the anti-join's NULL-key behavior)."""
-    from talna_spark.pipeline.dedup import (
-        BLOOM_BITS,
-        BLOOM_K,
-        bloom_might_contain,
-    )
+    from talna_spark.pipeline.dedup import BLOOM_K, bloom_might_contain
 
-    m = BLOOM_BITS if m is None else int(m)
     k = BLOOM_K if k is None else int(k)
-    might = bloom_might_contain(F.md5("text"), bloom_words, m, k)
+    might = bloom_might_contain(F.md5("text"), bloom_words, k)
     definite_new = doc_stream.filter(F.coalesce(~might, F.lit(True)))
     candidates = doc_stream.filter(F.coalesce(might, F.lit(False)))
     return definite_new.unionByName(

@@ -129,6 +129,27 @@ def test_bloom_saturation_guard(spark):
     assert bloom_fp_estimate(ok, 1 << 16) < 0.01
 
 
+def test_dedup_against_frames_shares_the_saturation_guard(spark):
+    """dedup_against_frames takes its exact leg from
+    exact_dedup_against_bloom, so a saturated prebuilt bitmap raises
+    the same ValueError there too."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from talna_spark.pipeline.dedup import bloom_build, dedup_against_frames
+
+    ref = spark.range(5000).select(
+        F.concat(F.lit("ref"), F.col("id")).alias("text"),
+        F.col("id").alias("doc_id"),
+    )
+    new = spark.createDataFrame(
+        [(1, "ref7"), (2, "fresh text")], "doc_id long, text string"
+    )
+    tiny = bloom_build(ref.select(F.md5("text").alias("_h")), "_h", m=64)
+    with pytest.raises(ValueError, match="saturated"):
+        dedup_against_frames(new, ref, bloom_bm=tiny, m=64)
+
+
 def test_exact_dedup_catches_the_flood(spark, flood_dir):
     from talna_spark.pipeline.dedup import exact_survivors
 
@@ -617,10 +638,11 @@ def test_bloom_bitmap_cross_engine_and_properties(spark, tmp_path):
         r["doc_id"]
         for r in bloom_prefilter(probe, "v", bm).collect()
     }
+    # a 2^17-bit bitmap (2048 words) takes the join path
     join_pass = {
         r["doc_id"]
         for r in bloom_prefilter(
-            probe, "v", bm, literal_max_words=0
+            probe, "v", bloom_build(d, "v", m=1 << 17), m=1 << 17
         ).collect()
     }
     assert lit_pass == join_pass
@@ -645,6 +667,13 @@ def test_dedup_against_bloom_prefilter_identical(spark):
     from talna_spark.pipeline.dedup import dedup_against_frames
     from talna_spark.pipeline.scan import read_documents
 
+    from talna_spark.pipeline.dedup import bloom_build
+
+    def bitmap(ref):
+        return bloom_build(
+            ref.select(F.md5("text").alias("_h")), "_h", m=1 << 16
+        )
+
     d = read_documents(spark, "/root/testdata/sf0.001", "doc_id", "text")
     new_d = d.filter(F.col("doc_id") % 3 != 0)
     ref_d = d.filter(F.col("doc_id") % 3 == 0)
@@ -654,22 +683,20 @@ def test_dedup_against_bloom_prefilter_identical(spark):
     bloomed = sorted(
         map(
             tuple,
-            dedup_against_frames(new_d, ref_d, bloom_bits=1 << 16).collect(),
+            dedup_against_frames(
+                new_d, ref_d, bloom_bm=bitmap(ref_d), m=1 << 16
+            ).collect(),
         )
     )
     assert plain == bloomed and plain
-    # r13: a PREBUILT bitmap (the amortized per-batch path) must give
-    # the same verdicts as building inline
-    from talna_spark.pipeline.dedup import bloom_build
-
-    bm = bloom_build(
-        ref_d.select(F.md5("text").alias("_h")), "_h", m=1 << 16
-    ).localCheckpoint()
+    # r13: a checkpointed bitmap (the amortized per-batch path) must
+    # give the same verdicts
+    bm = bitmap(ref_d).localCheckpoint()
     prebuilt = sorted(
         map(
             tuple,
             dedup_against_frames(
-                new_d, ref_d, bloom_bits=1 << 16, bloom_bm=bm
+                new_d, ref_d, bloom_bm=bm, m=1 << 16
             ).collect(),
         )
     )
@@ -701,7 +728,7 @@ def test_dedup_against_bloom_prefilter_identical(spark):
     got = {
         r["doc_id"]: r["verdict"]
         for r in dedup_against_frames(
-            new2, ref2, bloom_bits=1 << 16
+            new2, ref2, bloom_bm=bitmap(ref2), m=1 << 16
         ).collect()
     }
     assert got[1] == "exact_dup" and got[2] == "new"
@@ -715,7 +742,7 @@ def test_dedup_against_bloom_prefilter_identical(spark):
     got3 = {
         r["doc_id"]: r["verdict"]
         for r in dedup_against_frames(
-            new2, ref3, bloom_bits=1 << 16
+            new2, ref3, bloom_bm=bitmap(ref3), m=1 << 16
         ).collect()
     }
     assert got3[1] == "exact_dup" and got3[2] == "new"

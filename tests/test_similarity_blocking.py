@@ -1093,10 +1093,14 @@ def test_bloom_prefilter_join_path_duplicate_rows(spark):
     lit = sorted(
         map(tuple, bloom_prefilter(probe, "v", bm).collect())
     )
+    # a 2^17-bit bitmap (2048 words) takes the join path
+    bm17 = bloom_build(
+        spark.createDataFrame([("x",), ("z",)], "v string"), "v", m=1 << 17
+    )
     jn = sorted(
         map(
             tuple,
-            bloom_prefilter(probe, "v", bm, literal_max_words=0).collect(),
+            bloom_prefilter(probe, "v", bm17, m=1 << 17).collect(),
         )
     )
     assert lit == jn

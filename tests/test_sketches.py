@@ -346,6 +346,68 @@ def test_bk_containment_exact_truncated_and_cross_engine(spark):
     assert tuple(row2) == tuple(want)
 
 
+def test_bk_estimates_round_half_away_like_the_twin(spark):
+    """5 common of 128 is 0.0390625, a tie at 6 dp: both estimators
+    must round it half away from zero (0.039063) exactly as the DuckDB
+    twins do, and two empty sketches give (0, 0, NULL) — one row, no
+    divide-by-zero."""
+    from talna_spark.pipeline.sketches import (
+        bk_containment, bk_containment_sql,
+    )
+
+    def tables(A, B):
+        con = duckdb.connect()
+        for name, vals in (("ta", A), ("tb", B)):
+            con.execute(f"CREATE TABLE {name} (v VARCHAR)")
+            con.executemany(
+                f"INSERT INTO {name} VALUES (?)", [(v,) for v in vals]
+            )
+        sk = [
+            bk_build(spark.createDataFrame([(v,) for v in vals], "v string"),
+                     "v", k=256)
+            for vals in (A, B)
+        ]
+        return con, sk
+
+    # |A u B| = 128 with 5 shared values
+    A = [f"a{i}" for i in range(60)] + [f"c{i}" for i in range(5)]
+    B = [f"b{i}" for i in range(63)] + [f"c{i}" for i in range(5)]
+    con, (sa, sb) = tables(A, B)
+    got = tuple(bk_resemblance(sa, sb, k=256).collect()[0])
+    want = con.execute(
+        bk_resemblance_sql("SELECT v FROM ta", "SELECT v FROM tb", k=256)
+    ).fetchall()[0]
+    assert got == tuple(want) == (128, 5, 0.039063)
+
+    # n_a_k = 128 with 5 common
+    A2 = [f"a{i}" for i in range(128)]
+    B2 = [f"a{i}" for i in range(5)]
+    con2, (sa2, sb2) = tables(A2, B2)
+    got2 = tuple(bk_containment(sa2, sb2, k=256).collect()[0])
+    want2 = con2.execute(
+        bk_containment_sql("SELECT v FROM ta", "SELECT v FROM tb", k=256)
+    ).fetchall()[0]
+    assert got2 == tuple(want2) == (128, 5, 0.039063)
+
+    empty = bk_build(spark.createDataFrame([], "v string"), "v", k=256)
+    for fn in (bk_resemblance, bk_containment):
+        assert [tuple(r) for r in fn(empty, empty, k=256).collect()] == [
+            (0, 0, None)
+        ]
+
+    # the estimators are lazy columns: building them starts no job
+    sc = spark.sparkContext
+    sc.setJobGroup("bk-lazy", "bk estimator build")
+    try:
+        bk_resemblance(sa, sb, k=256)
+        bk_containment(sa, sb, k=256)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("bk-lazy")) == []
+
+
 def test_bk_grouped_matches_ungrouped_and_cross_engine(spark):
     """Grouped bottom-k: each group's sketch equals the UNgrouped sketch
     of that group's values (the two-phase top-k must not change

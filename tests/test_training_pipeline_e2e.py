@@ -151,7 +151,7 @@ def test_r11_stack_bloom_dedup_wordpiece_pack_shard(spark, tmp_path):
     import glob
     import json
 
-    from talna_spark.pipeline.dedup import dedup_against_frames
+    from talna_spark.pipeline.dedup import bloom_build, dedup_against_frames
     from talna_spark.pipeline.packing import pack_assign_lengths
     from talna_spark.pipeline.wordpiece import (
         wordpiece_encode_ids,
@@ -169,7 +169,8 @@ def test_r11_stack_bloom_dedup_wordpiece_pack_shard(spark, tmp_path):
     new = docs.filter(F.col("doc_id") % 4 != 0)
 
     # 1. bloom-prefiltered incremental dedup: keep only genuinely-new
-    flags = dedup_against_frames(new, ref, bloom_bits=1 << 16)
+    bm = bloom_build(ref.select(F.md5("text").alias("_h")), "_h", m=1 << 16)
+    flags = dedup_against_frames(new, ref, bloom_bm=bm, m=1 << 16)
     kept = flags.filter(F.col("verdict") == "new").select("doc_id")
     n_kept = kept.count()
     assert 0 < n_kept <= new.count()
@@ -319,7 +320,7 @@ def test_r13_stack_incremental_crawls_prebuilt_bloom(spark):
         return fresh.unionByName(copies)
 
     c1 = crawl(1, ref, 1_000_000).localCheckpoint()
-    v1 = dedup_against_frames(c1, ref, bloom_bits=M, bloom_bm=bm)
+    v1 = dedup_against_frames(c1, ref, bloom_bm=bm, m=M)
     got1 = {r["doc_id"]: r["verdict"] for r in v1.collect()}
     plain1 = {
         r["doc_id"]: r["verdict"]
@@ -345,7 +346,7 @@ def test_r13_stack_incremental_crawls_prebuilt_bloom(spark):
 
     # crawl 2 copies CRAWL-1 docs — only the UPDATED bitmap+ref see them
     c2 = crawl(2, keep1, 2_000_000).localCheckpoint()
-    v2 = dedup_against_frames(c2, ref2, bloom_bits=M, bloom_bm=bm2)
+    v2 = dedup_against_frames(c2, ref2, bloom_bm=bm2, m=M)
     got2 = {r["doc_id"]: r["verdict"] for r in v2.collect()}
     plain2 = {
         r["doc_id"]: r["verdict"]
